@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   *
   * Semantics preserved exactly:
   *  - per key keep only max-event-time rows (SURVEY.md §2.2); with a
-  *    precombine key configured, ties break deterministically on it, else the
-  *    reference's keep-both behavior stands and a key-uniqueness assert plays
-  *    the role of Iceberg/Delta's multiple-source-match MERGE error;
+  *    precombine key configured (or `tieBreak` columns passed), ties break
+  *    deterministically on it, else the reference's keep-both behavior
+  *    stands and a key-uniqueness assert plays the role of Iceberg/Delta's
+  *    multiple-source-match MERGE error;
   *  - route by final Op: I → insert path, U/D → update/delete path, union,
   *    stamp the `last_applied_date` audit column
   *    (reference: src/hudi/hudi-cdc-load.py:93-95 — the merged target KEEPS
@@ -68,8 +69,10 @@ object CdcPipeline {
       val counts = CdcDedup.opCounts(finalInput, opCol)
       // Upserts first, then deletes — reference statement order.
       val upserts = finalInput.filter(col(opCol) =!= "D").drop(opCol)
-      val v1 = table.upsert(upserts,
-        assertUniqueKeys = cfg.precombineKey.isEmpty)
+      // the strict dedup (a precombine key or tie-break set) leaves one
+      // row per key by construction; only the keep-ties dedup can leave
+      // duplicates for the assert to catch
+      val v1 = table.upsert(upserts, assertUniqueKeys = pcs.isEmpty)
       val dels = finalInput.filter(col(opCol) === "D")
         .select(cfg.primaryKey.map(col): _*)
       val v2 = table.delete(dels)

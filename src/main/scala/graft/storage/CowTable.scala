@@ -202,6 +202,12 @@ final case class CommitManifest(
   def physicalName(logical: String): String =
     columnMapping.getOrElse(logical, logical)
 
+  /** Declared type per PHYSICAL column name — the name data files and
+    * hive path segments store a column under. */
+  def physicalTypes: Map[String, DataType] =
+    CowTable.structFromJson(schemaJson).fields
+      .map(f => physicalName(f.name) -> f.dataType).toMap
+
   /** Complete physical-name history: the stored fence plus (for pre-mapping
     * manifests, where the fence is empty) every live column's physical name. */
   def effectiveUsedPhysical: Seq[String] =
@@ -680,8 +686,11 @@ final class CowTable private[storage] (
     * 1 GB). An entry carries exactly ONE sidecar, so re-deleting from an
     * already-vectored file folds its old positions into the new sidecar.
     * CDF tombstones are materialized here from the matched PREIMAGE rows
-    * (config fence: deletionVectors requires changeDataFeed). Commits race
-    * via the manifest CAS loudly — no rebase for in-place entry changes. */
+    * (config fence: deletionVectors requires changeDataFeed). One
+    * per-file count over the checkpointed matches both detects a no-match
+    * batch and hands [[writeFoldedSidecar]] each file's new marks. Commits
+    * race via the manifest CAS loudly — no rebase for in-place entry
+    * changes. */
   private def deleteWithVectors(
       m: CommitManifest, parent: Int, touched: Seq[FileEntry],
       untouched: Seq[FileEntry], deleteKeys: DataFrame): Int = {
@@ -692,8 +701,9 @@ final class CowTable private[storage] (
     val matches = withPos.join(dKeys, config.primaryKey, "left_semi")
       .localCheckpoint()
     val newPos = matches.select(col("__rel").as("path"), col("__pos").as("pos"))
-    if (matches.isEmpty) return parent // range-prune false positives only
-    val updated = writeFoldedSidecar(v, touched, newPos)
+    val marks = marksPerFile(newPos)
+    if (marks.isEmpty) return parent // range-prune false positives only
+    val updated = writeFoldedSidecar(v, touched, newPos, marks)
     val cdc = writeCdc(
       matches.drop("__rel", "__pos").withColumn("_change_type", lit("delete")),
       v, m.columnMapping)
@@ -720,9 +730,12 @@ final class CowTable private[storage] (
     * is fenced to precombine-free tables and exact-schema batches (both
     * fall back to the COW rewrite, same results). The appended file is
     * unclustered until the next OPTIMIZE — the standard MOR trade. CDF
-    * materializes the same insert/update_pre/postimage rows as COW.
-    * Commits race via the manifest CAS loudly (in-place entry changes
-    * cannot rebase — a rebased carry would drop the updated entries). */
+    * materializes the same insert/update_pre/postimage rows as COW. One
+    * per-file count over the checkpointed matches both detects a
+    * pure-insert batch and hands [[writeFoldedSidecar]] each file's new
+    * marks. Commits race via the manifest CAS loudly (in-place entry
+    * changes cannot rebase — a rebased carry would drop the updated
+    * entries). */
   private def morUpsert(
       m: CommitManifest, parent: Int, touched: Seq[FileEntry],
       untouched: Seq[FileEntry], source0: DataFrame): Int = {
@@ -735,9 +748,10 @@ final class CowTable private[storage] (
     val matched = withPos.join(sKeys, config.primaryKey, "left_semi")
       .localCheckpoint()
     val newPos = matched.select(col("__rel").as("path"), col("__pos").as("pos"))
+    val marks = marksPerFile(newPos)
     val updated =
-      if (matched.isEmpty) touched // pure-insert batch: entries unchanged
-      else writeFoldedSidecar(v, touched, newPos)
+      if (marks.isEmpty) touched // pure-insert batch: entries unchanged
+      else writeFoldedSidecar(v, touched, newPos, marks)
     // insert-vs-update classification in ONE left join against the matched
     // key set (was an anti join + a semi join — same membership probed
     // twice); a source key with no matched target row is an insert
@@ -779,25 +793,29 @@ final class CowTable private[storage] (
     val m = manifest(parent)
     val schema = structFromJson(m.schemaJson)
     val v = parent + 1
+    // distinct: a MERGE whose only matched clause is an unconditional
+    // DELETE runs without Spark's cardinality check, so a target row two
+    // source rows match is marked twice
     def loadPos(fs: Seq[String]): Option[DataFrame] =
       if (fs.isEmpty) None
       else Some(spark.read.schema(CowTable.dvSchema) // fixed transport schema
         .parquet(fs.map(p => root.resolve(p).toString): _*)
-        .select(col("path"), col("pos")))
+        .select(col("path"), col("pos")).distinct())
     val updPosDf = loadPos(updPosFiles)
     val delPosDf = loadPos(delPosFiles)
     val posDf: Option[DataFrame] = (updPosDf, delPosDf) match {
       case (Some(a), Some(b)) => Some(a.unionAll(b))
       case (a, b) => a.orElse(b)
     }
-    // touched file set: distinct paths of the marks — bounded by file count
-    val touchedPaths: Set[String] = posDf.fold(Set.empty[String])(
-      _.select("path").distinct().collect().map(_.getString(0)).toSet)
-    if (touchedPaths.isEmpty && insertFiles.isEmpty && updateFiles.isEmpty)
+    // new marks per file — the touched set, bounded by file count (update
+    // and delete marks are disjoint, see the preimage scan below)
+    val marks = posDf.fold(Map.empty[String, Long])(marksPerFile)
+    if (marks.isEmpty && insertFiles.isEmpty && updateFiles.isEmpty)
       return parent // nothing matched, nothing written: no empty commit
-    val (touched, untouched) = m.files.partition(e => touchedPaths(e.path))
+    val (touched, untouched) = m.files.partition(e => marks.contains(e.path))
     val updatedEntries = posDf match {
-      case Some(df) if touched.nonEmpty => writeFoldedSidecar(v, touched, df)
+      case Some(df) if touched.nonEmpty =>
+        writeFoldedSidecar(v, touched, df, marks)
       case _ => touched
     }
     val freshIns = statListedFiles(insertFiles, schema, m.columnMapping)
@@ -861,33 +879,42 @@ final class CowTable private[storage] (
     * rows FOLDED with the prior positions of every touched file (an entry
     * points at exactly ONE sidecar), and return the touched entries with
     * updated refs/counts. Sidecar dir is writer-unique — a losing CAS
-    * leaves an inert orphan, same as data files. */
+    * leaves an inert orphan, same as data files.
+    *
+    * `newMarks` is the caller's per-file count of `newPos` (the count it
+    * already took to find the touched files): each entry's `dvRows`
+    * becomes its old `dvRows` plus its new marks. The sum is exact, with
+    * no read-back of the written sidecar, because the new positions are
+    * distinct and were read with existing vectors subtracted — disjoint
+    * from the old ones. */
   private def writeFoldedSidecar(
-      v: Int, touched: Seq[FileEntry], newPos: DataFrame): Seq[FileEntry] = {
-    val oldPos = touched.filter(_.dvPath.isDefined) match {
-      case Seq() => None
-      case withDv =>
-        val paths = withDv.map(_.path)
-        Some(withDv.map(_.dvPath.get).distinct
-          .map(p => spark.read.schema(CowTable.dvSchema)
-            .parquet(root.resolve(p).toString))
-          .reduce(_ unionByName _)
-          .filter(col("path").isin(paths: _*))
-          .select(col("path"), col("pos")))
-    }
-    val all = (Seq(newPos) ++ oldPos).reduce(_ unionByName _).distinct()
+      v: Int, touched: Seq[FileEntry], newPos: DataFrame,
+      newMarks: Map[String, Long]): Seq[FileEntry] = {
+    // each old sidecar contributes only the files that still point at it:
+    // a file re-marked since then carries its positions in a newer sidecar
+    val oldPos = touched.filter(_.dvPath.isDefined).groupBy(_.dvPath.get)
+      .toSeq.sortBy(_._1).map { case (dvp, es) =>
+        spark.read.schema(CowTable.dvSchema)
+          .parquet(root.resolve(dvp).toString)
+          .filter(col("path").isin(es.map(_.path): _*))
+          .select(col("path"), col("pos"))
+      }
+    val all = (newPos +: oldPos).reduce(_ unionByName _)
     val dvDirRel = f"v$v%05d-" + java.util.UUID.randomUUID
       .toString.replace("-", "").substring(0, 8) + "/dv"
     all.coalesce(1).write.parquet(root.resolve(dvDirRel).toString)
-    val counts = spark.read.schema(CowTable.dvSchema)
-      .parquet(root.resolve(dvDirRel).toString)
-      .groupBy("path").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    touched.map(e => counts.get(e.path) match {
-      case Some(n) => e.copy(dvPath = Some(dvDirRel), dvRows = n)
-      case None => e
-    })
+    touched.map { e =>
+      val n = newMarks.getOrElse(e.path, 0L)
+      if (n == 0 && e.dvPath.isEmpty) e
+      else e.copy(dvPath = Some(dvDirRel), dvRows = e.dvRows + n)
+    }
   }
+
+  /** Marked positions per root-relative file path of a (path, pos) frame —
+    * one aggregate job, bounded by the number of touched files. */
+  private def marksPerFile(pos: DataFrame): Map[String, Long] =
+    pos.groupBy("path").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** METADATA-ONLY DELETE: publish a new version whose manifest simply
     * DROPS `dropPaths`' entries — zero data read, zero data written, one
@@ -1462,7 +1489,7 @@ final class CowTable private[storage] (
         // schema at toVersion (evolved-in columns null-fill). Change dirs
         // are write-once like version segments — schema memo applies.
         val cdc = readSegGroup(m.cdcDir.get,
-          Seq(root.resolve(m.cdcDir.get).toString))
+          Seq(root.resolve(m.cdcDir.get).toString), mTo.physicalTypes)
         val cdfGen = mTo.partitionSpec.map(PartitionTransform.parse)
         val cols = schema.fields.toSeq.map { f =>
           val p = mTo.physicalName(f.name) // change files store physical names
@@ -2496,37 +2523,43 @@ final class CowTable private[storage] (
   private def inferenceBase(p: String): String =
     p.split('/').dropRight(1).takeWhile(!_.contains('=')).mkString("/")
 
-  /** `spark.read.parquet` over one inference-base group with the group's
-    * schema memoized ([[CowTable.segSchemaCache]]): every schema-less
-    * parquet read costs a 1-task footer-inference job (~40-100 ms with
-    * scheduling) on the driver's critical path, and lifecycle statements
-    * re-read the same immutable version segments several times (merge
-    * target, CDC preimages, constraint checks). A version segment is
-    * written exactly once under a writer-unique UUID name, so its files'
-    * schema can never change — the memo is pure metadata reuse, the data
-    * itself is re-read from parquet on every call. */
-  private def readSegGroup(base: String, paths: Seq[String]): DataFrame = {
+  /** `spark.read.parquet` over one inference-base group, with an explicit
+    * schema: the group's DATA-FILE schema memoized per base
+    * ([[CowTable.segSchemaCache]]) plus each hive column named in `paths`
+    * typed by `declared` (physical name → manifest type).
+    *
+    * The memo saves a 1-task footer-inference job (~40-100 ms with
+    * scheduling) per read on the driver's critical path; a merge re-reads
+    * the same immutable version segments several times (merge target, CDC
+    * preimages, constraint checks). A version segment is written exactly
+    * once under a writer-unique UUID name, so its files' schema can never
+    * change — the memo is pure metadata reuse, the data itself is re-read
+    * from parquet on every call. Hive path columns are not in the memo:
+    * their values live in the paths, and they take the declared type, the
+    * same typing the DSv2 scan applies through [[CowTable.pathPartValue]].
+    * Spark's value-set inference would type a subset's values by what they
+    * look like (`p=007` alone reads as int 7, cast back to "7"). Only a path
+    * column with no declared type (e.g. a dropped old partition key) is
+    * still inferred. */
+  private def readSegGroup(base: String, paths: Seq[String],
+      declared: Map[String, DataType]): DataFrame = {
     val baseAbs = root.resolve(base).toString
     val rdr = spark.read.option("basePath", baseAbs)
-    // hive-partitioned groups keep full inference: the partition column's
-    // inferred TYPE depends on the value set of the subset being read
-    // (e.g. "1" alone infers int, "1x" forces string) — replaying a
-    // cached type onto a different subset could reparse values differently
-    val hive = paths.exists(_.substring(baseAbs.length).contains('='))
-    val cached = if (hive) null else CowTable.segSchemaCache.get(baseAbs)
-    if (cached != null) rdr.schema(cached).parquet(paths: _*)
-    else {
-      val df = rdr.parquet(paths: _*)
-      if (!hive) {
-        if (CowTable.segSchemaCache.size > 8192)
-          CowTable.segSchemaCache.clear()
-        CowTable.segSchemaCache.put(baseAbs, df.schema)
-      }
-      df
+    val hiveCols = paths.flatMap(_.substring(baseAbs.length).split('/')
+      .dropRight(1).filter(_.contains('=')).map(s => s.take(s.indexOf('='))))
+      .distinct
+    val data = Option(CowTable.segSchemaCache.get(baseAbs)).getOrElse {
+      val inferred = StructType(rdr.parquet(paths: _*).schema.fields
+        .filterNot(f => hiveCols.contains(f.name)))
+      CowTable.prefillSegSchema(baseAbs, inferred)
+      inferred
     }
+    val typed = hiveCols.flatMap(c => declared.get(c).map(StructField(c, _)))
+    rdr.schema(StructType(data.fields ++ typed)).parquet(paths: _*)
   }
 
-  private def readFiles(m: CommitManifest, files: Seq[FileEntry]): DataFrame = {
+  private[storage] def readFiles(
+      m: CommitManifest, files: Seq[FileEntry]): DataFrame = {
     val schema = structFromJson(m.schemaJson)
     // the current generated partition column, derivable for old-era files
     // that predate the spec (partition-spec evolution)
@@ -2534,11 +2567,12 @@ final class CowTable private[storage] (
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     else {
+      val declared = m.physicalTypes
       val (dvFiles, plain) = files.partition(_.dvPath.isDefined)
       val plainParts = plain.groupBy(e => inferenceBase(e.path))
         .toSeq.sortBy(_._1).map { case (base, fs) =>
           val df = readSegGroup(base,
-            fs.map(f => root.resolve(f.path).toString))
+            fs.map(f => root.resolve(f.path).toString), declared)
           conform(df, schema, m.columnMapping, genFill)
         }
       // DELETION-VECTOR files: subtract marked positions before conform.
@@ -2550,7 +2584,7 @@ final class CowTable private[storage] (
         .groupBy(e => (inferenceBase(e.path), e.dvPath.get))
         .toSeq.sortBy(_._1).map { case ((base, dvp), fs) =>
           val raw = readSegGroup(base,
-            fs.map(f => root.resolve(f.path).toString))
+            fs.map(f => root.resolve(f.path).toString), declared)
           val dv = spark.read.schema(CowTable.dvSchema)
             .parquet(root.resolve(dvp).toString)
             .select(col("path").as("__dv_path"), col("pos").as("__dv_pos"))
@@ -2572,7 +2606,7 @@ final class CowTable private[storage] (
     * file path) and `__pos` (parquet row index) — with existing deletion
     * vectors already subtracted (a re-delete never re-marks a position).
     * The input side of a DV delete. */
-  private def readFilesWithPositions(
+  private[storage] def readFilesWithPositions(
       m: CommitManifest, files: Seq[FileEntry]): DataFrame = {
     val schema = structFromJson(m.schemaJson)
     // Empty touched set (pruneFiles can return Some((Nil, all)) when no
@@ -2584,10 +2618,11 @@ final class CowTable private[storage] (
         StructType(schema.fields :+ StructField("__rel", StringType) :+
           StructField("__pos", LongType)))
     val rootAbs = root.toString
+    val declared = m.physicalTypes
     files.groupBy(e => (inferenceBase(e.path), e.dvPath))
       .toSeq.sortBy(_._1).map { case ((base, dvp), fs) =>
         val raw = readSegGroup(base,
-          fs.map(f => root.resolve(f.path).toString))
+          fs.map(f => root.resolve(f.path).toString), declared)
           .withColumn("__rel",
             expr(s"substring(regexp_replace(_metadata.file_path, " +
               s"'^file:', ''), ${rootAbs.length + 2})"))
@@ -2622,7 +2657,7 @@ final class CowTable private[storage] (
     * LOGICAL field through the column mapping to the PHYSICAL name files
     * store; absent columns become typed nulls (both columns the file
     * predates and physical slots of dropped predecessors vanish here —
-    * inferred hive-partition types are cast back too). */
+    * hive path columns already arrive in their declared types). */
   private def conform(df: DataFrame, schema: StructType,
       mapping: Map[String, String] = Map.empty,
       genFill: Option[PartitionTransform] = None): DataFrame = {
@@ -2746,11 +2781,11 @@ final class CowTable private[storage] (
     withStatFriendlyTimestamps { sized.parquet(verDir.toString) }
     // prefill the segment-schema memo (readSegGroup): the writer KNOWS the
     // files' schema — the first read of this fresh segment should not pay
-    // a footer-inference job. Hive-partitioned layouts stay inference-only
-    // (the memo is guarded off for them; partitionBy also drops the key
-    // column from the file bytes, so the frame schema would be wrong).
-    if (config.partitionKey.isEmpty)
-      CowTable.prefillSegSchema(verDir.toString, physDf.schema)
+    // a footer-inference job. partitionBy moves the key column out of the
+    // file bytes into the paths, so a hive layout's files hold the frame's
+    // other columns.
+    CowTable.prefillSegSchema(verDir.toString, StructType(physDf.schema
+      .fields.filterNot(f => config.partitionKey.contains(f.name))))
     val fresh0 = statFiles(verDir, schema, mapping)
     val fresh = fileTag.fold(fresh0)(t =>
       fresh0.map(_.copy(zorderBy = Some(t))))
@@ -3638,15 +3673,19 @@ object CowTable {
   implicit private[storage] val formats: Formats =
     Serialization.formats(NoTypeHints)
 
-  /** Inferred file schema per absolute inference-base path (see
-    * [[CowTable.readSegGroup]]). Version segments are written exactly once
-    * under writer-unique UUID names, so an entry can never go stale; JVM-
-    * global is safe for the same reason (metadata of immutable files). */
+  /** Data-file schema per absolute inference-base path (see
+    * [[CowTable.readSegGroup]]): the columns the parquet files store, never
+    * the hive path columns, which take their declared types at read time.
+    * Version segments are written exactly once under writer-unique UUID
+    * names, so an entry can never go stale; JVM-global is safe for the same
+    * reason (metadata of immutable files). */
   private val segSchemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-  /** Write-side prefill of [[segSchemaCache]]: parquet read-back relaxes
-    * nullability, so store the frame's fields as nullable. */
+  /** Put a segment's data-file schema into [[segSchemaCache]]: from the
+    * writer's frame (writeVersion, change dirs), or from the first footer
+    * inference of a segment another writer produced. Parquet read-back
+    * relaxes nullability, so the fields are stored as nullable. */
   private[storage] def prefillSegSchema(
       baseAbs: String, written: StructType): Unit = {
     if (segSchemaCache.size > 8192) segSchemaCache.clear()

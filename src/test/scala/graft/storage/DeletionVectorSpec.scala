@@ -547,4 +547,98 @@ class DeletionVectorSpec extends SparkSpec {
     assert(t.manifest(t.currentVersion).files.exists(_.dvPath.isDefined))
     assert(sess.table("lake.default.dvt").count() == 1)
   }
+  /** Every vectored entry's `dvRows` equals its path's positions in its
+    * sidecar, and no sidecar holds a (path, pos) twice — what lets a commit
+    * derive `dvRows` as old count + new marks without reading back. */
+  private def assertDvCountsExact(t: CowTable, after: String): Unit = {
+    val m = t.manifest(t.currentVersion)
+    assert(m.files.forall(e => e.dvPath.isDefined || e.dvRows == 0), after)
+    m.files.filter(_.dvPath.isDefined).groupBy(_.dvPath.get).foreach {
+      case (dvp, es) =>
+        val marks = spark.read.parquet(t.root.resolve(dvp).toString)
+          .select("path", "pos").as[(String, Long)].collect()
+        assert(marks.length == marks.distinct.length,
+          s"$after: duplicate positions in $dvp")
+        val perPath = marks.groupBy(_._1).map { case (p, ps) =>
+          p -> ps.length.toLong }
+        es.foreach(e => assert(perPath.getOrElse(e.path, 0L) == e.dvRows,
+          s"$after: ${e.path} dvRows=${e.dvRows} vs sidecar " +
+            perPath.getOrElse(e.path, 0L)))
+    }
+  }
+
+  test("dvRows equals the sidecar's positions per file across API and SQL " +
+    "rounds on a partitioned table") {
+    val lake = tmpDir("dvcount")
+    val sess = spark.newSession()
+    sess.conf.set("spark.sql.catalog.lake", "graft.sources.GraftCatalog")
+    sess.conf.set("spark.sql.catalog.lake.warehouse", lake)
+    sess.sql("CREATE TABLE lake.default.p (id BIGINT, cat STRING, v DOUBLE)" +
+      " PARTITIONED BY (cat) TBLPROPERTIES (primaryKey 'id', " +
+      "changeDataFeed 'true', deletionVectors 'true')")
+    sess.sql("INSERT INTO lake.default.p " +
+      "SELECT id, concat('c', id % 3), id * 1.0 FROM range(1, 61)")
+    val t = LakeRegistry.open(spark, lake, "p")
+    def batch(ids: Long*) =
+      ids.map(i => (i, s"c${i % 3}", -i.toDouble)).toDF("id", "cat", "v")
+    def step(name: String)(op: => Unit): Unit = {
+      op
+      assertDvCountsExact(t, name)
+    }
+    var live = (1L to 60L).toSet
+    def checkRound(round: Int): Unit = {
+      val m = t.manifest(t.currentVersion)
+      val ids = sess.table("lake.default.p").select("id").as[Long]
+        .collect().toSet
+      assert(ids == live, s"round $round")
+      assert(m.files.map(_.liveRows).sum == live.size, s"round $round")
+    }
+    // round 1: first vectors on the inserted files
+    step("api delete 1") { t.delete(Seq(3L, 6L).toDF("id")) }
+    step("api upsert 1") { t.upsert(batch(4L, 61L)) }
+    step("sql delete 1") {
+      sess.sql("DELETE FROM lake.default.p WHERE id IN (9, 10)")
+    }
+    step("sql merge 1") {
+      sess.sql("""MERGE INTO lake.default.p t USING (SELECT * FROM VALUES
+        |  (11L, 'c2', 111.0, 'U'), (12L, 'c0', 0.0, 'D'),
+        |  (62L, 'c2', 62.0, 'I') AS s(id, cat, v, op)) s ON t.id = s.id
+        |WHEN MATCHED AND s.op = 'D' THEN DELETE
+        |WHEN MATCHED THEN UPDATE SET t.v = s.v
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    }
+    live = live -- Set(3L, 6L, 9L, 10L, 12L) ++ Set(61L, 62L)
+    checkRound(1)
+    // round 2: the same (already vectored) files, plus rows round 1 moved
+    // into appended files
+    step("api delete 2") { t.delete(Seq(15L, 4L).toDF("id")) }
+    step("api upsert 2") { t.upsert(batch(16L, 11L)) }
+    step("sql delete 2") {
+      sess.sql("DELETE FROM lake.default.p WHERE id IN (18, 61)")
+    }
+    step("sql update 2") {
+      sess.sql("UPDATE lake.default.p SET v = -1.0 WHERE id IN (19, 20)")
+    }
+    live = live -- Set(15L, 4L, 18L, 61L)
+    checkRound(2)
+    // round 3: a delete-only MERGE whose source matches one row twice
+    step("sql merge 3") {
+      sess.sql("""MERGE INTO lake.default.p t USING (SELECT * FROM VALUES
+        |  (21L), (21L), (22L) AS s(id)) s ON t.id = s.id
+        |WHEN MATCHED THEN DELETE""".stripMargin)
+    }
+    step("api delete 3") { t.delete(Seq(24L, 25L).toDF("id")) }
+    step("api upsert 3") { t.upsert(batch(26L, 19L)) }
+    step("sql merge 3b") {
+      sess.sql("""MERGE INTO lake.default.p t USING (SELECT * FROM VALUES
+        |  (27L, 'c0', 270.0) AS s(id, cat, v)) s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET t.v = s.v""".stripMargin)
+    }
+    live = live -- Set(21L, 22L, 24L, 25L)
+    checkRound(3)
+    val feed = t.readChangeFeed(t.currentVersion - 4, t.currentVersion - 3)
+      .filter(col("_change_type") === "delete")
+      .select("id").as[Long].collect().toSeq.sorted
+    assert(feed == Seq(21L, 22L)) // one tombstone per deleted row
+  }
 }
