@@ -1,10 +1,9 @@
 package graft.sources
 
-import graft.storage.CowTable
+import graft.storage.KeyPrune
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, EqualTo, Expression, PredicateHelper}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{Max, Min}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, MergeRows, Project, ReplaceData, WriteDelta}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, EqualTo, Expression, IsNotNull, PredicateHelper}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, MergeRows, Project, ReplaceData, WriteDelta}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
@@ -15,12 +14,12 @@ import org.apache.spark.sql.graftshim.ColumnBridge
   * Spark's group-based rewrite finds the affected groups with a runtime
   * subquery that joins the (column-pruned) WHOLE target with the source —
   * O(table) per MERGE, the one scale creep the API upsert path doesn't have
-  * (it prunes candidate files against the source keys first,
-  * [[graft.storage.CowTable]] `pruneFiles`). This rule gives the SQL path
-  * the same property: before execution, run one tiny driver job computing
-  * the merge SOURCE's distinct key set (or, above a cap, its [min, max]),
-  * intersect it with the manifest's per-file key stats, and hand the
-  * surviving candidate paths to the operation ([[SourceBoundedRowLevelOp]]:
+  * (it prunes candidate files against the source keys first). This rule
+  * gives the SQL path the same property through the same pruner
+  * ([[graft.storage.KeyPrune]]): before execution, hand it the merge
+  * SOURCE's key column — one bounded job collects its distinct values
+  * (over the cap, a distributed range join) — and pass the surviving
+  * candidate paths to the operation ([[SourceBoundedRowLevelOp]]:
   * the group-based [[GraftRowLevelOperation]] AND the deletion-vector
   * delta path [[GraftDvRowLevelOperation]]) — every scan instance (the
   * matching-rows subquery, the ReplaceData scan, the WriteDelta match
@@ -39,20 +38,11 @@ import org.apache.spark.sql.graftshim.ColumnBridge
   *   - streaming or non-deterministic sources are never re-evaluated;
   *   - any failure in the bounds job falls back to no prune.
   */
-final class MergeSourcePrune(session: SparkSession)
+final class MergeSourcePrune private[graft] (
+    session: SparkSession, maxKeys: Int)
   extends Rule[LogicalPlan] with PredicateHelper {
 
-  /** Above this many distinct source keys, fall back from the exact key-set
-    * probe to a [min, max] range intersection (same spirit as the API
-    * path's `graft.pruneKeyLimit`, kept small: the key set is collected to
-    * the driver). */
-  private def keyLimit: Int =
-    session.conf.get("graft.mergeSourceKeyLimit", "4096").toInt
-
-  /** Escape hatch / benchmark isolation: `graft.mergeSourcePrune.enabled`
-    * = false skips the rule (full behavior via the unpruned scan). */
-  private def enabled: Boolean =
-    session.conf.get("graft.mergeSourcePrune.enabled", "true").toBoolean
+  def this(session: SparkSession) = this(session, KeyPrune.MaxKeys)
 
   /** Below this many manifest files the bounds job cannot pay for itself —
     * it is one extra Spark job (~0.3–0.6 s locally) while the runtime group
@@ -63,7 +53,6 @@ final class MergeSourcePrune(session: SparkSession)
     session.conf.get("graft.mergeSourcePruneMinFiles", "64").toInt
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
     plan.foreach {
       // group-based (COW) and delta-based (deletion-vector) rewrites both
       // discover matches by scanning the target — the same source-bounds
@@ -219,25 +208,15 @@ final class MergeSourcePrune(session: SparkSession)
           l.references.subsetOf(sourceSide.outputSet) => l
       }.getOrElse(return None)
 
-    val keysDf = ColumnBridge.ofRows(session,
-      Project(Seq(Alias(srcKey, "__graft_merge_key")()), sourceSide))
-    val cap = keyLimit
-    val keys = keysDf.distinct().limit(cap + 1).collect()
-      .map(_.get(0)).filter(_ != null).toSeq
+    // the pruner reads the key column by the table's key name; a NULL
+    // source key never equal-matches, so dropping its row is exact (NaN
+    // does match NaN: it must reach the pruner, which keeps every file)
+    val keys = ColumnBridge.ofRows(session, Project(
+      Seq(Alias(srcKey, keyName)()), Filter(IsNotNull(srcKey), sourceSide)))
     val candidates =
-      if (keys.size <= cap) CowTable.filesContainingAny(m, keys, colIdx = 0)
-      else {
-        val bounds = ColumnBridge.ofRows(session,
-          Aggregate(Nil, Seq(
-            Alias(Min(srcKey).toAggregateExpression(), "__graft_lo")(),
-            Alias(Max(srcKey).toAggregateExpression(), "__graft_hi")()),
-            sourceSide)).collect().head
-        if (bounds.isNullAt(0) || bounds.isNullAt(1)) return None
-        CowTable.filesInRange(m, Some(bounds.get(0)), Some(bounds.get(1)))
-      }
+      KeyPrune.touched(m, op.tableRoot, keys, maxKeys).map(_._1).getOrElse(Nil)
     logInfo(s"graft MERGE source-bounded prune: ${candidates.size}/" +
-      s"${m.files.size} candidate files for ${keys.size}" +
-      s"${if (keys.size > cap) "+" else ""} source keys")
+      s"${m.files.size} candidate files")
     Some(candidates.map(_.path).toSet)
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.storage.{ColRange, CommitManifest, CowTable, FileEntry, PartitionTransform}
+import graft.storage.{ColRange, CommitManifest, CowTable, FileEntry, KeyPrune, PartitionTransform}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{DataType, DateType, StructType, TimestampNTZType, TimestampType}
 
@@ -358,16 +358,14 @@ private[sources] object MetadataDelete {
       case (Some(a), Some(b)) => (a, b)
       case _ => return Unknown
     }
-    def cmp(a: String, b: String): Int =
-      if (numeric) BigDecimal(a).compare(BigDecimal(b))
-      else CowTable.utf8Ordering.compare(a, b)
     val vStrs =
       scala.util.Try(vs.map(v => CowTable.statValueString(v))).toOption
         .getOrElse(return Unknown)
-    // guard: numeric stat spaces must parse (a corrupt stat keeps Unknown)
-    if (numeric && scala.util.Try {
-        (vStrs :+ mnS :+ mxS).foreach(BigDecimal(_))
-      }.isFailure) return Unknown
+    // every side needs a stat-space position (a NaN or corrupt stat keeps
+    // Unknown)
+    if ((vStrs :+ mnS :+ mxS).exists(KeyPrune.position(_, numeric).isEmpty))
+      return Unknown
+    def cmp(a: String, b: String): Int = KeyPrune.compare(a, b, numeric).get
     val phys = m.physicalName(field(schema, c).map(_.name).getOrElse(c))
     val nullFree = e.nulls.get(phys).contains(0L)
     def all(cond: Boolean): Tri = if (cond && nullFree) All else Unknown

@@ -608,11 +608,13 @@ final class CowTable private[storage] (
   /** [[upsert]] against an explicit snapshot version — the commit rebases
     * ([[commitWithRebase]]) or fails loud if versions landed after it.
     * Package-private: specs use it to simulate a writer whose snapshot went
-    * stale mid-operation (the thing that actually happens on a cluster). */
-  private[storage] def upsertFrom(parent: Int, source: DataFrame): Int = {
+    * stale mid-operation (the thing that actually happens on a cluster),
+    * and pass a small `maxKeys` to run the pruner's over-cap path. */
+  private[storage] def upsertFrom(parent: Int, source: DataFrame,
+      maxKeys: Int = KeyPrune.MaxKeys): Int = {
     if (parent == 0) return writeVersion(source, source.schema, Nil, 0)
     val m = manifest(parent)
-    pruneFiles(m, source) match {
+    KeyPrune.touched(m, root, source, maxKeys) match {
       case None => parent // empty batch: no-op, no empty commit
       case Some((touched, untouched)) if config.deletionVectors &&
           config.precombineKey.isEmpty && morSchemaMatch(m, source) =>
@@ -657,7 +659,7 @@ final class CowTable private[storage] (
   private[storage] def deleteFrom(parent: Int, deleteKeys: DataFrame): Int = {
     require(parent > 0, s"table ${config.tableName} does not exist")
     val m = manifest(parent)
-    pruneFiles(m, deleteKeys) match {
+    KeyPrune.touched(m, root, deleteKeys) match {
       case None => parent
       case Some((touched, untouched)) if config.deletionVectors =>
         deleteWithVectors(m, parent, touched, untouched, deleteKeys)
@@ -1176,7 +1178,7 @@ final class CowTable private[storage] (
         dt == org.apache.spark.sql.types.DateType
       require(ok, s"graft optimize: z-order needs numeric/date/timestamp/" +
         s"string columns; $k is ${dt.simpleString}")
-      s"__zr_$k" -> keyStatColumn(col(k), dt).cast("double")
+      s"__zr_$k" -> KeyPrune.keyStatColumn(col(k), dt, spark).cast("double")
     }
     val tmp = casted.foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
     val probes = (1 until (1 << ZOrder.Bits)).map(_.toDouble / (1 << ZOrder.Bits)).toArray
@@ -2225,12 +2227,6 @@ final class CowTable private[storage] (
 
   // ---- internals ----------------------------------------------------------
 
-  /** Distinct source keys above which pruning switches from the driver-side
-    * key-set check to the distributed range join (bounds driver memory;
-    * conf-overridable for tests). */
-  private def pruneKeyLimit: Int =
-    spark.conf.get("graft.pruneKeyLimit", "100000").toInt
-
   /** Timestamp/date keys prune NUMERICALLY on their physical integers
     * (micros / days since epoch) — that is the form parquet footer stats
     * arrive in, and `CAST(ts AS STRING)` datetime text would compare
@@ -2243,271 +2239,6 @@ final class CowTable private[storage] (
     case org.apache.spark.sql.types.DateType => true
     case _ => false
   }
-
-  /** The key column in the same value space the stats strings use. */
-  private def keyStatColumn(
-      c: org.apache.spark.sql.Column, dt: DataType)
-      : org.apache.spark.sql.Column = dt match {
-    case org.apache.spark.sql.types.TimestampType => unix_micros(c)
-    case org.apache.spark.sql.types.TimestampNTZType =>
-      // NTZ is a wall clock; its stat space is micros "as if UTC" — the
-      // raw INT64 the parquet footer stores and what statValueString maps
-      // a pushed LocalDateTime literal to. convert_timezone pins the
-      // NTZ→TIMESTAMP reinterpretation to UTC so the value is independent
-      // of the session time zone (a bare cast would shift by its offset).
-      unix_micros(convert_timezone(
-        lit("UTC"),
-        lit(spark.sessionState.conf.sessionLocalTimeZone), c)
-        .cast(org.apache.spark.sql.types.TimestampType))
-    case org.apache.spark.sql.types.DateType => unix_date(c)
-    case _ => c
-  }
-
-  /** Partition manifest files into (touched, untouched) for a merge source.
-    *
-    * Exact key-set pruning: collect the batch's distinct keys (CDC batches
-    * are the small side; capped at [[pruneKeyLimit]]) and binary-search each
-    * file's [min,max] for a contained key. This matters at scale: a batch
-    * touching keys {10, 450} must NOT touch every file in the range 10..450 —
-    * range-overlap pruning would rewrite the whole table whenever a batch
-    * mixes one low and one high key (e.g. any insert of a new max key).
-    * Oversized batches fall back to range overlap; a batch containing a NULL
-    * key touches everything (file min/max stats cannot see nulls). Returns
-    * None ⇔ empty source.
-    */
-  private def pruneFiles(m: CommitManifest, source: DataFrame)
-      : Option[(Seq[FileEntry], Seq[FileEntry])] = {
-    val k = config.primaryKey.head
-    if (!source.columns.contains(k)) return Some((m.files, Nil))
-    // ONE bounded job collects the batch's distinct key stat-PAIRS; all
-    // three prune stages (first-col ranges, second-col refinement, bloom)
-    // consume it. The per-stage independent collections each re-ran the
-    // whole source subtree — a full distinct pass (and its plan) per stage,
-    // measured as a third of q184's driver-gap time (plans/r18,
-    // DriverSample). Overflow (> pruneKeyLimit distinct PAIRS) falls back
-    // to the staged path unchanged — including the corner where col-1
-    // alone is under the limit (pairs over-count only when col-2 fans out
-    // per col-1 value), which the fallback re-collects per column.
-    val k2opt = config.primaryKey.lift(1).filter(source.columns.contains)
-    def statStr(c: String) =
-      keyStatColumn(col(c), source.schema(c).dataType).cast("string")
-    val sel = statStr(k).as("__k1") +:
-      k2opt.map(c => statStr(c).as("__k2")).toSeq
-    val rows = source.select(sel: _*).distinct()
-      .limit(pruneKeyLimit + 1).collect()
-    if (rows.isEmpty) return None
-    if (rows.length > pruneKeyLimit) return pruneFilesStaged(m, source)
-    val keys1 = rows.map(r => if (r.isNullAt(0)) null else r.getString(0))
-      .distinct.toIndexedSeq
-    def keys2 = rows.map(r => if (r.isNullAt(1)) null else r.getString(1))
-      .distinct.toIndexedSeq
-    if (keys1.contains(null)) {
-      // stats cannot locate null first-column keys: every file is range-
-      // touched, but col-2 refinement still applies (a matching row's k2
-      // is in the batch's col-2 set regardless of its k1 nullness); bloom
-      // cannot (it indexes the null-bearing first column).
-      val (still, moved) =
-        if (k2opt.isEmpty) (m.files, Nil) else refineSecondCol(m, m.files, keys2)
-      return Some((still, moved))
-    }
-    val (touched, untouched) = firstColPartition(m, keys1)
-    val (still, moved) =
-      if (k2opt.isEmpty) (touched, Nil) else refineSecondCol(m, touched, keys2)
-    val (still2, moved2) = refineBloom(still, keys1)
-    Some((still2, untouched ++ moved ++ moved2))
-  }
-
-  /** Staged pruning (fallback for batches whose distinct key-pair count
-    * exceeds [[pruneKeyLimit]]): independent per-stage key collections,
-    * the exact pre-pair-collect semantics — first-col prune (small or
-    * distributed), then second-col and bloom refinements, each with its
-    * own bounded collection. */
-  private def pruneFilesStaged(m: CommitManifest, source: DataFrame)
-      : Option[(Seq[FileEntry], Seq[FileEntry])] =
-    pruneFilesFirstCol(m, source).map { case (touched, untouched) =>
-      val (still, moved) = secondColRefine(m, source, touched)
-      val (still2, moved2) = bloomRefine(still, source)
-      (still2, untouched ++ moved ++ moved2)
-    }
-
-  /** BLOOM refinement (third stage, opt-in via [[TableConfig.bloomIndex]]):
-    * of the files range pruning kept, drop those whose key Bloom filter
-    * contains NONE of the batch's keys. This is where point-key merges on
-    * range-overlapping files win: [min,max] admits everything when files
-    * interleave key space, but a bloom answers per key. False positives
-    * keep extra files (harmless); a missing/unreadable sidecar keeps the
-    * file (never a wrong skip). Oversized or null-bearing batches skip
-    * refinement, same rule as the range stages. (On this staged path the
-    * batch's distinct keys are re-collected — one extra bounded job; the
-    * common pair-collect path in [[pruneFiles]] hands its keys straight to
-    * [[refineBloom]].) */
-  private def bloomRefine(touched: Seq[FileEntry], source: DataFrame)
-      : (Seq[FileEntry], Seq[FileEntry]) = {
-    if (!config.bloomIndex || touched.isEmpty) return (touched, Nil)
-    val k = config.primaryKey.head
-    if (!source.columns.contains(k)) return (touched, Nil)
-    val keys = source
-      .select(keyStatColumn(col(k), source.schema(k).dataType).cast("string"))
-      .distinct().limit(pruneKeyLimit + 1).collect()
-      .map(r => if (r.isNullAt(0)) null else r.getString(0))
-    refineBloom(touched, keys.toIndexedSeq)
-  }
-
-  private def refineBloom(touched: Seq[FileEntry], keys: Seq[String])
-      : (Seq[FileEntry], Seq[FileEntry]) = {
-    if (!config.bloomIndex || touched.isEmpty ||
-      keys.isEmpty || keys.contains(null) || keys.length > pruneKeyLimit)
-      return (touched, Nil)
-    touched.partition { e =>
-      loadBloom(e.path) match {
-        case None => true // no sidecar (pre-index commit, DSv2 write): keep
-        case Some(bf) => keys.exists(bf.mightContainString)
-      }
-    }
-  }
-
-  private def loadBloom(relPath: String)
-      : Option[org.apache.spark.util.sketch.BloomFilter] = {
-    val p = root.resolve(relPath + ".bloom")
-    if (!Files.isRegularFile(p)) None
-    else Try {
-      val in = Files.newInputStream(p)
-      try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-      finally in.close()
-    }.toOption
-  }
-
-  /** COMPOSITE-KEY refinement: of the files the first-column prune kept,
-    * drop those whose SECOND key column's [min2, max2] contains none of the
-    * batch's column-2 values. Per-column decomposition is conservative — a
-    * file holding a real (k1, k2) match has each component inside its
-    * respective range, so it always stays touched; files with no col-2 stats
-    * (single-key tables, pre-upgrade manifests, unstatable types) stay
-    * touched too. Returns (still touched, newly untouched). */
-  private def secondColRefine(
-      m: CommitManifest, source: DataFrame, touched: Seq[FileEntry])
-      : (Seq[FileEntry], Seq[FileEntry]) = {
-    val k2 = config.primaryKey.lift(1).getOrElse(return (touched, Nil))
-    if (!source.columns.contains(k2) ||
-      touched.forall(_.minKey2.isEmpty)) return (touched, Nil)
-    val dt2 = source.schema(k2).dataType
-    val keys = source.select(keyStatColumn(col(k2), dt2).cast("string"))
-      .distinct().limit(pruneKeyLimit + 1).collect()
-      .map(r => if (r.isNullAt(0)) null else r.getString(0))
-    refineSecondCol(m, touched, keys.toIndexedSeq)
-  }
-
-  private def refineSecondCol(m: CommitManifest,
-      touched: Seq[FileEntry], keys: Seq[String])
-      : (Seq[FileEntry], Seq[FileEntry]) = {
-    // no col-2 stats anywhere, null col-2 values, or an oversized batch:
-    // no refinement (conservative)
-    if (touched.forall(_.minKey2.isEmpty) ||
-      keys.isEmpty || keys.contains(null) || keys.length > pruneKeyLimit)
-      return (touched, Nil)
-    if (m.key2Numeric)
-      touched.partition(CowTable.containsAny(
-        _, keys.map(BigDecimal(_)).sorted.toIndexedSeq, BigDecimal(_),
-        colIdx = 1))
-    else {
-      implicit val ord: Ordering[String] = CowTable.utf8Ordering
-      touched.partition(CowTable.containsAny(
-        _, keys.sorted.toIndexedSeq, identity[String], colIdx = 1))
-    }
-  }
-
-  private def pruneFilesFirstCol(m: CommitManifest, source: DataFrame)
-      : Option[(Seq[FileEntry], Seq[FileEntry])] = {
-    val k = config.primaryKey.head
-    if (!source.columns.contains(k)) return Some((m.files, Nil))
-    val keyDt = source.schema(k).dataType
-    val keyStat = keyStatColumn(col(k), keyDt)
-    val keys = source.select(keyStat.cast("string")).distinct()
-      .limit(pruneKeyLimit + 1).collect()
-      .map(r => if (r.isNullAt(0)) null else r.getString(0))
-    if (keys.isEmpty) None
-    else if (keys.contains(null)) Some((m.files, Nil))
-    else if (keys.length > pruneKeyLimit) {
-      // Distributed EXACT prune for oversized batches: join the batch's
-      // keys against the broadcast file ranges and collect only the O(files)
-      // set of touched file ids. Range-overlap on the batch's global
-      // [min, max] would rewrite the whole table whenever a batch mixes one
-      // low and one high key (any insert of a new max key does); this stays
-      // exact at any batch size for O(batch) distributed work. String keys
-      // compare in Spark's UTF8String byte order — the same order the file
-      // stats are in; numeric/temporal keys compare as DECIMAL(38,18) via
-      // try_cast (a plain cast would throw under ANSI). Scale 18 covers
-      // double and micros-scale values exactly; anything try_cast nulls out
-      // (a >20-integer-digit or >18-decimal-digit value) degrades
-      // CONSERVATIVELY — an overflowing file bound marks that file touched,
-      // an overflowing source key falls back to touching every file — never
-      // the silent misprune a rounded DECIMAL(38,10) comparison allowed
-      // (values differing from a bound only past the 10th decimal could
-      // round across it and leave duplicate keys after merge).
-      val spark0 = source.sparkSession
-      import spark0.implicits._
-      val keyed = source.select(keyStat.as("__k")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        if (keyed.filter(col("__k").isNull).limit(1).count() > 0)
-          return Some((m.files, Nil)) // stats cannot locate null keys
-        def side(name: String) =
-          if (m.keyNumeric) expr(s"try_cast($name AS DECIMAL(38,18))")
-          else col(name).cast("string")
-        if (m.keyNumeric &&
-          keyed.filter(side("__k").isNull).limit(1).count() > 0)
-          return Some((m.files, Nil)) // key outside DECIMAL(38,18): no prune
-        // A numeric comparison is exact iff both file BOUNDS sit on the
-        // DECIMAL(38,18) grid: source keys may then round to the grid
-        // (HALF_UP) without ever escaping a containing [mn, mx] — rounding
-        // to the nearest grid point cannot cross a grid-aligned bound.
-        // Bounds NOT on the grid (scale > 18 or > 20 integer digits, e.g.
-        // extreme doubles) make the file unprunable-by-join: mark touched.
-        def onGrid(s: String): Boolean = Try {
-          val d = BigDecimal(s).underlying.stripTrailingZeros
-          d.scale <= 18 && d.precision - d.scale <= 20
-        }.getOrElse(false)
-        val statless = m.files.zipWithIndex.collect {
-          case (e, i) if e.minKey.isEmpty || e.maxKey.isEmpty ||
-            (m.keyNumeric &&
-              !(onGrid(e.minKey.get) && onGrid(e.maxKey.get))) => i
-        }.toSet
-        val ranges = m.files.zipWithIndex.collect {
-          case (e, i) if e.minKey.isDefined && e.maxKey.isDefined &&
-            !statless(i) =>
-            (i, e.minKey.get, e.maxKey.get)
-        }.toDF("__fid", "__mn", "__mx")
-          .select(col("__fid"),
-            side("__mn").as("__mn"), side("__mx").as("__mx"))
-        val touchedIds = keyed
-          .select(side("__k").as("__k"))
-          .join(broadcast(ranges),
-            col("__k") >= col("__mn") && col("__k") <= col("__mx"))
-          .select("__fid").distinct()
-          .collect().map(_.getInt(0)).toSet ++ statless
-        Some(m.files.zipWithIndex.partition { case (_, i) => touchedIds(i) }
-          match { case (t, u) => (t.map(_._1), u.map(_._1)) })
-      } finally keyed.unpersist(blocking = false)
-    } else Some(firstColPartition(m, keys.toIndexedSeq))
-  }
-
-  /** Small-batch first-column partition: binary-search each file's
-    * [min, max] for a contained key (`keys` = the batch's distinct
-    * non-null key stat-strings, ≤ [[pruneKeyLimit]] of them). */
-  private def firstColPartition(m: CommitManifest, keys: Seq[String])
-      : (Seq[FileEntry], Seq[FileEntry]) =
-    if (m.keyNumeric)
-      m.files.partition(CowTable.containsAny(
-        _, keys.map(BigDecimal(_)).sorted.toIndexedSeq, BigDecimal(_)))
-    else {
-      // UTF-8 byte order, NOT JVM UTF-16 order: file min/max stats come from
-      // parquet footers / Spark min-max, both of which order strings by their
-      // UTF-8 bytes — the two orderings diverge for supplementary-plane
-      // characters, and a mismatch silently skips files containing source keys.
-      implicit val ord: Ordering[String] = CowTable.utf8Ordering
-      m.files.partition(CowTable.containsAny(
-        _, keys.sorted.toIndexedSeq, identity[String]))
-    }
 
   /** Read a set of manifest files, reconciling to `m`'s schema (files written
     * by older commits may predate added columns — null-fill + cast, the read
@@ -2609,7 +2340,7 @@ final class CowTable private[storage] (
   private[storage] def readFilesWithPositions(
       m: CommitManifest, files: Seq[FileEntry]): DataFrame = {
     val schema = structFromJson(m.schemaJson)
-    // Empty touched set (pruneFiles can return Some((Nil, all)) when no
+    // Empty touched set (KeyPrune can return Some((Nil, all)) when no
     // file's key range overlaps the batch — e.g. a pure-insert upsert of
     // fresh monotonic keys, or deleting absent keys): an empty frame with
     // the position columns, NOT an empty .reduce crash.
@@ -2813,7 +2544,7 @@ final class CowTable private[storage] (
     *  - no winner may have removed/rewritten a file this op READ
     *    (`touchedPaths`) — that would make the merge's inputs stale;
     *  - no winner-ADDED file may possibly contain one of the op's source
-    *    keys (the exact key-set prune, [[pruneFiles]], re-run against just
+    *    keys (the exact key-set prune, [[KeyPrune.touched]], re-run against just
     *    the added files) — otherwise carrying both the winner's file and
     *    our merged output could duplicate or shadow a key. This is
     *    stats-conservative: a reorganization whose bins span wide key
@@ -2992,7 +2723,8 @@ final class CowTable private[storage] (
             val added = wm.files.filterNot(f => prevPaths(f.path))
             val mayOverlap = added.nonEmpty && (ctx.source match {
               case Some(src) =>
-                pruneFiles(wm.copy(files = added), src).exists(_._1.nonEmpty)
+                KeyPrune.touched(wm.copy(files = added), root, src)
+                  .exists(_._1.nonEmpty)
               case None =>
                 CowTable.keyRangesOverlap(added, ctx.footprint, wm.keyNumeric)
             })
@@ -3055,8 +2787,8 @@ final class CowTable private[storage] (
     * next to each data file (inside the writer-unique version dir, so the
     * CAS story is unchanged — a losing writer's sidecars are as inert as
     * its data files). Key values are encoded in the SAME stat-string space
-    * pruning compares in ([[keyStatColumn]] → string), so lookups are
-    * byte-consistent. Sized for the largest new file at 1% FPP; executors
+    * pruning compares in ([[KeyPrune.keyStatColumn]] → string), so lookups
+    * are byte-consistent. Sized for the largest new file at 1% FPP; executors
     * write their own sidecars — the driver never holds the filters. */
   private def writeBlooms(
       verDir: Path, fresh: Seq[FileEntry], schema: StructType): Unit = {
@@ -3074,7 +2806,8 @@ final class CowTable private[storage] (
       .parquet(fresh.map(e => root.resolve(e.path).toString): _*)
     val keyed = df.select(
       input_file_name().as("__file"),
-      keyStatColumn(col(k), dataSchema(k).dataType).cast("string").as("__k"))
+      KeyPrune.keyStatColumn(col(k), dataSchema(k).dataType, spark)
+        .cast("string").as("__k"))
     keyed.where(col("__k").isNotNull)
       .rdd.map(r => (r.getString(0), r.getString(1)))
       .aggregateByKey(
@@ -3640,7 +3373,7 @@ final class CowTable private[storage] (
       // same value space as footer stats (temporal keys → physical ints)
       def minMax(k: String): Seq[org.apache.spark.sql.Column] =
         if (df.columns.contains(k)) {
-          val ks = keyStatColumn(col(k), df.schema(k).dataType)
+          val ks = KeyPrune.keyStatColumn(col(k), df.schema(k).dataType, spark)
           Seq(min(ks).cast("string"), max(ks).cast("string"))
         } else Seq(lit(null).cast("string"), lit(null).cast("string"))
       val ks = config.primaryKey.take(2)
@@ -3958,33 +3691,32 @@ object CowTable {
     case ldt: java.time.LocalDateTime =>
       // an NTZ literal pushed through DSv2 arrives as LocalDateTime; its
       // stat space is wall-clock micros "as if UTC" (the raw footer INT64,
-      // same space keyStatColumn maps the column to). toEpochSecond floors
-      // and getNano is the non-negative within-second part, so pre-1970
-      // values stay exact.
+      // same space KeyPrune.keyStatColumn maps the column to).
+      // toEpochSecond floors and getNano is the non-negative within-second
+      // part, so pre-1970 values stay exact.
       (ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
         ldt.getNano / 1000L).toString
     case other => String.valueOf(other)
   }
 
-  /** Does key column `colIdx`'s [min, max] contain any of `sorted`
-    * (ascending)? */
-  private[graft] def containsAny[T](
-      e: FileEntry, sorted: IndexedSeq[T], parse: String => T,
-      colIdx: Int = 0)(
-      implicit ord: Ordering[T]): Boolean =
-    e.bounds(colIdx) match {
+  /** Does a file's [min, max] on some column possibly intersect the filter
+    * bound [lo, hi] (either side open)? Strict bounds are treated as
+    * inclusive — conservative; the residual predicate restores exactness.
+    * Filter values map through [[statValueString]] into the same stat space
+    * the footer stats are in; a value or stat with no stat-space position
+    * (NaN, ±Infinity) keeps the file. */
+  private[graft] def rangeOverlaps(
+      r: ColRange, lo: Option[Any], hi: Option[Any],
+      numeric: Boolean): Boolean =
+    (r.mn, r.mx) match {
       case (Some(mn), Some(mx)) =>
-        val lo = parse(mn)
-        val hi = parse(mx)
-        // lower bound: first index with sorted(i) >= lo
-        var l = 0
-        var r = sorted.length
-        while (l < r) {
-          val mid = (l + r) >>> 1
-          if (ord.lt(sorted(mid), lo)) l = mid + 1 else r = mid
-        }
-        l < sorted.length && ord.lteq(sorted(l), hi)
-      case _ => true // a file without stats must be assumed touched
+        val checks =
+          lo.map(l => KeyPrune.compare(mx, statValueString(l), numeric)
+            .map(_ >= 0)) ++
+          hi.map(h => KeyPrune.compare(mn, statValueString(h), numeric)
+            .map(_ <= 0))
+        checks.exists(_.isEmpty) || checks.forall(_.contains(true))
+      case _ => true
     }
 
   /** Files whose key-column-`colIdx` [min, max] contains at least one of
@@ -3993,40 +3725,10 @@ object CowTable {
     * twin of [[filesInRange]], used by runtime (DPP-style) group filtering.
     * Columns prune independently (conjunctive), so a multi-column-key MERGE
     * intersects the per-column survivors. */
-  /** Does a file's [min, max] on some column possibly intersect the filter
-    * bound [lo, hi] (either side open)? Strict bounds are treated as
-    * inclusive — conservative; the residual predicate restores exactness.
-    * Filter values map through [[statValueString]] into the same stat space
-    * the footer stats are in. */
-  private[graft] def rangeOverlaps(
-      r: ColRange, lo: Option[Any], hi: Option[Any],
-      numeric: Boolean): Boolean = {
-    def cmp(a: String, b: String): Int =
-      if (numeric) BigDecimal(a).compare(BigDecimal(b))
-      else utf8Ordering.compare(a, b)
-    (r.mn, r.mx) match {
-      case (Some(mn), Some(mx)) =>
-        Try {
-          lo.forall(l => cmp(mx, statValueString(l)) >= 0) &&
-            hi.forall(h => cmp(mn, statValueString(h)) <= 0)
-        }.getOrElse(true) // unparseable value/stat: keep the file
-      case _ => true
-    }
-  }
-
   private[graft] def filesContainingAny(
-      m: CommitManifest, values: Seq[Any], colIdx: Int = 0): Seq[FileEntry] = {
-    val strs = values.map(statValueString)
-    val numeric = if (colIdx == 0) m.keyNumeric else m.key2Numeric
-    if (numeric)
-      m.files.filter(containsAny(
-        _, strs.map(BigDecimal(_)).sorted.toIndexedSeq, BigDecimal(_), colIdx))
-    else {
-      implicit val ord: Ordering[String] = utf8Ordering
-      m.files.filter(containsAny(_, strs.sorted.toIndexedSeq,
-        identity[String], colIdx))
-    }
-  }
+      m: CommitManifest, values: Seq[Any], colIdx: Int = 0): Seq[FileEntry] =
+    KeyPrune.containing(m.files, values.map(v => Some(statValueString(v))),
+      if (colIdx == 0) m.keyNumeric else m.key2Numeric, colIdx)._1
 
   /** Manifest-level data skipping: the subset of `m.files` whose
     * [minKey, maxKey] can intersect `[lower, upper]` (either bound
@@ -4034,19 +3736,9 @@ object CowTable {
     * re-apply the precise predicate on the rows that remain. */
   private[graft] def filesInRange(
       m: CommitManifest, lower: Option[Any], upper: Option[Any])
-      : Seq[FileEntry] = {
-    def cmp(a: String, b: String): Int =
-      if (m.keyNumeric) BigDecimal(a).compare(BigDecimal(b))
-      else utf8Ordering.compare(a, b)
-    m.files.filter { e =>
-      (e.minKey, e.maxKey) match {
-        case (Some(mn), Some(mx)) =>
-          lower.forall(lo => cmp(mx, statValueString(lo)) >= 0) &&
-            upper.forall(hi => cmp(mn, statValueString(hi)) <= 0)
-        case _ => true // stats absent: must read
-      }
-    }
-  }
+      : Seq[FileEntry] =
+    m.files.filter(e =>
+      rangeOverlaps(ColRange(e.minKey, e.maxKey), lower, upper, m.keyNumeric))
 
   /** Open a table directory (existing or about-to-be-created). */
   /** KMV sketch size for [[TableConfig.ndvSketch]] — 64 minima give a
@@ -4139,11 +3831,12 @@ object CowTable {
           case Some((amn, amx)) => fr.exists {
             case None => true
             case Some((fmn, fmx)) =>
-              if (numeric)
-                !(BigDecimal(amx) < BigDecimal(fmn) ||
-                  BigDecimal(fmx) < BigDecimal(amn))
-              else
-                !(utf8Ordering.lt(amx, fmn) || utf8Ordering.lt(fmx, amn))
+              // disjoint only when provably ordered apart on both sides
+              (KeyPrune.compare(amx, fmn, numeric),
+                KeyPrune.compare(fmx, amn, numeric)) match {
+                case (Some(a), Some(b)) => a >= 0 && b >= 0
+                case _ => true
+              }
           }
         }
       }

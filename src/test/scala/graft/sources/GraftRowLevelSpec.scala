@@ -308,18 +308,21 @@ class GraftRowLevelSpec extends SparkSpec {
     }
   }
 
-  test("MERGE source bounds: key-set overflow falls back to [min,max]") {
+  test("MERGE source bounds: over-cap key sets prune exactly") {
     val dir = tmpDir("rl") + "/t"
     val t = CowTable(spark, dir, TableConfig("t", Seq("id"),
       clusterByKey = true))
     t.create((1L to 400L).map(i => (i, s"n$i")).toDF("id", "name")
       .repartition(4))
     val v1Files = t.manifest(1).files.map(_.path).toSet
-    // both keys live in the lowest-range file; cap of 1 forces the
-    // min/max-range path, which must still reduce to that one file
+    // both keys live in the lowest-range file; a rule capped at 1 key runs
+    // the pruner's distributed join, which must still reduce to that file
     Seq((7L, "u7"), (12L, "u12")).toDF("id", "name")
       .createOrReplaceTempView("rl_mm_src")
-    spark.conf.set("graft.mergeSourceKeyLimit", "1")
+    val prior = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations =
+      prior.filterNot(_.isInstanceOf[MergeSourcePrune]) :+
+        new MergeSourcePrune(spark, maxKeys = 1)
     try withSqlTable(dir, "rl_mm") {
       withoutRuntimeGroupFilter {
         spark.sql(
@@ -328,10 +331,10 @@ class GraftRowLevelSpec extends SparkSpec {
             |WHEN NOT MATCHED THEN INSERT *
             |""".stripMargin)
       }
-    } finally spark.conf.unset("graft.mergeSourceKeyLimit")
+    } finally spark.experimental.extraOptimizations = prior
     val carried = t.manifest(2).files.map(_.path).toSet.intersect(v1Files)
     assert(carried.size == 3,
-      s"range fallback must carry 3 of 4 files, got ${carried.size}")
+      s"over-cap join must carry 3 of 4 files, got ${carried.size}")
     assert(t.read().count() == 400)
     assert(t.read().filter($"id".isin(7L, 12L)).as[(Long, String)]
       .collect().toSet == Set((7L, "u7"), (12L, "u12")))

@@ -447,15 +447,13 @@ class CowTableSpec extends SparkSpec {
     val out = t.read().as[(java.sql.Timestamp, Long)].collect().toMap
     assert(out(java.sql.Timestamp.valueOf("2024-01-01 00:05:00")) == 999L)
     assert(out.size == 400)
-    // the distributed prune path agrees (force it)
-    spark.conf.set("graft.pruneKeyLimit", "0")
-    try {
-      t.upsert(Seq((java.sql.Timestamp.valueOf("2024-01-01 03:04:00"), 888L))
-        .toDF("ts", "v"))
-      assert(t.manifest(3).files.map(_.path).count(f =>
-        f.startsWith("v00001") || f.startsWith("v00002")) == 3)
-      assert(t.read().count() == 400)
-    } finally spark.conf.unset("graft.pruneKeyLimit")
+    // the over-cap (distributed join) prune path agrees
+    t.upsertFrom(t.currentVersion,
+      Seq((java.sql.Timestamp.valueOf("2024-01-01 03:04:00"), 888L))
+        .toDF("ts", "v"), maxKeys = 0)
+    assert(t.manifest(3).files.map(_.path).count(f =>
+      f.startsWith("v00001") || f.startsWith("v00002")) == 3)
+    assert(t.read().count() == 400)
     // readRange with timestamp bounds uses the same micros space
     val hour0 = t.readRange(
       Some(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
@@ -493,23 +491,22 @@ class CowTableSpec extends SparkSpec {
       .selectExpr("CAST(k AS DECIMAL(20,12)) AS k", "v")
     t.create(df.repartitionByRange(4, col("k")))
     assert(t.manifest(1).files.size == 4)
-    spark.conf.set("graft.pruneKeyLimit", "0") // force the distributed path
-    try {
-      t.upsert(Seq("0.000000000002").toDF("s")
-        .selectExpr("CAST(s AS DECIMAL(20,12)) AS k", "CAST(999 AS BIGINT) AS v"))
-      val carried =
-        t.manifest(2).files.map(_.path).count(_.startsWith("v00001"))
-      assert(carried == 3, s"expected 3 carried files: ${t.manifest(2).files}")
-      val out = t.read().selectExpr("CAST(k AS STRING) AS k", "v")
-        .as[(String, Long)].collect().toMap
-      assert(out.size == 400 && out("0.000000000002") == 999L
-        && out("0.000000000001") == 1L && out("0.000000000003") == 3L,
-        s"sample: ${out.take(5)}")
-    } finally spark.conf.unset("graft.pruneKeyLimit")
+    // maxKeys = 0 forces the over-cap (distributed join) path
+    t.upsertFrom(t.currentVersion, Seq("0.000000000002").toDF("s")
+      .selectExpr("CAST(s AS DECIMAL(20,12)) AS k", "CAST(999 AS BIGINT) AS v"),
+      maxKeys = 0)
+    val carried =
+      t.manifest(2).files.map(_.path).count(_.startsWith("v00001"))
+    assert(carried == 3, s"expected 3 carried files: ${t.manifest(2).files}")
+    val out = t.read().selectExpr("CAST(k AS STRING) AS k", "v")
+      .as[(String, Long)].collect().toMap
+    assert(out.size == 400 && out("0.000000000002") == 999L
+      && out("0.000000000001") == 1L && out("0.000000000003") == 3L,
+      s"sample: ${out.take(5)}")
   }
 
-  test("composite-key prune: one key-pair job drives all stages, exact " +
-      "on the pair path, the staged overflow fallback, and null keys") {
+  test("composite-key prune: exact on the pair path, over the cap, " +
+      "null keys") {
     val dir = tmpDir("cow")
     val t = CowTable(spark, dir + "/t", TableConfig("t", Seq("k1", "k2")))
     // col-1 ranges OVERLAP across every file (k1 = k2 % 100) and col-2 is
@@ -541,15 +538,11 @@ class CowTableSpec extends SparkSpec {
     val v5 = t.manifest(5)
     assert(v5.files.map(_.path).forall(_.startsWith("v00005")),
       s"null col-2 must skip refinement: ${v5.files.map(_.path)}")
-    // pair overflow (3 pairs > limit 2): staged fallback — col-1 is
-    // oversized too, the distributed exact prune touches every file
-    // (ranges overlap), col-2 refinement is skipped (3 distinct > 2);
-    // result stays exact
-    spark.conf.set("graft.pruneKeyLimit", "2")
-    try {
-      t.upsert(Seq((6L, 6L, "u6"), (7L, 7L, "u7"), (8L, 8L, "u8"))
-        .toDF("k1", "k2", "v"))
-    } finally spark.conf.unset("graft.pruneKeyLimit")
+    // over the cap (3 pairs > maxKeys 2): the distributed joins run
+    // instead of the pair path; result stays exact
+    t.upsertFrom(t.currentVersion,
+      Seq((6L, 6L, "u6"), (7L, 7L, "u7"), (8L, 8L, "u8"))
+        .toDF("k1", "k2", "v"), maxKeys = 2)
     val out = t.read().select("k1", "k2", "v")
       .as[(Option[Long], Option[Long], String)].collect()
     assert(out.length == 402, s"got ${out.length}")
@@ -562,24 +555,41 @@ class CowTableSpec extends SparkSpec {
     assert(out.contains((Some(11L), None, "uN")))
   }
 
+  test("over-cap composite batches refine on the second column too") {
+    val dir = tmpDir("cow")
+    val t = CowTable(spark, dir + "/t", TableConfig("t", Seq("k1", "k2")))
+    // same layout as above: col-1 ranges overlap, col-2 partitions files
+    val df = (1L to 400L).map(i => (i % 100, i, s"n$i")).toDF("k1", "k2", "v")
+    t.create(df.repartitionByRange(4, col("k2")))
+    // 3 pairs > maxKeys 2: the first-column join touches all 4 files, the
+    // second-column join keeps only the low-k2 one
+    t.upsertFrom(t.currentVersion,
+      Seq((6L, 6L, "u6"), (7L, 7L, "u7"), (8L, 8L, "u8"))
+        .toDF("k1", "k2", "v"), maxKeys = 2)
+    val v2 = t.manifest(2)
+    assert(v2.files.map(_.path).count(_.startsWith("v00001")) == 3,
+      s"col-2 join must carry 3 files: ${v2.files.map(_.path)}")
+    val out = t.read().select("k2", "v").as[(Long, String)].collect().toMap
+    assert(out.size == 400 && out(6L) == "u6" && out(8L) == "u8"
+      && out(5L) == "n5" && out(400L) == "n400")
+  }
+
   test("oversized batches prune via the distributed range join, still exact") {
     val (t, _) = freshTable()
     t.create((1L to 400L).map(i => (i, s"n$i")).toDF("id", "name")
       .repartitionByRange(4, col("id")))
-    // force the distributed path: treat any batch over 2 keys as oversized
-    spark.conf.set("graft.pruneKeyLimit", "2")
-    try {
-      // keys 10 and 399: touches exactly the first and last of 4 files —
-      // a global [min,max] overlap would have touched all 4
-      t.upsert(Seq((10L, "u10"), (399L, "u399"), (500L, "new"))
-        .toDF("id", "name"))
-      val v2 = t.manifest(2)
-      val carried = v2.files.map(_.path).count(_.startsWith("v00001"))
-      assert(carried == 2, s"expected 2 carried files: ${v2.files.map(_.path)}")
-      val out = t.read().as[(Long, String)].collect().toMap
-      assert(out.size == 401 && out(10L) == "u10" && out(399L) == "u399"
-        && out(500L) == "new" && out(200L) == "n200")
-    } finally spark.conf.unset("graft.pruneKeyLimit")
+    // maxKeys = 2 makes this 3-key batch oversized: keys 10 and 399 touch
+    // exactly the first and last of 4 files — a global [min,max] overlap
+    // would have touched all 4
+    t.upsertFrom(t.currentVersion,
+      Seq((10L, "u10"), (399L, "u399"), (500L, "new")).toDF("id", "name"),
+      maxKeys = 2)
+    val v2 = t.manifest(2)
+    val carried = v2.files.map(_.path).count(_.startsWith("v00001"))
+    assert(carried == 2, s"expected 2 carried files: ${v2.files.map(_.path)}")
+    val out = t.read().as[(Long, String)].collect().toMap
+    assert(out.size == 401 && out(10L) == "u10" && out(399L) == "u399"
+      && out(500L) == "new" && out(200L) == "n200")
   }
 
   test("readChangeFeed classifies insert / update_postimage / delete exactly") {
