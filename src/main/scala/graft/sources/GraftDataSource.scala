@@ -9,7 +9,7 @@ import graft.storage.{CommitManifest, CowTable, FileEntry, PartitionTransform}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, MapType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -465,247 +465,25 @@ final class GraftScanBuilder(
   // set when the whole aggregation is answerable from the manifest:
   // (output schema, the pre-computed result rows — one per group)
   private var pushedAgg: Option[(StructType, Seq[Array[Any]])] = None
-  private var pushed: Array[Filter] = Array.empty
   private var allPushed: Seq[Filter] = Nil
-  private var bounds: Seq[(Option[Any], Option[Any])] = Nil
-  private var partValues: Option[Set[String]] = None
-  // `pk IS NOT NULL` pushed: null-partition (sentinel-dir) files prune —
-  // always exact (their rows ARE null), consumed alongside the equality
-  private var partNotNull: Boolean = false
-  private var extraBounds: Seq[(String, Boolean, Option[Any], Option[Any])] =
-    Nil
-  // HIDDEN-PARTITIONING range pruning: [lo, hi] on the transform-partition
-  // PATH value, derived from range predicates on the SOURCE column
-  // (order-preserving transforms only). Pruning-only — the source filter
-  // always stays residual.
-  private var partRange: (Option[String], Option[String]) = (None, None)
-  // RETIRED-ERA pruning (partition-spec evolution): per retired transform,
-  // the same derived constraints keyed by ITS generated column's path name —
-  // old-era files prune under their own era's layout. Pruning-only.
-  private var priorPrunes
-      : Seq[(String, Option[Set[String]], Option[String], Option[String])] =
-    Nil
+  /** The pushed filters, compiled once into the per-file evaluator the
+    * scan, its micro-batch stream and aggregate pushdown share. */
+  private var pred: FilePredicate = FilePredicate(m, fullSchema, Nil)
 
   private lazy val transform: Option[PartitionTransform] =
     m.partitionSpec.map(PartitionTransform.parse)
 
-  /** Driver-side replay of the transform on a pushed literal — the exact
-    * string the partition directory renders for that source value. None =
-    * the runtime type isn't safely mappable (then we never prune on it). */
-  private def transformedPathValue(
-      t: PartitionTransform, v: Any): Option[String] =
-    GraftScanBuilder.literalPathValue(t, v)
-
-  /** Derive partition constraints from SOURCE-column conjuncts: equality /
-    * IN map through the transform for every kind; ranges only for
-    * order-preserving transforms (day/month/truncate are monotone in the
-    * path's lexical order; bucket is not). Returns the filters that
-    * contributed (for PushedFilters visibility). */
-  private def deriveFromSource(filters: Array[Filter]): Seq[Filter] = {
-    val t = transform.getOrElse(return Nil)
-    val src = t.source
-    val used = scala.collection.mutable.ArrayBuffer.empty[Filter]
-    def tighten(lo: Option[String], hi: Option[String]): Unit =
-      partRange = (
-        (partRange._1.toSeq ++ lo).reduceOption((a, b) => if (a >= b) a else b),
-        (partRange._2.toSeq ++ hi).reduceOption((a, b) => if (a <= b) a else b))
-    def walk(f: Filter): Unit = f match {
-      case EqualTo(`src`, v) if v != null =>
-        transformedPathValue(t, v).foreach { pv =>
-          partValues = Some(partValues.fold(Set(pv))(_ intersect Set(pv)))
-          used += f
-        }
-      case In(`src`, vs) if vs != null && vs.nonEmpty && !vs.contains(null) =>
-        val pvs = vs.toSeq.map(transformedPathValue(t, _))
-        if (pvs.forall(_.isDefined)) { // one unmappable value ⇒ no pruning
-          val set = pvs.flatten.toSet
-          partValues = Some(partValues.fold(set)(_ intersect set))
-          used += f
-        }
-      case GreaterThan(`src`, v) if v != null && t.orderPreserving =>
-        transformedPathValue(t, v).foreach { pv =>
-          tighten(Some(pv), None); used += f }
-      case GreaterThanOrEqual(`src`, v) if v != null && t.orderPreserving =>
-        transformedPathValue(t, v).foreach { pv =>
-          tighten(Some(pv), None); used += f }
-      case LessThan(`src`, v) if v != null && t.orderPreserving =>
-        // conservative: the bound's own partition may hold earlier rows
-        transformedPathValue(t, v).foreach { pv =>
-          tighten(None, Some(pv)); used += f }
-      case LessThanOrEqual(`src`, v) if v != null && t.orderPreserving =>
-        transformedPathValue(t, v).foreach { pv =>
-          tighten(None, Some(pv)); used += f }
-      case And(l, r) => walk(l); walk(r)
-      case _ => ()
-    }
-    filters.foreach(walk)
-    used.toSeq
-  }
-
-  /** [[deriveFromSource]] replayed through a RETIRED transform (partition-
-    * spec evolution): an old-era file keeps pruning under its own era's
-    * path key. Returns (equality set, lo, hi) — all empty when the filters
-    * say nothing prunable about this transform. */
-  private def deriveForPrior(t: PartitionTransform, filters: Array[Filter])
-      : (Option[Set[String]], Option[String], Option[String]) = {
-    val src = t.source
-    var vals: Option[Set[String]] = None
-    var lo: Option[String] = None
-    var hi: Option[String] = None
-    def tighten(l: Option[String], h: Option[String]): Unit = {
-      lo = (lo.toSeq ++ l).reduceOption((a, b) => if (a >= b) a else b)
-      hi = (hi.toSeq ++ h).reduceOption((a, b) => if (a <= b) a else b)
-    }
-    def walk(f: Filter): Unit = f match {
-      case EqualTo(`src`, v) if v != null =>
-        transformedPathValue(t, v).foreach(pv =>
-          vals = Some(vals.fold(Set(pv))(_ intersect Set(pv))))
-      case In(`src`, vs) if vs != null && vs.nonEmpty && !vs.contains(null) =>
-        val pvs = vs.toSeq.map(transformedPathValue(t, _))
-        if (pvs.forall(_.isDefined)) {
-          val set = pvs.flatten.toSet
-          vals = Some(vals.fold(set)(_ intersect set))
-        }
-      case GreaterThan(`src`, v) if v != null && t.orderPreserving =>
-        transformedPathValue(t, v).foreach(pv => tighten(Some(pv), None))
-      case GreaterThanOrEqual(`src`, v) if v != null && t.orderPreserving =>
-        transformedPathValue(t, v).foreach(pv => tighten(Some(pv), None))
-      case LessThan(`src`, v) if v != null && t.orderPreserving =>
-        transformedPathValue(t, v).foreach(pv => tighten(None, Some(pv)))
-      case LessThanOrEqual(`src`, v) if v != null && t.orderPreserving =>
-        transformedPathValue(t, v).foreach(pv => tighten(None, Some(pv)))
-      case And(l, r) => walk(l); walk(r)
-      case _ => ()
-    }
-    filters.foreach(walk)
-    (vals, lo, hi)
-  }
-
-  /** Key-range bounds extracted from a filter (conjuncts flattened); each
-    * bound prunes files independently, so AND needs no driver-side value
-    * comparison. Strict bounds prune as inclusive — conservative, and the
-    * residual predicate restores exactness. */
-  private def keyBounds(f: Filter): Seq[(Filter, Option[Any], Option[Any])] = {
-    val k = m.primaryKey.head
-    f match {
-      case EqualTo(`k`, v) => Seq((f, Some(v), Some(v)))
-      case GreaterThan(`k`, v) => Seq((f, Some(v), None))
-      case GreaterThanOrEqual(`k`, v) => Seq((f, Some(v), None))
-      case LessThan(`k`, v) => Seq((f, None, Some(v)))
-      case LessThanOrEqual(`k`, v) => Seq((f, None, Some(v)))
-      case And(l, r) => keyBounds(l) ++ keyBounds(r)
-      case _ => Nil
-    }
-  }
-
-  /** A partition-path value renders unambiguously for these types only —
-    * anything else must not prune (a rendering mismatch against the hive
-    * directory name would SKIP files that hold matching rows). */
-  private def pathRenderable(v: Any): Boolean = v match {
-    case _: String | _: java.lang.Integer | _: java.lang.Long |
-         _: java.lang.Short | _: java.lang.Byte | _: java.lang.Boolean => true
-    case _ => false
-  }
-
-  /** Partition-column equality/IN values (hive-path form) from a conjunct —
-    * the manifest knows each file's partition value from its path, so these
-    * skip files with zero IO (the reference's `category` partition key
-    * access pattern, /root/reference/cdk.json:71). */
-  private def partitionSets(f: Filter): Seq[(Filter, Set[String])] = {
-    val pk = m.partitionKey.getOrElse(return Nil)
-    f match {
-      case EqualTo(`pk`, v) if v != null && pathRenderable(v) =>
-        Seq((f, Set(String.valueOf(v))))
-      case In(`pk`, vs) if vs != null && vs.nonEmpty &&
-        vs.forall(v => v != null && pathRenderable(v)) =>
-        Seq((f, vs.map(String.valueOf).toSet))
-      case And(l, r) => partitionSets(l) ++ partitionSets(r)
-      case _ => Nil
-    }
-  }
-
-  /** Range bounds on [[graft.storage.TableConfig.statsColumns]] — columns
-    * any manifest file carries extra stats for. Same conjunct shapes as
-    * [[keyBounds]]; numeric-ness comes from the declared type (the stat
-    * space [[graft.storage.CowTable.statValueString]] maps into). */
-  private def statColBounds(f: Filter)
-      : Seq[(Filter, String, Option[Any], Option[Any])] = {
-    def statted(c: String): Boolean = // extra is keyed by PHYSICAL name
-      c != m.primaryKey.head && (m.stattedPhys match {
-        // commit-time header summary: answers without forcing the list
-        case Some(sp) => sp.contains(m.physicalName(c))
-        case None => // pre-r18 manifest: the old full-list check
-          mfiles.full.exists(_.extra.contains(m.physicalName(c)))
-      })
-    f match {
-      case EqualTo(c, v) if statted(c) && v != null =>
-        Seq((f, c, Some(v), Some(v)))
-      case GreaterThan(c, v) if statted(c) && v != null =>
-        Seq((f, c, Some(v), None))
-      case GreaterThanOrEqual(c, v) if statted(c) && v != null =>
-        Seq((f, c, Some(v), None))
-      case LessThan(c, v) if statted(c) && v != null =>
-        Seq((f, c, None, Some(v)))
-      case LessThanOrEqual(c, v) if statted(c) && v != null =>
-        Seq((f, c, None, Some(v)))
-      case And(l, r) => statColBounds(l) ++ statColBounds(r)
-      case _ => Nil
-    }
-  }
-
   private def numericStat(c: String): Boolean =
-    fullSchema.find(_.name == c).map(_.dataType).exists {
-      case _: org.apache.spark.sql.types.NumericType => true
-      case org.apache.spark.sql.types.TimestampType => true
-      // NTZ stats live in wall-clock-micros space (statValueString maps a
-      // pushed LocalDateTime literal there) — numeric compare, never lexical
-      case org.apache.spark.sql.types.TimestampNTZType => true
-      case org.apache.spark.sql.types.DateType => true
-      case _ => false
-    }
+    fullSchema.find(_.name == c).map(_.dataType)
+      .exists(FilePredicate.numericStat)
 
   // true when a partition filter was CONSUMED (not returned as residual) —
   // the streaming path then fails loud on any file it cannot attribute to
   // a partition value instead of conservatively keeping it
   private var consumedPartFilter: Boolean = false
 
-  /** `c IS [NOT] NULL` conjuncts — pruning-only against per-file NULL
-    * counts (a file with zero nulls can't satisfy IS NULL; an all-null
-    * file can't satisfy IS NOT NULL). Always residual: exactness stays
-    * with Spark's re-check. Any column qualifies — files without a null
-    * count for it are simply never skipped. */
-  private def nullChecks(f: Filter): Seq[(String, Boolean)] = f match {
-    case org.apache.spark.sql.sources.IsNull(c) => Seq((c, true))
-    case IsNotNull(c) => Seq((c, false))
-    case And(l, r) => nullChecks(l) ++ nullChecks(r)
-    case _ => Nil
-  }
-
-  private var nullPrunes: Seq[(String, Boolean)] = Nil
-
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val usable = filters.flatMap(keyBounds)
-    val parts = filters.flatMap(partitionSets)
-    val stats = filters.flatMap(statColBounds)
-    nullPrunes = filters.flatMap(nullChecks).toSeq
-    val notNullPart: Seq[Filter] = m.partitionKey.toSeq.flatMap(pk =>
-      filters.collect { case f @ IsNotNull(`pk`) => f })
-    bounds = usable.map(b => (b._2, b._3)).toSeq
-    partValues = parts.map(_._2).reduceOption(_ intersect _)
-    partNotNull = notNullPart.nonEmpty
-    extraBounds = stats.map(s => (s._2, numericStat(s._2), s._3, s._4)).toSeq
-    // hidden partitioning: source-column predicates tighten partValues /
-    // partRange through the transform (pruning-only, never consumed)
-    val derived = deriveFromSource(filters)
-    priorPrunes = m.priorSpecs
-      .flatMap(sp => scala.util.Try(PartitionTransform.parse(sp)).toOption)
-      .flatMap { pt =>
-        val (vs, lo, hi) = deriveForPrior(pt, filters)
-        if (vs.isEmpty && lo.isEmpty && hi.isEmpty) None
-        else Some((pt.name, vs, lo, hi))
-      }
-    pushed = (usable.map(_._1) ++ parts.map(_._1) ++ stats.map(_._1) ++
-      notNullPart ++ derived).distinct
+    pred = FilePredicate(m, fullSchema, filters.toSeq)
     // EVERYTHING Spark offered, for row-group skipping: a conjunct the
     // MANIFEST can't use (equality on an undeclared column) still prunes
     // row groups via footer stats — per-file typed conversion declines
@@ -731,13 +509,12 @@ final class GraftScanBuilder(
     // aggregate pushdown; sentinel-dir pruning answers it exactly
     val consumable: Set[Filter] =
       if (streamOpts.readChangeFeed || !allPathed) Set.empty
-      else (filters.filter(f => partitionSets(f).exists(_._1 eq f)) ++
-        notNullPart).toSet
+      else filters.filter(pred.pathExact).toSet
     consumedPartFilter = consumable.nonEmpty
     filters.filterNot(consumable) // the rest stays residual (exactness)
   }
 
-  override def pushedFilters(): Array[Filter] = pushed
+  override def pushedFilters(): Array[Filter] = pred.pushed.toArray
 
   /** COMPLETE aggregate pushdown from the manifest — zero data IO,
     * O(files) driver metadata:
@@ -974,30 +751,14 @@ final class GraftScanBuilder(
     Some((StructType(gField ++ aggFields.toSeq), rows))
   }
 
-  /** The files an aggregation ranges over: all of them, minus partition
-    * pruning when a partition filter was CONSUMED in pushFilters (Spark
-    * only attempts aggregate pushdown when no residual filter remains,
-    * so reaching here with partValues set implies the consumption
-    * invariant: every file carries a path value). */
-  private def aggScopeFiles: Seq[FileEntry] = {
-    // partition-scoped metadata queries (`COUNT(*) WHERE pk = v`) plan
-    // from the PRUNED checkpoint read when one applies — the exact filter
-    // below restores precision over the conservative superset
-    val base = partValues match {
-      case None => mfiles.full
-      case Some(vs) =>
-        mfiles.pruned(graft.storage.CkptPred(partIn = Some(vs)))
-    }
-    val valued = partValues match {
-      case None => base
-      case Some(vs) => base.filter(e =>
-        GraftScan.pathPartValue(m.partitionKey, e).forall(vs.contains))
-    }
-    if (!partNotNull) valued
-    else valued.filterNot(e =>
-      GraftScan.pathPartValue(m.partitionKey, e)
-        .contains(GraftScan.NullPartitionName))
-  }
+  /** The files an aggregation ranges over. Spark attempts aggregate
+    * pushdown only when no residual filter remains, so every pushed filter
+    * is a CONSUMED partition filter (consumption invariant: every file
+    * carries a path value) and the evaluator answers it exactly. Partition-
+    * scoped metadata queries (`COUNT(*) WHERE pk = v`) plan from the
+    * PRUNED checkpoint read, a conservative superset the evaluator trims. */
+  private def aggScopeFiles: Seq[FileEntry] =
+    mfiles.pruned(pred.ckptPred).filter(pred.keeps)
 
   private var partialAgg: Option[PartialAgg.Plan] = None
 
@@ -1270,67 +1031,10 @@ final class GraftScanBuilder(
         case _ => ()
       }
     }
-    new GraftScan(root, m, required, bounds, partValues, columnar, streamOpts,
-      extraBounds, consumedPartFilter, partNotNull, partRange, nullPrunes,
-      dynamicKeep, topNPush, limitPush,
+    new GraftScan(root, m, required, pred, columnar, streamOpts,
+      consumedPartFilter, dynamicKeep, topNPush, limitPush,
       pushedSource = if (rowGroupFilter) allPushed else Nil,
-      priorPrunes = priorPrunes, filesSrc = mfiles)
-  }
-}
-
-object GraftScanBuilder {
-  /** Driver-side replay of a partition transform on a literal — the exact
-    * string the partition directory renders for that source value. Shared
-    * by scan-time pruning ([[GraftScanBuilder]]) and metadata-delete
-    * coverage ([[MetadataDelete]]). None = the runtime type isn't safely
-    * mappable (then callers never prune on it). */
-  private[sources] def literalPathValue(
-      t: PartitionTransform, v: Any): Option[String] = {
-    def utcDate(x: Any): Option[java.time.LocalDate] = x match {
-      case ts: java.sql.Timestamp =>
-        Some(ts.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate)
-      case ldt: java.time.LocalDateTime => Some(ldt.toLocalDate)
-      case i: java.time.Instant =>
-        Some(i.atZone(java.time.ZoneOffset.UTC).toLocalDate)
-      case d: java.sql.Date => Some(d.toLocalDate)
-      case ld: java.time.LocalDate => Some(ld)
-      case _ => None
-    }
-    def str(x: Any): Option[String] = x match {
-      case s: String => Some(s)
-      case u: org.apache.spark.unsafe.types.UTF8String => Some(u.toString)
-      case _: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
-           _: java.lang.Byte => Some(String.valueOf(x))
-      case _ => None
-    }
-    def utcDateTime(x: Any): Option[java.time.LocalDateTime] = x match {
-      case ts: java.sql.Timestamp =>
-        Some(ts.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDateTime)
-      case ldt: java.time.LocalDateTime => Some(ldt)
-      case i: java.time.Instant =>
-        Some(i.atZone(java.time.ZoneOffset.UTC).toLocalDateTime)
-      case d: java.sql.Date => Some(d.toLocalDate.atStartOfDay)
-      case ld: java.time.LocalDate => Some(ld.atStartOfDay)
-      case _ => None
-    }
-    t.kind match {
-      case "day" => utcDate(v).map(_.toString)
-      case "month" =>
-        utcDate(v).map(d => f"${d.getYear}%04d-${d.getMonthValue}%02d")
-      case "hour" =>
-        utcDateTime(v).map(dt => f"${dt.getYear}%04d-${dt.getMonthValue}%02d-" +
-          f"${dt.getDayOfMonth}%02d-${dt.getHour}%02d")
-      case "year" => utcDate(v).map(d => f"${d.getYear}%04d")
-      case "bucket" =>
-        str(v).map(s => PartitionTransform.bucketLocal(s, t.param).toString)
-      case "truncate" =>
-        // code-point-counted prefix — Spark's substring semantics
-        str(v).map { s =>
-          val cps = s.codePoints().toArray
-          new String(cps, 0, math.min(t.param, cps.length))
-        }
-      case _ => None
-    }
+      filesSrc = mfiles)
   }
 }
 
@@ -1454,7 +1158,7 @@ object GraftScan {
       if (e.extra.contains(t.phys)) e
       else pathPartValue(m.partitionKey, e)
         .filter(_ != NullPartitionName)
-        .flatMap(pv => MetadataDelete.sourceInterval(tr, srcType, pv))
+        .flatMap(pv => FilePredicate.sourceInterval(tr, srcType, pv))
         .fold(e) { case (lo, hi) =>
           e.copy(
             extra = e.extra +
@@ -1480,25 +1184,15 @@ object GraftScan {
 
 final class GraftScan(
     root: Path, m: CommitManifest, required: StructType,
-    bounds: Seq[(Option[Any], Option[Any])],
-    partValues: Option[Set[String]] = None,
+    /** The pushed filters, compiled ([[FilePredicate]]): files answering
+      * `No` are skipped. */
+    pred: FilePredicate,
     columnar: Boolean = true,
     streamOpts: GraftStreamOptions = GraftStreamOptions(),
-    extraBounds: Seq[(String, Boolean, Option[Any], Option[Any])] = Nil,
     /** A partition filter was consumed (not residual): pruning must stay
       * EXACT — the streaming path fails loud on an unattributable file
       * instead of keeping it. */
     exactPartPrune: Boolean = false,
-    /** `pk IS NOT NULL` pushed: sentinel-dir files prune (always exact —
-      * their rows ARE null for pk). */
-    partNotNull: Boolean = false,
-    /** Hidden-partitioning [lo, hi] on the transform partition's PATH value
-      * (lexical — chronological for day/month, prefix-monotone for
-      * truncate), derived from source-column ranges. Pruning-only. */
-    partRange: (Option[String], Option[String]) = (None, None),
-    /** `IS [NOT] NULL` conjuncts (column, isNull) — pruning-only against
-      * per-file null counts; files without a count are never skipped. */
-    nullPrunes: Seq[(String, Boolean)] = Nil,
     /** Late-bound candidate set (source-bounded MERGE prune): consulted at
       * partition-planning time, same soundness contract as runtime
       * filtering — only drops files the merge source cannot reach. */
@@ -1516,12 +1210,6 @@ final class GraftScan(
       * for parquet ROW-GROUP skipping (per-file typed conversion,
       * pruning-only; see [[ParquetRowGroupFilter]]). */
     pushedSource: Seq[Filter] = Nil,
-    /** Retired-era partition pruning (spec evolution): per retired
-      * transform, derived (equality set, lo, hi) on that era's path key.
-      * A file not of that era (no such path segment) is never touched. */
-    priorPrunes
-      : Seq[(String, Option[Set[String]], Option[String], Option[String])] =
-      Nil,
     /** Lazy file-list source — a cold pruned scan decodes only matching
       * checkpoint row groups ([[graft.storage.ManifestFiles]]). Null ⇒
       * wrap the manifest's resolved list (tests, row-level ops). */
@@ -1544,91 +1232,31 @@ final class GraftScan(
   private def pathPartValue(e: FileEntry): Option[String] =
     GraftScan.pathPartValue(m.partitionKey, e)
 
-  /** Planning-time pruning (pushed key bounds + partition values +
-    * statsColumns ranges); runtime filtering below may shrink it further
-    * before partitions are planned. */
+  /** Planning-time pruning (the compiled pushed filters); runtime
+    * filtering below may shrink it further before partitions are
+    * planned. */
   private val mfiles: graft.storage.ManifestFiles =
     Option(filesSrc).getOrElse(graft.storage.ManifestFiles.eager(m.files))
 
   @volatile private var kept: Seq[FileEntry] = {
     // COLD pruned planning: the base list comes from a predicate-driven
-    // checkpoint read when one applies — every entry it drops would fail
-    // the per-entry checks below anyway, so the result is byte-identical
-    // to folding the full list first. Change feeds read history, never a
-    // pruned snapshot.
+    // checkpoint read when one applies — every entry it drops answers `No`
+    // anyway, so the result is byte-identical to folding the full list
+    // first. Change feeds read history, never a pruned snapshot.
     val base =
       if (streamOpts.readChangeFeed) mfiles.full
-      else mfiles.pruned(graft.storage.CkptPred.fromScan(
-        bounds, partValues, partRange, partNotNull, m.keyNumeric))
-    val ranged = bounds.foldLeft(base) { (fs, b) =>
-      CowTable.filesInRange(m.copy(files = fs), b._1, b._2)
-    }
-    val parted0 = partValues match {
-      case None => ranged
-      // a null partition (__HIVE_DEFAULT_PARTITION__) never equals a
-      // non-null filter value, so pruning it is exact
-      case Some(vs) => ranged.filter(e =>
-        pathPartValue(e).forall(vs.contains))
-    }
-    val parted1 =
-      if (!partNotNull) parted0
-      else parted0.filterNot(e =>
-        pathPartValue(e).contains(GraftScan.NullPartitionName))
-    val parted = partRange match {
-      case (None, None) => parted1
-      case (lo, hi) => parted1.filter { e =>
-        pathPartValue(e) match {
-          case None => true // pathless file (old layout): must read
-          // a null-source row can satisfy no range predicate — exact skip
-          case Some(GraftScan.NullPartitionName) => false
-          case Some(v) => lo.forall(v >= _) && hi.forall(v <= _)
-        }
-      }
-    }
-    // retired-era pruning: each old-era file carries ITS era's path key —
-    // replaying the source predicate through that era's transform prunes
-    // it exactly like current-era files (partition-spec evolution)
-    val partedP = priorPrunes.foldLeft(parted) {
-      case (fs, (name, vs, lo, hi)) => fs.filter { e =>
-        GraftScan.pathPartValue(Some(name), e) match {
-          case None => true // not this era
-          // constraints exist for this era ⇒ a null-source file can't match
-          case Some(GraftScan.NullPartitionName) => false
-          case Some(v) => vs.forall(_.contains(v)) &&
-            lo.forall(v >= _) && hi.forall(v <= _)
-        }
-      }
-    }
-    // extra data-skipping stats: a file without stats for the column is
-    // kept (conservative); overlap checks use the declared type's space.
-    // FileEntry.extra is keyed by PHYSICAL name (rename-stable), filters
-    // arrive logical — translate.
-    val ranged2 =
-      extraBounds.foldLeft(partedP) { case (fs, (c, num, lo, hi)) =>
-        fs.filter(e => e.extra.get(m.physicalName(c))
-          .forall(r => CowTable.rangeOverlaps(r, lo, hi, num)))
-      }
-    // NULL-count skipping: zero nulls ⇒ IS NULL matches nothing; all null
-    // ⇒ IS NOT NULL matches nothing. Both stay valid under deletion
-    // vectors (deletions only remove rows — they cannot create a match).
-    val nulled = nullPrunes.foldLeft(ranged2) { case (fs, (c, isNull)) =>
-      val phys = m.physicalName(c)
-      fs.filter(e => e.nulls.get(phys) match {
-        case Some(n) if isNull => n > 0
-        case Some(n) => n < e.rows
-        case None => true // unknown: never skip
-      })
-    }
+      else mfiles.pruned(pred.ckptPred)
+    val matching = base.filter(pred.keeps)
     // TopN / LIMIT pruning runs LAST, over the final exact file set.
     // Hidden partitioning: files without footer stats for the sort column
     // borrow their partition-dir interval as bounds (prune decisions run
     // on enriched COPIES; the planned entries stay the originals).
-    val topped = topN.fold(nulled) { t =>
+    val topped = topN.fold(matching) { t =>
       val enriched =
-        if (t.viaTransform) GraftScan.withTransformBounds(m, nulled, t)
-        else nulled
+        if (t.viaTransform) GraftScan.withTransformBounds(m, matching, t)
+        else matching
       val keptPaths = TopNFilePrune.pruneTopN(enriched, t).map(_.path).toSet
-      nulled.filter(e => keptPaths(e.path))
+      matching.filter(e => keptPaths(e.path))
     }
     pushedLimit.fold(topped)(TopNFilePrune.pruneLimit(topped, _))
   }
@@ -1813,12 +1441,12 @@ final class GraftScan(
     * planning itself never pays it on a pruned cold scan. */
   override def description(): String =
     s"graft $root v${m.version} files=${kept.size}/${mfiles.full.size}" +
-      s" keyRangeFilters=${bounds.size}" +
-      s" partitionFilterValues=${partValues.fold(0)(_.size)}" +
-      s" statsColFilters=${extraBounds.size}" +
-      s" nullFilters=${nullPrunes.size}" +
-      (if (priorPrunes.nonEmpty)
-        s" priorEraFilters=${priorPrunes.size}" else "") +
+      s" keyRangeFilters=${pred.keyRangeFilters}" +
+      s" partitionFilterValues=${pred.partitionFilterValues}" +
+      s" statsColFilters=${pred.statsColFilters}" +
+      s" nullFilters=${pred.nullFilters}" +
+      (if (pred.priorEraFilters > 0)
+        s" priorEraFilters=${pred.priorEraFilters}" else "") +
       topN.fold("")(t => s" pushedTopN=${t.col} " +
         s"${if (t.desc) "DESC" else "ASC"} LIMIT ${t.limit}") +
       pushedLimit.fold("")(l => s" pushedLimit=$l") +
@@ -1879,14 +1507,13 @@ final class GraftScan(
   }
 
   /** Incremental micro-batch read over the commit log (see
-    * [[GraftMicroBatchStream]]). Pushed key bounds / partition values apply
-    * per batch; the checkpoint location is engine-managed (offsets only —
+    * [[GraftMicroBatchStream]]). The compiled pushed filters prune each
+    * batch's files; the checkpoint location is engine-managed (offsets only —
     * the table's own manifests are the source of truth). */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new GraftMicroBatchStream(
-      root, required, columnar, bounds, partValues, streamOpts,
-      exactPartPrune, partNotNull)
+      root, required, columnar, pred, streamOpts, exactPartPrune)
 
   /** The file set as of PLANNING time. Key-grouped planning must derive its
     * partition-VALUE list from this snapshot, not from the runtime-pruned

@@ -79,23 +79,22 @@ final case class GraftOffset(version: Int) extends Offset {
   *
   * Scale: planning a batch reads only the (start, end] manifests — O(files)
   * driver metadata, no data IO — and each batch's files go through the same
-  * columnar reader as a batch scan. Partition/key-bound file skipping is
-  * wired per batch but today only reachable through the API: Spark's
-  * V2ScanRelationPushDown matches batch relations only, so a `readStream`
-  * filter runs as a residual (correct, unpruned) until streaming pushdown
-  * lands upstream. Vacuumed history fails loud (offset gap), never silently
-  * skips.
+  * columnar reader as a batch scan. The scan's per-file evaluator
+  * ([[FilePredicate]]) prunes each batch, but today only through the API:
+  * Spark's V2ScanRelationPushDown matches batch relations only, so a
+  * `readStream` filter runs as a residual (correct, unpruned) until
+  * streaming pushdown lands upstream. Vacuumed history fails loud (offset
+  * gap), never silently skips.
   */
 final class GraftMicroBatchStream(
     root: Path, required: StructType, columnar: Boolean,
-    bounds: Seq[(Option[Any], Option[Any])],
-    partValues: Option[Set[String]],
+    /** The scan's compiled pushed filters: batch files answering `No`
+      * are skipped. */
+    pred: FilePredicate,
     opts: GraftStreamOptions,
     /** The partition filter was CONSUMED at plan time (no residual): a
       * batch file without a path-borne value must FAIL, not be kept. */
-    exactPartPrune: Boolean = false,
-    /** `pk IS NOT NULL` pushed: sentinel-dir files prune (always exact). */
-    partNotNull: Boolean = false)
+    exactPartPrune: Boolean = false)
   extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   /** AvailableNow: the end version is pinned ONCE at stream start, so the
@@ -213,32 +212,21 @@ final class GraftMicroBatchStream(
               "to stream added files anyway (downstream must dedup), or " +
               "read mutations as a change feed (CowTable.readChangeFeed).")
         val added = m.files.filterNot(e => parentPaths.contains(e.path))
-        // same per-file skipping as the batch scan: key bounds via this
-        // commit's stat space, partition values via the hive path
-        val ranged = bounds.foldLeft(added) { (fs, b) =>
-          CowTable.filesInRange(m.copy(files = fs), b._1, b._2)
+        // the batch scan's per-file skipping, file by file
+        val kept = added.filter { e =>
+          if (exactPartPrune && pred.partitionValue(e).isEmpty)
+            // the plan consumed the partition filter (nothing left for
+            // Spark to re-apply) — an unattributable file (e.g. the
+            // partition spec evolved mid-stream) cannot be silently kept
+            // OR dropped; only a restart replans correctly
+            throw new IllegalStateException(
+              s"graft stream: commit v$v of $root added file ${e.path}" +
+                " without a path-borne partition value while the " +
+                "stream's partition filter was pushed exactly — " +
+                "restart the stream so the filter re-plans against " +
+                "the current partition spec")
+          pred.keeps(e)
         }
-        val kept =
-          if (partValues.isEmpty && !partNotNull) ranged
-          else ranged.filter { e =>
-            GraftScan.pathPartValue(m.partitionKey, e) match {
-              case Some(value) =>
-                partValues.forall(_.contains(value)) &&
-                  !(partNotNull && value == GraftScan.NullPartitionName)
-              case None if exactPartPrune =>
-                // the plan consumed the partition filter (nothing left for
-                // Spark to re-apply) — an unattributable file (e.g. the
-                // partition spec evolved mid-stream) cannot be silently
-                // kept OR dropped; only a restart replans correctly
-                throw new IllegalStateException(
-                  s"graft stream: commit v$v of $root added file ${e.path}" +
-                    " without a path-borne partition value while the " +
-                    "stream's partition filter was pushed exactly — " +
-                    "restart the stream so the filter re-plans against " +
-                    "the current partition spec")
-              case None => true // filter is residual: conservative keep
-            }
-          }
         kept.map(m -> _)
       }
     }

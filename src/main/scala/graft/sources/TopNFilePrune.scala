@@ -20,7 +20,7 @@ final case class GraftTopN(
       * synthetic bounds from their partition-dir interval — every row of a
       * `ts_day=d` file has a non-null ts inside day `d`, so the interval
       * endpoints are valid bounds and the null count is exactly zero
-      * ([[MetadataDelete.sourceInterval]] supplies the same evidence the
+      * ([[FilePredicate.sourceInterval]] supplies the same evidence the
       * metadata-delete decider trusts). */
     viaTransform: Boolean = false,
     /** Declared type of the sort column — selects the interval space

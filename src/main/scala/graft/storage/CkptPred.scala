@@ -72,7 +72,8 @@ private[graft] object StatOrd {
   * None ⇒ no constraint; a block is skipped only when its footer stats
   * PROVE no entry can match. Composing with the driver-side per-entry
   * prune yields exactly the full-fold prune result: a skipped block's
-  * entries all fail the same per-entry checks. */
+  * entries all fail the same per-entry checks. The scan derives one
+  * from its compiled filters ([[graft.sources.FilePredicate.ckptPred]]). */
 private[graft] final case class CkptPred(
     /** Partition-value equality set (exact byte equality — safe for any
       * values). */
@@ -90,39 +91,6 @@ private[graft] final case class CkptPred(
   def isEmpty: Boolean =
     partIn.isEmpty && partLo.isEmpty && partHi.isEmpty && !dropNullPart &&
       keyLoOrd.isEmpty && keyHiOrd.isEmpty
-}
-
-private[graft] object CkptPred {
-  /** Build from the scan's pushed pruning state (raw filter values).
-    * Non-ASCII range bounds and unencodable key values degrade to
-    * no-constraint, never to a wrong skip. */
-  def fromScan(
-      bounds: Seq[(Option[Any], Option[Any])],
-      partValues: Option[Set[String]],
-      partRange: (Option[String], Option[String]),
-      partNotNull: Boolean,
-      keyNumeric: Boolean): CkptPred = {
-    // conjunct key bounds intersect in ord space: lo = max(los), hi = min(his)
-    val los = bounds.flatMap(_._1).flatMap(v =>
-      Try(CowTable.statValueString(v)).toOption)
-      .flatMap(StatOrd.encodeKey(_, keyNumeric))
-      .filter(StatOrd.isAscii)
-    val his = bounds.flatMap(_._2).flatMap(v =>
-      Try(CowTable.statValueString(v)).toOption)
-      .flatMap(StatOrd.encodeKey(_, keyNumeric))
-      .filter(StatOrd.isAscii)
-    CkptPred(
-      partIn = partValues,
-      partLo = partRange._1.filter(StatOrd.isAscii),
-      partHi = partRange._2.filter(StatOrd.isAscii),
-      dropNullPart = partNotNull,
-      keyLoOrd = los.reduceOption((a, b) =>
-        if (StatOrd.byteCompare(StatOrd.bytes(a), StatOrd.bytes(b)) >= 0) a
-        else b),
-      keyHiOrd = his.reduceOption((a, b) =>
-        if (StatOrd.byteCompare(StatOrd.bytes(a), StatOrd.bytes(b)) <= 0) a
-        else b))
-  }
 }
 
 /** LAZY file-list access for scan planning. `full` is the exact folded

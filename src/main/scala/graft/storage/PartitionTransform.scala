@@ -49,10 +49,10 @@ final case class PartitionTransform(
 
   /** The generation expression over the source column. All time
     * transforms render UTC-fixed path values (sessions run UTC; the
-    * driver-side replays in [[graft.sources.GraftScanBuilder]] and
-    * [[graft.sources.MetadataDelete]] assume the same) — `hour` and
-    * `year` render zero-padded strings so the path's LEXICAL order is
-    * the source's temporal order (what range pruning relies on). */
+    * planning-time replay in [[graft.sources.FilePredicate]] assumes the
+    * same) — `hour` and `year` render zero-padded strings so the path's
+    * LEXICAL order is the source's temporal order (what range pruning
+    * relies on). */
   def expr: Column = kind match {
     case "day" => to_date(col(source))
     case "month" => date_format(col(source), "yyyy-MM")
@@ -73,10 +73,18 @@ final case class PartitionTransform(
     case "truncate" => substring(value.cast("string"), 1, param)
   }
 
-  /** Range predicates on the source survive the transform only for
-    * ORDER-PRESERVING transforms (day/month/hour/year/truncate-on-string
-    * are monotone in the path's lexical order; bucket is not). */
-  def orderPreserving: Boolean = kind != "bucket"
+  /** Range predicates on the source survive the transform only when the
+    * path value is monotone in the source's order: day/month/hour/year
+    * (zero-padded, chronological) and truncate over a STRING source
+    * (prefixes compare in UTF-8 byte order, Spark's string order). A
+    * truncated INT/LONG renders a decimal string, whose lexical order is
+    * not numeric order ("10" < "9"); bucket hashes. */
+  def orderPreserving(srcType: org.apache.spark.sql.types.DataType): Boolean =
+    kind match {
+      case "bucket" => false
+      case "truncate" => srcType == org.apache.spark.sql.types.StringType
+      case _ => true
+    }
 }
 
 object PartitionTransform {

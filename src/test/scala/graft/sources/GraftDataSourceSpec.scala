@@ -591,7 +591,8 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(m.files.size == 2, m.files.map(_.path))
 
     def freshScan() = new GraftScan(
-      java.nio.file.Paths.get(dir + "/t"), m, t.read().schema, Nil)
+      java.nio.file.Paths.get(dir + "/t"), m, t.read().schema,
+      FilePredicate(m, t.read().schema, Nil))
     def partsOf(s: GraftScan) = s.planInputPartitions().length
 
     // key IN (3): only files whose [min,max] admit 3 survive

@@ -80,7 +80,8 @@ class GraftSpjSpec extends SparkSpec {
         TableConfig("a", Seq("id"), partitionKey = Some("seg")))
       val m = t.manifest(t.currentVersion)
       val scan = new GraftScan(
-        java.nio.file.Paths.get(dir + "/a"), m, t.read().schema, Nil)
+        java.nio.file.Paths.get(dir + "/a"), m, t.read().schema,
+        FilePredicate(m, t.read().schema, Nil))
       val advertised = scan.outputPartitioning() match {
         case k: org.apache.spark.sql.connector.read.partitioning
           .KeyGroupedPartitioning => k.numPartitions()

@@ -335,12 +335,75 @@ class GraftStreamSourceSpec extends SparkSpec {
     t.upsert(Seq((3L, "A", 3.0), (4L, "B", 4.0)).toDF("id", "seg", "v"))
     val stream = new GraftMicroBatchStream(
       java.nio.file.Paths.get(dir + "/src"),
-      t.read().schema, columnar = true, bounds = Nil,
-      partValues = Some(Set("A")), GraftStreamOptions())
+      t.read().schema, columnar = true,
+      pred = FilePredicate(t.manifest(t.currentVersion), t.read().schema,
+        Seq(org.apache.spark.sql.sources.EqualTo("seg", "A"))),
+      GraftStreamOptions())
     val parts = stream.planInputPartitions(GraftOffset(0), GraftOffset(2))
     // hive layout: one file per seg per commit; only seg=A files planned
     assert(parts.length == 2, parts.mkString(", "))
     assert(parts.collect { case p: GraftInputPartition => p }
       .forall(_.partitionValues.get("seg").contains("A")))
+  }
+
+  test("micro-batches prune with the full per-file evaluator; a consumed " +
+      "partition filter still fails loud on a pathless file") {
+    import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThanOrEqual, LessThan}
+    val dir = tmpDir("gstream")
+    val root = dir + "/src"
+    val t = CowTable(spark, root, TableConfig("t", Seq("id"),
+      partitionSpec = Some("day(ts)"), statsColumns = Seq("v")))
+    // four append commits, one day each: day d holds v in (10d, 10d+20]
+    def day(d: Int) = (1 to 20).map(i => (d * 100L + i,
+      java.sql.Timestamp.valueOf(f"2024-05-$d%02d 10:00:00"), d * 10.0 + i))
+      .toDF("id", "ts", "v")
+    t.create(day(1)); (2 to 4).foreach(d => t.upsert(day(d)))
+    def planned(filters: Filter*): Seq[String] = {
+      val m = t.manifest(t.currentVersion)
+      val b = new GraftScanBuilder(java.nio.file.Paths.get(root), m,
+        CowTable.structFromJson(m.schemaJson))
+      b.pushFilters(filters.toArray)
+      b.build().toMicroBatchStream(dir + "/ckpt")
+        .planInputPartitions(GraftOffset(0), GraftOffset(t.currentVersion))
+        .collect { case p: GraftInputPartition => p.filePath }.toSeq
+    }
+    // transform source (day 1 out) AND statsColumns range (day 4 out)
+    val filters = Seq[Filter](
+      GreaterThanOrEqual("ts",
+        java.sql.Timestamp.valueOf("2024-05-02 00:00:00")),
+      LessThan("v", 35.0))
+    val all = planned()
+    val kept = planned(filters: _*)
+    assert(kept.size < all.size && kept.nonEmpty, (kept, all))
+    val cond = col("ts") >= lit("2024-05-02 00:00:00").cast("timestamp") &&
+      col("v") < 35.0
+    val got = spark.read.parquet(kept: _*).filter(cond).select("id")
+      .as[Long].collect().toSet
+    val want = spark.read.format("graft").load(root).filter(cond)
+      .select("id").as[Long].collect().toSet
+    assert(got == want && want.nonEmpty, (got, want))
+
+    // a consumed `seg = 'A'` (every file pathed at plan time), then the
+    // spec evolves: the next batch's file has no seg= value to check
+    val root2 = dir + "/src2"
+    val t2 = CowTable(spark, root2,
+      TableConfig("t2", Seq("id"), partitionKey = Some("seg")))
+    t2.create(Seq((1L, "A", java.sql.Timestamp.valueOf("2024-05-01 10:00:00")))
+      .toDF("id", "seg", "ts"))
+    val s2 = {
+      val m2 = t2.manifest(t2.currentVersion)
+      val b = new GraftScanBuilder(java.nio.file.Paths.get(root2), m2,
+        CowTable.structFromJson(m2.schemaJson))
+      val residual = b.pushFilters(Array(EqualTo("seg", "A")))
+      assert(residual.isEmpty, "the partition filter must be consumed")
+      b.build().toMicroBatchStream(dir + "/ckpt2")
+    }
+    val t2e = t2.alterPartitionSpec(Some("day(ts)"))
+    t2e.upsert(Seq((2L, "A", java.sql.Timestamp.valueOf(
+      "2024-05-02 10:00:00"))).toDF("id", "seg", "ts"))
+    val e = intercept[IllegalStateException](
+      s2.planInputPartitions(GraftOffset(0), GraftOffset(t2e.currentVersion)))
+    assert(e.getMessage.contains("without a path-borne partition value"),
+      e.getMessage)
   }
 }

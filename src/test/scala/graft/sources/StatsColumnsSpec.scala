@@ -39,10 +39,9 @@ class StatsColumnsSpec extends SparkSpec {
     assert(scan.count() == 100L)
     val plan = scan.queryExecution.executedPlan.toString
     assert(plan.contains("statsColFilters=2"), plan)
-    // day-3's file plus its neighbor: the strict `<` bound prunes as
-    // inclusive (conservative by design) and day-4's min sits exactly on
-    // the boundary — the residual filter restores exactness
-    assert(plan.contains("files=2/4"), plan)
+    // day-3's file only: day-4's min sits exactly on the strict `<`
+    // bound, which stays strict — no day-4 row can match
+    assert(plan.contains("files=1/4"), plan)
   }
 
   test("string column equality skips via UTF8 footer stats") {

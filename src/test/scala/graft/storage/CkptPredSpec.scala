@@ -134,11 +134,24 @@ class CkptPredSpec extends AnyFunSuite {
   }
 
   test("CkptPred.fromScan: conjunct bounds intersect; non-ASCII degrades") {
-    val p = CkptPred.fromScan(
-      bounds = Seq((Some(5L), None), (Some(9L), Some(100L)), (None, Some(50L))),
-      partValues = Some(Set("a")),
-      partRange = (Some("2024-01-01"), Some("café")),
-      partNotNull = true, keyNumeric = true)
+    import org.apache.spark.sql.sources._
+    import org.apache.spark.sql.types._
+    // a truncate(10, s) table keyed on a LONG id: the partition range comes
+    // from source-column bounds, the value set and null check from the
+    // generated column
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("s", StringType), StructField("s_truncate", StringType)))
+    val m = CommitManifest(version = 1, parent = 0, schemaJson = schema.json,
+      primaryKey = Seq("id"), partitionKey = Some("s_truncate"),
+      keyNumeric = true, rowCount = 0L, files = Nil,
+      partitionSpec = Some("truncate(10,s)"))
+    val p = graft.sources.FilePredicate(m, schema, Seq(
+      GreaterThan("id", 5L),
+      And(GreaterThanOrEqual("id", 9L), LessThanOrEqual("id", 100L)),
+      LessThanOrEqual("id", 50L),
+      EqualTo("s_truncate", "a"),
+      GreaterThanOrEqual("s", "2024-01-01"), LessThanOrEqual("s", "café"),
+      IsNotNull("s_truncate"))).ckptPred
     assert(p.partIn.contains(Set("a")))
     assert(p.partLo.contains("2024-01-01"))
     assert(p.partHi.isEmpty, "non-ASCII bound must not participate")

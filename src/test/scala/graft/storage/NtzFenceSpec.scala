@@ -74,8 +74,9 @@ class NtzFenceSpec extends SparkSpec {
       .filter($"ts" >= "2024-01-03 00:00:00" && $"ts" < "2024-01-04 00:00:00")
     assert(scan.count() == 100L) // exactness first: never a silent 0
     val plan = scan.queryExecution.executedPlan.toString
-    // day-3's file plus the boundary neighbor (strict '<' prunes inclusive)
-    assert(plan.contains("files=2/4"), plan)
+    // day-3's file only: the boundary neighbor's min sits exactly on the
+    // strict '<' bound, which stays strict
+    assert(plan.contains("files=1/4"), plan)
   }
 
   test("NTZ primary key: upsert prunes untouched files, CDF stays exact") {

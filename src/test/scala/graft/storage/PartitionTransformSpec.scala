@@ -137,12 +137,12 @@ class PartitionTransformSpec extends SparkSpec {
     assert(eq.queryExecution.executedPlan.toString
       .contains(s"files=1/$nFiles"))
     assert(eq.select("id").as[Long].collect().toSeq == Seq(2L))
-    // bounded range prunes both ends (upper day kept conservatively —
-    // `< 2024-03-04 00:00` still maps to day <= 2024-03-04)
+    // bounded range prunes both ends exactly: day 2024-03-04's interval
+    // starts at the strict `< 2024-03-04 00:00` bound, so it can't match
     val mid = spark.read.format("graft").load(dir)
       .filter($"ts" >= "2024-03-02 00:00:00" && $"ts" < "2024-03-04 00:00:00")
     assert(mid.queryExecution.executedPlan.toString
-      .contains(s"files=3/$nFiles"))
+      .contains(s"files=2/$nFiles"))
     assert(mid.select("id").as[Long].collect().toSet == Set(2L, 3L))
   }
 
