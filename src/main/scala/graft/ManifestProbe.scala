@@ -52,41 +52,43 @@ object ManifestProbe {
     java.nio.file.Files.writeString(jsonPath, Serialization.write(m))
     val pqPath = out.resolve("full.files.parquet")
     java.nio.file.Files.deleteIfExists(pqPath)
-    ManifestCheckpoint.write(pqPath, files,
+    val crc = ManifestCheckpoint.write(pqPath, files,
       partitionKey = Some("cat"), keyNumeric = true)
 
     def best(f: => Int): Double = (1 to 3).map(_ => time(f)).min
     val tJson = best(Serialization.read[CommitManifest](
       java.nio.file.Files.readString(jsonPath)).files.size)
-    val tPq = best(ManifestCheckpoint.read(pqPath).size)
+    val tPq = best(ManifestCheckpoint.read(pqPath, crc).size)
     // the checkpoint is SORTED by (partition, keyMin) — content equality
-    require(ManifestCheckpoint.read(pqPath).sortBy(_.path) ==
+    require(ManifestCheckpoint.read(pqPath, crc).sortBy(_.path) ==
       files.sortBy(_.path), "round-trip drift")
     // PRUNED COLD PLAN (round 18, Iceberg manifest-list analog): a
     // one-partition predicate selects checkpoint row groups from footer
     // stats — only matching entries decode
     val partPred = graft.storage.CkptPred(partIn = Some(Set("c07")))
-    val partEntries = ManifestCheckpoint.readPruned(pqPath, partPred)
+    val partEntries = ManifestCheckpoint.readPruned(pqPath, crc, partPred)
     require(partEntries.count(_.path.contains("cat=c07/")) == n / 32 &&
       partEntries.forall(e =>
         files.sortBy(_.path).contains(e)), "pruned part read drift")
-    val tPart = best(ManifestCheckpoint.readPruned(pqPath, partPred).size)
+    val tPart = best(ManifestCheckpoint.readPruned(pqPath, crc, partPred).size)
     // a leading-key range predicate (keys ascend with i: [i*1000, i*1000+999])
     // — probed on an UNPARTITIONED checkpoint (sort is partition-major, so
     // a partitioned table's key pruning is per-partition; key-clustered
     // unpartitioned tables are where pure key bounds shine)
     val pqKeyPath = out.resolve("full_keys.files.parquet")
     java.nio.file.Files.deleteIfExists(pqKeyPath)
-    ManifestCheckpoint.write(pqKeyPath, files,
+    val crcKey = ManifestCheckpoint.write(pqKeyPath, files,
       partitionKey = None, keyNumeric = true)
     val keyPred = graft.storage.CkptPred(
       keyLoOrd = graft.storage.StatOrd.encodeNumeric("41000000"),
       keyHiOrd = graft.storage.StatOrd.encodeNumeric("41999999"))
-    val keyEntries = ManifestCheckpoint.readPruned(pqKeyPath, keyPred)
+    val keyEntries =
+      ManifestCheckpoint.readPruned(pqKeyPath, crcKey, keyPred)
     require((41000 to 41999).forall(i =>
       keyEntries.exists(_.path.endsWith(f"part-$i%06d.parquet"))),
       "pruned key read lost matching entries")
-    val tKey = best(ManifestCheckpoint.readPruned(pqKeyPath, keyPred).size)
+    val tKey =
+      best(ManifestCheckpoint.readPruned(pqKeyPath, crcKey, keyPred).size)
     println(s"""{"probe":"manifest_encoding","files":$n,""" +
       s""""json_bytes":${java.nio.file.Files.size(jsonPath)},""" +
       s""""parquet_bytes":${java.nio.file.Files.size(pqPath)},""" +

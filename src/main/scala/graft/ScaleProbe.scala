@@ -197,10 +197,8 @@ object ScaleProbe {
 
       // COLD manifestAt (round 17): evict the driver-side fold cache and
       // time the first load of the CURRENT version — the per-session
-      // planning cost a fresh driver pays. Past
-      // graft.parquetCheckpointMinFiles the nearest full checkpoint is
-      // parquet-encoded (one row per FileEntry) instead of a monolithic
-      // JSON array; the x8/x32 scales cross that threshold.
+      // planning cost a fresh driver pays: the nearest parquet checkpoint
+      // (one row per FileEntry) plus the JSON deltas after it.
       val vCur = t.currentVersion
       CowTable.evictManifestCache()
       val (_, tColdManifest) = time { t.manifest(vCur) }

@@ -25,7 +25,7 @@ object LakeJob {
     * initial-load directory if absent, skip if present (the reference's
     * catalog probe, src/hudi/hudi-initial-load.py:114). Registers each table
     * BOTH as a session temp view and in the durable lake catalog
-    * (`<lakeDir>/_catalog.json`, [[graft.storage.LakeRegistry]]) — the
+    * (`<lakeDir>/_catalog.vNNNNN.json`, [[graft.storage.LakeRegistry]]) — the
     * persistent half is what the reference's hive-sync gives it
     * (src/hudi/hudi-initial-load.py:76-81): a FRESH session attaches with
     * `LakeRegistry.attach(spark, lakeDir)` and needs no config file.

@@ -149,9 +149,9 @@ object SqlSurfaceQueries {
 
     // Durable lake catalog (the reference's hive-sync/Glue persistence,
     // src/hudi/hudi-initial-load.py:76-81): tables are created + registered
-    // in <lake>/_catalog.json by one session, then a FRESH session — new
-    // temp-view catalog, no config object in scope — attaches the lake by
-    // directory alone and answers SQL over the registered views.
+    // in <lake>/_catalog.vNNNNN.json by one session, then a FRESH session —
+    // new temp-view catalog, no config object in scope — attaches the lake
+    // by directory alone and answers SQL over the registered views.
     Q("q81_catalog_attach",
       """SELECT n.n_name AS nation, count(*) AS n_cust,
         |  CAST(sum(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal

@@ -150,15 +150,15 @@ final case class CommitManifest(
     partitionSpec: Option[String] = None,
     /** DELTA-ENCODED manifest (Delta-Lake log + checkpoint architecture):
       * when present, [[files]] holds only this commit's ADDED/CHANGED
-      * entries and this field the parent-relative REMOVED/CHANGED paths —
+      * entries and this field the parent-relative REMOVED/CHANGED paths
+      * (written even when empty, so every delta's JSON carries the key) —
       * the full file list is reconstructed by folding onto version-1
-      * ([[CowTable.manifestAt]]), with a FULL checkpoint manifest written
-      * every [[CowTable.ManifestCheckpointEvery]] commits to bound the
-      * fold chain. What keeps commit METADATA O(changed files): a 100 TB
-      * table with 100k files and a 100-row hourly CDC batch writes a
-      * ~1-entry delta per commit, not a 100k-entry snapshot. Absent ⇔ the
-      * manifest is full (pre-upgrade manifests, checkpoints, v1). Readers
-      * never see this field set — manifestAt folds before returning. */
+      * ([[CowTable.manifestAt]]) down to the nearest checkpoint. What keeps
+      * commit METADATA O(changed files): a 100 TB table with 100k files and
+      * a 100-row hourly CDC batch writes a ~1-entry delta per commit, not a
+      * 100k-entry snapshot. Every stored manifest carries exactly one of
+      * this field and [[filesParquet]]. Readers never see this field set —
+      * manifestAt folds before returning. */
     deltaRemoved: Option[Seq[String]] = None,
     /** Canonical spec strings of RETIRED partition transforms (partition-
       * spec evolution history, Iceberg REPLACE PARTITION FIELD): files
@@ -171,12 +171,15 @@ final case class CommitManifest(
     /** PARQUET CHECKPOINT (Delta parquet-checkpoint analog): when present,
       * [[files]] is empty in the stored JSON and the full [[FileEntry]]
       * list lives as one parquet row per file at this `_manifests/`-
-      * relative path ([[ManifestCheckpoint]]) — cold planning on a
-      * 10⁵-file table reads a compressed columnar file instead of parsing
-      * a monolithic JSON array on the driver. Written only for FULL
-      * manifests past `graft.parquetCheckpointMinFiles`; readers never see
-      * it set ([[CowTable.manifestAt]] resolves before returning). */
+      * relative path ([[ManifestCheckpoint]]). Written for v1, every
+      * [[CowTable.ManifestCheckpointEvery]]-th version and any commit whose
+      * delta would be no smaller than the full list, at every table size;
+      * readers never see it set ([[CowTable.manifestAt]] resolves before
+      * returning). */
     filesParquet: Option[String] = None,
+    /** CRC32C of the whole [[filesParquet]] sidecar; every read verifies
+      * it before decoding. */
+    filesParquetCrc32c: Option[Long] = None,
     /** HEADER SUMMARIES of the full folded file list, computed at commit
       * time so scan planning can answer whole-list questions WITHOUT
       * materializing the list (the prerequisite for predicate-pruned cold
@@ -3006,48 +3009,44 @@ final class CowTable private[storage] (
         m0.files.iterator.flatMap(_.extra.keysIterator).distinct.toSeq.sorted))
     val vfile = manifestDir.resolve(f"v${m.version}%05d.json")
     // DELTA-ENCODE against version-1 unless this version is a CHECKPOINT
-    // (every ManifestCheckpointEvery-th commit, v1, or a missing parent):
-    // adds = entries absent-or-changed vs the parent, removed = parent
-    // paths absent-or-changed here. Folding is exact because FileEntry is
-    // a value (structural equality); a delta no smaller than the full list
-    // is written full (nothing to save). Keeps commit metadata O(changed
-    // files) — the Delta log + checkpoint discipline.
-    val toWrite =
+    // (v1 or every ManifestCheckpointEvery-th commit): adds = entries
+    // absent-or-changed vs the parent, removed = parent paths absent-or-
+    // changed here. Folding is exact because FileEntry is a value
+    // (structural equality); a delta no smaller than the full list is a
+    // checkpoint instead (nothing to save). Keeps commit metadata
+    // O(changed files) — the Delta log + checkpoint discipline.
+    val delta =
       if (m.version == 1 ||
-        m.version % CowTable.ManifestCheckpointEvery == 0) m
-      else Try(manifest(m.version - 1)).toOption match {
-        case None => m
-        case Some(prev) =>
-          val prevByPath = prev.files.map(e => e.path -> e).toMap
-          val curByPath = m.files.map(e => e.path -> e).toMap
-          val adds = m.files.filter(e => !prevByPath.get(e.path).contains(e))
-          val removed = prev.files.map(_.path)
-            .filter(p => !curByPath.get(p).contains(prevByPath(p)))
-          if (adds.size + removed.size >= m.files.size) m
-          else m.copy(files = adds, deltaRemoved = Some(removed))
+        m.version % CowTable.ManifestCheckpointEvery == 0) None
+      else {
+        val prev = manifest(m.version - 1)
+        val prevByPath = prev.files.map(e => e.path -> e).toMap
+        val curByPath = m.files.map(e => e.path -> e).toMap
+        val adds = m.files.filter(e => !prevByPath.get(e.path).contains(e))
+        val removed = prev.files.map(_.path)
+          .filter(p => !curByPath.get(p).contains(prevByPath(p)))
+        if (adds.size + removed.size >= m.files.size) None
+        else Some(m.copy(files = adds, deltaRemoved = Some(removed)))
       }
-    // PARQUET CHECKPOINT: a FULL manifest of a big table externalizes its
-    // file list as one parquet row per FileEntry (ManifestCheckpoint) —
-    // the uuid name keeps racing writers' sidecars distinct, and it is
-    // fully written BEFORE the CAS link below publishes the version that
-    // references it (appears complete or not at all). The CAS loser's
-    // sidecar is deleted on the spot.
-    val parquetMin = Try(spark.conf
-      .get("graft.parquetCheckpointMinFiles", "512").toInt).getOrElse(512)
-    val (jsonBody, sidecar) =
-      if (toWrite.deltaRemoved.isEmpty && toWrite.files.size >= parquetMin) {
-        val rel = f"v${m.version}%05d-" +
-          java.util.UUID.randomUUID + ManifestCheckpoint.Suffix
-        ManifestCheckpoint.write(manifestDir.resolve(rel), toWrite.files,
-          partitionKey = m.partitionKey, keyNumeric = m.keyNumeric)
-        (toWrite.copy(files = Nil, filesParquet = Some(rel)), Some(rel))
-      } else (toWrite, None)
+    // PARQUET CHECKPOINT: the full file list as one parquet row per
+    // FileEntry (ManifestCheckpoint) — the uuid name keeps racing writers'
+    // sidecars distinct, and it is fully written BEFORE the CAS link below
+    // publishes the version that references it (appears complete or not
+    // at all). The CAS loser's sidecar is deleted on the spot.
+    val jsonBody = delta.getOrElse {
+      val rel = f"v${m.version}%05d-" +
+        java.util.UUID.randomUUID + ManifestCheckpoint.Suffix
+      val crc = ManifestCheckpoint.write(manifestDir.resolve(rel), m.files,
+        partitionKey = m.partitionKey, keyNumeric = m.keyNumeric)
+      m.copy(files = Nil, filesParquet = Some(rel),
+        filesParquetCrc32c = Some(crc))
+    }
     val tmp = Files.createTempFile(manifestDir, f"_tmp_v${m.version}%05d", ".json")
     Files.writeString(tmp, Serialization.write(jsonBody))
     try Files.createLink(vfile, tmp)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
-        sidecar.foreach(rel =>
+        jsonBody.filesParquet.foreach(rel =>
           Files.deleteIfExists(manifestDir.resolve(rel)))
         throw new ConcurrentWriteException(
           s"version ${m.version} of table ${config.tableName} was committed " +
@@ -3556,6 +3555,18 @@ object CowTable {
           .ExternalCatalogUtils.unescapePathName(seg.substring(pk.length + 1)))
     }
 
+  /** Folded-manifest cache key of version `version`'s JSON: (path,
+    * mtime-ns, size) — see [[manifestCache]]. */
+  private def manifestKey(root: Path, version: Int)
+      : (Path, (String, Long, Long)) = {
+    val p = root.resolve("_manifests").resolve(f"v$version%05d.json")
+    val attrs = Files.readAttributes(p,
+      classOf[java.nio.file.attribute.BasicFileAttributes])
+    (p, (p.toAbsolutePath.toString,
+      attrs.lastModifiedTime().to(java.util.concurrent.TimeUnit.NANOSECONDS),
+      attrs.size()))
+  }
+
   /** HEADER-ONLY manifest read: version `v`'s own JSON, parsed WITHOUT
     * resolving a parquet-checkpoint sidecar and WITHOUT folding the delta
     * chain — every header field (schema, keys, partition spec, durable
@@ -3567,22 +3578,12 @@ object CowTable {
     * cache when the fold is already paid. */
   private[graft] def manifestHeaderAt(root: Path, version: Int)
       : CommitManifest = {
-    val p = root.resolve("_manifests").resolve(f"v$version%05d.json")
-    val attrs = Files.readAttributes(p,
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-    val key = (p.toAbsolutePath.toString,
-      attrs.lastModifiedTime().to(java.util.concurrent.TimeUnit.NANOSECONDS),
-      attrs.size())
+    val (p, key) = manifestKey(root, version)
     val hit = manifestCache.get(key)
-    if (hit != null) return hit.copy(files = Nil)
-    val mj = Serialization.read[CommitManifest](Files.readString(p))
-    // an inline-full manifest IS the fold — cache it so the next full
-    // access (and every statement on a small table) is free, exactly the
-    // pre-r18 cost profile
-    if (mj.filesParquet.isEmpty && mj.deltaRemoved.isEmpty) {
-      manifestCache.put(key, mj)
-      mj.copy(files = Nil)
-    } else mj.copy(files = Nil, deltaRemoved = None, filesParquet = None)
+    if (hit != null) hit.copy(files = Nil)
+    else Serialization.read[CommitManifest](Files.readString(p)).copy(
+      files = Nil, deltaRemoved = None, filesParquet = None,
+      filesParquetCrc32c = None)
   }
 
   /** PREDICATE-PRUNED file-list fold (the Iceberg manifest-list read
@@ -3595,59 +3596,38 @@ object CowTable {
     * prune yields byte-identical scan results. Never cached (the result
     * is predicate-specific); a warm full fold short-circuits. */
   private[graft] def manifestFilesPruned(
-      root: Path, version: Int, pred: CkptPred): Seq[FileEntry] = {
-    val p = root.resolve("_manifests").resolve(f"v$version%05d.json")
-    val attrs = Files.readAttributes(p,
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-    val key = (p.toAbsolutePath.toString,
-      attrs.lastModifiedTime().to(java.util.concurrent.TimeUnit.NANOSECONDS),
-      attrs.size())
-    val hit = manifestCache.get(key)
-    if (hit != null) return hit.files
-    val mj = Serialization.read[CommitManifest](Files.readString(p))
-    mj.filesParquet match {
-      case Some(rel) =>
-        ManifestCheckpoint.readPruned(
-          root.resolve("_manifests").resolve(rel), pred)
-      case None => mj.deltaRemoved match {
-        case None =>
-          manifestCache.put(key, mj) // inline-full: the fold, cache it
-          mj.files
-        case Some(removed) =>
-          val prev = manifestFilesPruned(root, version - 1, pred)
-          val rm = removed.toSet
-          prev.filterNot(e => rm(e.path)) ++ mj.files
-      }
-    }
-  }
+      root: Path, version: Int, pred: CkptPred): Seq[FileEntry] =
+    fold(root, version, pred).files
 
-  private[graft] def manifestAt(root: Path, version: Int): CommitManifest = {
-    val p = root.resolve("_manifests").resolve(f"v$version%05d.json")
-    val attrs = Files.readAttributes(p,
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-    val key = (p.toAbsolutePath.toString,
-      attrs.lastModifiedTime().to(java.util.concurrent.TimeUnit.NANOSECONDS),
-      attrs.size())
+  private[graft] def manifestAt(root: Path, version: Int): CommitManifest =
+    fold(root, version, CkptPred())
+
+  /** Version `version`'s manifest with its file list resolved: a
+    * checkpoint reads its parquet sidecar (row groups selected by `pred`;
+    * an empty `pred` reads all), a delta folds onto version-1 (chain
+    * checkpoint-bounded). Only full folds (empty `pred`) enter the cache;
+    * any cached fold serves every `pred`. */
+  private def fold(root: Path, version: Int, pred: CkptPred)
+      : CommitManifest = {
+    val (p, key) = manifestKey(root, version)
     val hit = manifestCache.get(key)
     if (hit != null) return hit
     val mj = Serialization.read[CommitManifest](Files.readString(p))
-    // parquet-checkpointed file list: resolve before any delta fold sees it
-    val m0 = mj.filesParquet match {
-      case None => mj
-      case Some(rel) => mj.copy(
-        files = ManifestCheckpoint.read(
-          root.resolve("_manifests").resolve(rel)),
-        filesParquet = None)
-    }
-    val m = m0.deltaRemoved match {
-      case None => m0
-      case Some(removed) => // fold onto version-1 (chain checkpoint-bounded)
-        val prev = manifestAt(root, version - 1)
+    val files = (mj.filesParquet, mj.deltaRemoved) match {
+      case (Some(rel), _) =>
+        ManifestCheckpoint.readPruned(root.resolve("_manifests").resolve(rel),
+          mj.filesParquetCrc32c.getOrElse(throw new java.io.IOException(
+            s"graft: manifest $p has no checkpoint CRC32C")), pred)
+      case (None, Some(removed)) =>
         val rm = removed.toSet
-        m0.copy(files = prev.files.filterNot(e => rm(e.path)) ++ m0.files,
-          deltaRemoved = None)
+        fold(root, version - 1, pred).files.filterNot(e => rm(e.path)) ++
+          mj.files
+      case (None, None) => throw new java.io.IOException(
+        s"graft: manifest $p is neither a checkpoint nor a delta")
     }
-    manifestCache.put(key, m)
+    val m = mj.copy(files = files, deltaRemoved = None, filesParquet = None,
+      filesParquetCrc32c = None)
+    if (pred.isEmpty) manifestCache.put(key, m)
     m
   }
 

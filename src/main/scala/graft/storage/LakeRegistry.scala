@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
 import org.json4s.{Formats, NoTypeHints}
 import org.json4s.jackson.Serialization
 
-/** Durable lake-level catalog: `<lakeDir>/_catalog.json` maps table name →
-  * (TableConfig, root dir), so a FRESH SparkSession can discover and query
-  * every table of the lake with no config file — the persistence the
+/** Durable lake-level catalog: `<lakeDir>/_catalog.vNNNNN.json` maps table
+  * name → (TableConfig, root dir), so a FRESH SparkSession can discover and
+  * query every table of the lake with no config file — the persistence the
   * reference gets from hive-sync/Glue registration
   * (/root/reference/src/hudi/hudi-initial-load.py:76-81; crawlers
   * cdk_stacks/glue_stack.py:242-279) and that session temp views / the
@@ -22,7 +22,7 @@ import org.json4s.jackson.Serialization
   * the next version — the loser's link fails atomically and it retries the
   * merge on the fresh state, so no registration is ever silently dropped
   * (a plain read-modify-write of one file lost one of the two). Readers take
-  * the highest version; a legacy single `_catalog.json` is still readable.
+  * the highest version.
   * Roots are stored relative to the lake dir so the whole lake is
   * relocatable.
   */
@@ -55,9 +55,6 @@ object LakeRegistry {
       deletion_vectors, partition_spec, ndv_sketch)
   }
 
-  private def legacyFile(lakeDir: String): Path =
-    Paths.get(lakeDir).resolve("_catalog.json")
-
   private def versionFile(lakeDir: String, v: Int): Path =
     Paths.get(lakeDir).resolve(f"_catalog.v$v%05d.json")
 
@@ -72,9 +69,9 @@ object LakeRegistry {
   /** All registered tables (empty for a catalog-less lake). */
   def entries(lakeDir: String): Seq[Entry] = {
     val v = currentCatalogVersion(lakeDir)
-    val f = if (v > 0) versionFile(lakeDir, v) else legacyFile(lakeDir)
-    if (!Files.exists(f)) Nil
-    else Serialization.read[Seq[Entry]](Files.readString(f))
+    if (v == 0) Nil
+    else
+      Serialization.read[Seq[Entry]](Files.readString(versionFile(lakeDir, v)))
   }
 
   /** Register (or re-register: replace by name) a table. `root` defaults to
@@ -170,7 +167,7 @@ object LakeRegistry {
   def open(spark: SparkSession, lakeDir: String, name: String): CowTable = {
     val e = entries(lakeDir).find(_.table_name == name).getOrElse(
       throw new IllegalArgumentException(
-        s"table $name is not registered in $lakeDir/_catalog.json"))
+        s"table $name is not registered in $lakeDir/_catalog.vNNNNN.json"))
     CowTable(spark, resolveRoot(lakeDir, e), e.config)
   }
 

@@ -1,26 +1,31 @@
 package graft.storage
 
-import org.apache.hadoop.conf.Configuration
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport, GroupWriteSupport}
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, CompressionCodecName}
+import org.apache.parquet.io.{ColumnIOFactory, LocalInputFile, LocalOutputFile}
 import org.apache.parquet.schema.MessageTypeParser
 import org.json4s.{Formats, NoTypeHints}
 import org.json4s.jackson.Serialization
 
 /** PARQUET-encoded checkpoint manifests (the Delta parquet-checkpoint
-  * architecture): the every-[[CowTable.ManifestCheckpointEvery]]-th FULL
-  * manifest of a large table stores its [[FileEntry]] list as one parquet
-  * row per file next to the JSON commit record, instead of inlining a
-  * 10⁵–10⁶-element JSON array. Cold planning on a 100k-file table then
-  * costs a compressed columnar read plus a per-row decode — not one
-  * monolithic driver-side JSON parse whose transient AST dwarfs the data
-  * (the reason Delta moved its checkpoints to parquet). Delta-encoded
-  * commits between checkpoints are unaffected (they are O(changed files)
-  * already).
+  * architecture): every FULL manifest — v1, every
+  * [[CowTable.ManifestCheckpointEvery]]-th version, and any commit whose
+  * delta would be no smaller than the list — stores its [[FileEntry]] list
+  * as one parquet row per file next to the JSON commit record; the
+  * versions in between are JSON deltas. Cold planning on a 100k-file
+  * table then costs a compressed columnar read plus a per-row decode — not
+  * one monolithic driver-side JSON parse whose transient AST dwarfs the
+  * data (the reason Delta moved its checkpoints to parquet).
   *
   * Round 18 adds the ICEBERG MANIFEST-LIST analog: rows are SORTED by
   * (partition path value, leading-key min) and carry three derived
@@ -29,6 +34,12 @@ import org.json4s.jackson.Serialization
   * predicate-driven read that selects checkpoint ROW GROUPS from footer
   * stats, so a partition- or key-pruned COLD scan on a 10⁶-file table
   * decodes O(matching files) entries instead of all of them.
+  *
+  * I/O is plain local-file parquet (no Hadoop filesystem or
+  * `Configuration`), so a small checkpoint costs about a millisecond to
+  * write or read. Integrity is a CRC32C of the whole sidecar, recorded in
+  * the referencing manifest ([[CommitManifest.filesParquetCrc32c]]) and
+  * verified by every read before a single entry decodes.
   *
   * Scalar fields are TYPED columns; the three nested stat maps (`extra`,
   * `nulls`, `ndv` — sparse, absent on most files) ride as compact
@@ -74,14 +85,13 @@ private[graft] object ManifestCheckpoint {
   private def partOf(pk: Option[String], e: FileEntry): Option[String] =
     CowTable.pathPartValue(pk, e)
 
-  def write(target: java.nio.file.Path, files: Seq[FileEntry],
+  /** Write `files` as a checkpoint at `target` (which must not exist);
+    * returns the file's CRC32C for the referencing manifest. */
+  def write(target: Path, files: Seq[FileEntry],
       partitionKey: Option[String] = None, keyNumeric: Boolean = false,
-      rowGroupBytes: Long = DefaultRowGroupBytes): Unit = {
-    val conf = new Configuration()
-    GroupWriteSupport.setSchema(Schema, conf)
-    val w = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(target.toString))
-      .withConf(conf)
+      rowGroupBytes: Long = DefaultRowGroupBytes): Long = {
+    val w = ExampleParquetWriter.builder(new LocalOutputFile(target))
+      .withConf(new PlainParquetConfiguration())
       .withType(Schema)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withRowGroupSize(rowGroupBytes)
@@ -121,6 +131,13 @@ private[graft] object ManifestCheckpoint {
       mxOrd.foreach(g.append("maxKeyOrd", _))
       w.write(g)
     } finally w.close()
+    checksum(target)
+  }
+
+  private def checksum(p: Path): Long = {
+    val c = new java.util.zip.CRC32C()
+    c.update(Files.readAllBytes(p))
+    c.getValue
   }
 
   private def entryOf(g: Group): FileEntry = {
@@ -150,45 +167,29 @@ private[graft] object ManifestCheckpoint {
       dvRows = g.getLong("dvRows", 0))
   }
 
-  def read(target: java.nio.file.Path): Seq[FileEntry] = {
-    val r = ParquetReader.builder(new GroupReadSupport(),
-      new org.apache.hadoop.fs.Path(target.toString)).build()
-    val out = Seq.newBuilder[FileEntry]
-    try {
-      var g = r.read()
-      while (g != null) {
-        out += entryOf(g)
-        g = r.read()
-      }
-    } finally r.close()
-    out.result()
-  }
+  /** The whole entry list of the checkpoint at `target`. */
+  def read(target: Path, crc32c: Long): Seq[FileEntry] =
+    readPruned(target, crc32c, CkptPred())
 
   /** PREDICATE-pruned checkpoint read: select row groups whose footer
     * stats could hold a matching entry, then decode only those. A block
     * is skipped ONLY when its stats PROVE every entry fails the same
     * conservative per-entry checks the scan applies afterwards — missing
-    * columns (pre-r18 checkpoints), absent stats, or any nulls in an
-    * index column all keep the block, so the composed result is exactly
-    * the full fold's prune result. */
-  def readPruned(target: java.nio.file.Path, pred: CkptPred)
+    * columns, absent stats, or any nulls in an index column all keep the
+    * block, so the composed result is exactly the full fold's prune
+    * result. An empty `pred` keeps every block: the full read. Fails
+    * before decoding anything when the file's CRC32C differs from
+    * `crc32c` (the value [[write]] returned). */
+  def readPruned(target: Path, crc32c: Long, pred: CkptPred)
       : Seq[FileEntry] = {
-    if (pred.isEmpty) return read(target)
-    val hpath = new org.apache.hadoop.fs.Path(target.toString)
-    val conf = new Configuration()
-    val blocks = {
-      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(hpath, conf))
-      try rd.getFooter.getBlocks
-      finally rd.close()
-    }
-    import scala.jdk.CollectionConverters._
-    val blockSeq = blocks.asScala.toSeq
-    if (blockSeq.size <= 1) return read(target)
-
+    val actual = checksum(target)
+    if (actual != crc32c)
+      throw new java.io.IOException(f"graft: manifest checkpoint $target " +
+        f"is corrupt: CRC32C $actual%08x, manifest records $crc32c%08x")
     // per-block column stats: (min bytes, max bytes, numNulls); None when
     // the column/stats are absent (old checkpoint ⇒ never skip)
-    def stats(b: org.apache.parquet.hadoop.metadata.BlockMetaData,
-        col: String): Option[(Array[Byte], Array[Byte], Long)] =
+    def stats(b: BlockMetaData, col: String)
+        : Option[(Array[Byte], Array[Byte], Long)] =
       b.getColumns.asScala
         .find(c => c.getPath.toDotString == col)
         .flatMap { c =>
@@ -200,8 +201,7 @@ private[graft] object ManifestCheckpoint {
     def cmp(a: Array[Byte], b: Array[Byte]): Int = StatOrd.byteCompare(a, b)
     val nullSeg = StatOrd.bytes(CowTable.NullPartitionName)
 
-    def keepBlock(b: org.apache.parquet.hadoop.metadata.BlockMetaData)
-        : Boolean = {
+    def keepBlock(b: BlockMetaData): Boolean = {
       // partition constraints: a block with part-nulls may hold flat-
       // layout / retired-era files the scan must read
       val pOk = stats(b, "part") match {
@@ -244,33 +244,21 @@ private[graft] object ManifestCheckpoint {
       loOk && hiOk
     }
 
-    val keep = blockSeq.map(keepBlock)
-    if (keep.forall(identity)) return read(target)
-    val out = Seq.newBuilder[FileEntry]
-    // contiguous kept runs → one ranged read each (withFileRange selects
-    // row groups by byte mid-point)
-    var i = 0
-    while (i < blockSeq.size) {
-      if (!keep(i)) i += 1
-      else {
-        var j = i
-        while (j + 1 < blockSeq.size && keep(j + 1)) j += 1
-        val start = blockSeq(i).getStartingPos
-        val end =
-          if (j + 1 < blockSeq.size) blockSeq(j + 1).getStartingPos
-          else Long.MaxValue
-        val r = ParquetReader.builder(new GroupReadSupport(), hpath)
-          .withFileRange(start, end).build()
-        try {
-          var g = r.read()
-          while (g != null) {
-            out += entryOf(g)
-            g = r.read()
-          }
-        } finally r.close()
-        i = j + 1
+    val rd = ParquetFileReader.open(new LocalInputFile(target),
+      ParquetReadOptions.builder(new PlainParquetConfiguration()).build())
+    try {
+      val schema = rd.getFileMetaData.getSchema
+      val io = new ColumnIOFactory().getColumnIO(schema)
+      val out = Seq.newBuilder[FileEntry]
+      rd.getRowGroups.asScala.zipWithIndex.foreach { case (b, i) =>
+        if (pred.isEmpty || keepBlock(b)) {
+          val pages = rd.readRowGroup(i)
+          val rr = io.getRecordReader(pages, new GroupRecordConverter(schema))
+          var n = pages.getRowCount
+          while (n > 0) { out += entryOf(rr.read()); n -= 1 }
+        }
       }
-    }
-    out.result()
+      out.result()
+    } finally rd.close()
   }
 }

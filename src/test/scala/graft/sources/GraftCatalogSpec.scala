@@ -410,28 +410,26 @@ class GraftCatalogSpec extends SparkSpec {
       "checkpoint read (results exact vs unfiltered)") {
     val lake = tmpDir("cat")
     val sess = lakeSession(lake)
-    // force a parquet checkpoint so the pruned read path is live
-    sess.conf.set("graft.parquetCheckpointMinFiles", "2")
-    try {
-      sess.sql("CREATE TABLE lake.default.pf (id BIGINT, seg STRING) " +
-        "USING graft PARTITIONED BY (seg) OPTIONS (primaryKey 'id')")
-      sess.sql("INSERT INTO lake.default.pf SELECT id, " +
-        "concat('s', CAST(id % 6 AS STRING)) FROM range(1, 601)")
-      graft.storage.CowTable.evictManifestCache()
-      val scoped = sess.sql("SELECT path, rows FROM " +
-        "lake.default.`pf$files` WHERE partition_value = 's3'").collect()
-      assert(scoped.nonEmpty &&
-        scoped.forall(_.getString(0).contains("seg=s3/")))
-      val all = sess.sql("SELECT path FROM lake.default.`pf$files`")
-        .collect().filter(_.getString(0).contains("seg=s3/"))
-      assert(scoped.map(_.getString(0)).toSet ==
-        all.map(_.getString(0)).toSet, "scoped read must equal filtered full")
-      graft.storage.CowTable.evictManifestCache()
-      val roll = sess.sql("SELECT partition_value, row_count FROM " +
-        "lake.default.`pf$partitions` WHERE partition_value IN ('s1','s4')")
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(roll == Map("s1" -> 100L, "s4" -> 100L), roll)
-    } finally sess.conf.unset("graft.parquetCheckpointMinFiles")
+    sess.sql("CREATE TABLE lake.default.pf (id BIGINT, seg STRING) " +
+      "USING graft PARTITIONED BY (seg) OPTIONS (primaryKey 'id')")
+    sess.sql("INSERT INTO lake.default.pf SELECT id, " +
+      "concat('s', CAST(id % 6 AS STRING)) FROM range(1, 601)")
+    // the INSERT adds every file, so its version is a parquet checkpoint
+    // and the pruned read path is live
+    graft.storage.CowTable.evictManifestCache()
+    val scoped = sess.sql("SELECT path, rows FROM " +
+      "lake.default.`pf$files` WHERE partition_value = 's3'").collect()
+    assert(scoped.nonEmpty &&
+      scoped.forall(_.getString(0).contains("seg=s3/")))
+    val all = sess.sql("SELECT path FROM lake.default.`pf$files`")
+      .collect().filter(_.getString(0).contains("seg=s3/"))
+    assert(scoped.map(_.getString(0)).toSet ==
+      all.map(_.getString(0)).toSet, "scoped read must equal filtered full")
+    graft.storage.CowTable.evictManifestCache()
+    val roll = sess.sql("SELECT partition_value, row_count FROM " +
+      "lake.default.`pf$partitions` WHERE partition_value IN ('s1','s4')")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(roll == Map("s1" -> 100L, "s4" -> 100L), roll)
   }
 
   test("$column_stats merges per-file NDV sketches; NULL where evidence " +

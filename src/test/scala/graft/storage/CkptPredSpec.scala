@@ -58,23 +58,23 @@ class CkptPredSpec extends AnyFunSuite {
   /** 4096 entries over 8 partitions, keys ascending, TINY row groups so
     * block selection has something to skip. */
   private def writeFixture(dir: java.nio.file.Path)
-      : (java.nio.file.Path, Seq[FileEntry]) = {
+      : (java.nio.file.Path, Long, Seq[FileEntry]) = {
     val files = (0 until 4096).map(i =>
       entry(i, s"p${i % 8}", i * 100L, i * 100L + 99L))
     val target = dir.resolve("ck.files.parquet")
-    ManifestCheckpoint.write(target, files, partitionKey = Some("cat"),
-      keyNumeric = true, rowGroupBytes = 16 * 1024)
-    (target, files)
+    val crc = ManifestCheckpoint.write(target, files,
+      partitionKey = Some("cat"), keyNumeric = true, rowGroupBytes = 16 * 1024)
+    (target, crc, files)
   }
 
   test("readPruned: partition predicate decodes a strict subset, keeps " +
       "every matching entry; full read round-trips content") {
     val dir = Files.createTempDirectory("ckpred")
-    val (target, files) = writeFixture(dir)
-    assert(ManifestCheckpoint.read(target).sortBy(_.path) ==
+    val (target, crc, files) = writeFixture(dir)
+    assert(ManifestCheckpoint.read(target, crc).sortBy(_.path) ==
       files.sortBy(_.path))
     val pruned = ManifestCheckpoint.readPruned(
-      target, CkptPred(partIn = Some(Set("p3"))))
+      target, crc, CkptPred(partIn = Some(Set("p3"))))
     val matching = files.filter(_.path.contains("cat=p3/"))
     assert(matching.forall(pruned.contains), "a matching entry was dropped")
     assert(pruned.size < files.size, "block selection must actually skip")
@@ -85,11 +85,11 @@ class CkptPredSpec extends AnyFunSuite {
 
   test("readPruned: key-range predicate keeps every overlapping entry") {
     val dir = Files.createTempDirectory("ckpred")
-    val (target, files) = writeFixture(dir)
+    val (target, crc, files) = writeFixture(dir)
     val pred = CkptPred(
       keyLoOrd = StatOrd.encodeNumeric("200000"),
       keyHiOrd = StatOrd.encodeNumeric("205000"))
-    val pruned = ManifestCheckpoint.readPruned(target, pred)
+    val pruned = ManifestCheckpoint.readPruned(target, crc, pred)
     val matching = files.filter(e =>
       e.maxKey.get.toLong >= 200000L && e.minKey.get.toLong <= 205000L)
     assert(matching.nonEmpty && matching.forall(pruned.contains))
@@ -106,10 +106,10 @@ class CkptPredSpec extends AnyFunSuite {
       entry(i, s"p${i % 4}", i * 100L, i * 100L + 99L)) :+
       statless :+ nanKey
     val target = dir.resolve("ck2.files.parquet")
-    ManifestCheckpoint.write(target, files, partitionKey = Some("cat"),
-      keyNumeric = true, rowGroupBytes = 16 * 1024)
+    val crc = ManifestCheckpoint.write(target, files,
+      partitionKey = Some("cat"), keyNumeric = true, rowGroupBytes = 16 * 1024)
     // a predicate that matches nothing numerically still keeps both
-    val pruned = ManifestCheckpoint.readPruned(target, CkptPred(
+    val pruned = ManifestCheckpoint.readPruned(target, crc, CkptPred(
       partIn = Some(Set("p2")),
       keyLoOrd = StatOrd.encodeNumeric("999999999"),
       keyHiOrd = StatOrd.encodeNumeric("9999999999")))
@@ -126,10 +126,10 @@ class CkptPredSpec extends AnyFunSuite {
       FileEntry(path = f"v1-t/part-$i%04d.parquet", rows = 1,
         minKey = Some(s"k$i"), maxKey = Some(s"k$i"), bytes = 10))
     val target = dir.resolve("ck3.files.parquet")
-    ManifestCheckpoint.write(target, files, partitionKey = None,
+    val crc = ManifestCheckpoint.write(target, files, partitionKey = None,
       keyNumeric = false, rowGroupBytes = 8 * 1024)
     val pruned = ManifestCheckpoint.readPruned(
-      target, CkptPred(partIn = Some(Set("whatever"))))
+      target, crc, CkptPred(partIn = Some(Set("whatever"))))
     assert(pruned.sortBy(_.path) == files.sortBy(_.path))
   }
 

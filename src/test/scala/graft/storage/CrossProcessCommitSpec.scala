@@ -97,6 +97,10 @@ class CrossProcessCommitSpec extends SparkSpec {
     }
     // table content untouched by the churn
     assert(t.read().count() == 100L)
+    // every 8th version was a checkpoint, and every CAS loser removed the
+    // sidecar it wrote: only committed manifests and their sidecars remain
+    val litter = ManifestDeltaSpec.manifestLitter(java.nio.file.Paths.get(root))
+    assert(litter.isEmpty, litter)
   }
 
   test("a loser in this process REBASES onto versions won by another " +
