@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Per query: one unmeasured warmup pass (session/codegen
   * warmup otherwise lands on whichever query runs first), then one timed pass
@@ -91,18 +90,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
     val (gateWaited, gateOk) = loadGate()
-    val spark = graft.core.SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      // same session shape as Verify (extensions installed) so bench times
-      // include the injected rules' per-statement cost
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = graft.core.SessionTuning.builder(defaultCpus = 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def materialize(name: String): Unit =

@@ -1,7 +1,8 @@
 package graft
 
+import graft.core.SessionTuning
 import graft.text.{TextDedup, TextFunctions, TextStats}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Empirical 100×-posture probe for the COMPOSED corpus pipeline (VERDICT
@@ -56,13 +57,7 @@ object CorpusScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft-corpus-scale-probe")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = SessionTuning.builder(defaultCpus = 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.SessionTuning
 import org.apache.spark.sql.functions._
 import graft.storage.{CowTable, TableConfig}
 
@@ -32,12 +32,7 @@ object DvColumnarProbe {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/dvprobe")
-    val spark = SparkSession.builder()
-      .appName("graft-dv-columnar-probe")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
+    val spark = SessionTuning.builder(defaultCpus = 32)
       .config("spark.hadoop.parquet.block.size", 4 << 20)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

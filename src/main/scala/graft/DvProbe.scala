@@ -1,7 +1,7 @@
 package graft
 
+import graft.core.SessionTuning
 import graft.storage.{CowTable, TableConfig}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical probe for DELETION VECTORS (companion of [[ScaleProbe]]):
@@ -31,13 +31,7 @@ object DvProbe {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/dvprobe")
-    val spark = SparkSession.builder()
-      .appName("graft-dv-probe")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = SessionTuning.builder(defaultCpus = 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

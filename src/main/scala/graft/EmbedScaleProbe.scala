@@ -1,8 +1,9 @@
 package graft
 
+import graft.core.SessionTuning
 import graft.similarity.Similarity
 import graft.storage.{CowTable, TableConfig}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Empirical 100×-posture probe for the EMBEDDING pillar — the third
@@ -54,13 +55,7 @@ object EmbedScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/embedprobe")
-    val spark = SparkSession.builder()
-      .appName("graft-embed-scale-probe")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = SessionTuning.builder(defaultCpus = 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,24 +1,19 @@
 package graft
 
-import graft.storage.{ColRange, CommitManifest, FileEntry, ManifestCheckpoint}
-import org.json4s.{Formats, NoTypeHints}
-import org.json4s.jackson.Serialization
+import graft.storage.{ColRange, FileEntry, ManifestCheckpoint}
 
-/** Direct A/B of the two FULL-manifest encodings at the file counts the
-  * parquet checkpoint exists for (round 17): synthesize a 10⁵-entry
-  * FileEntry list with realistic stats (key bounds, one statsColumn
-  * range, null counts, an NDV sketch on every 8th file), write it as
-  * (a) the monolithic JSON array the pre-r17 checkpoints inlined and
-  * (b) the parquet checkpoint sidecar, then time COLD loads of each
-  * (min of 3) and report bytes. No Spark session — the driver-side
+/** Cold-read cost of the parquet manifest checkpoint at 10⁵ files:
+  * synthesize a FileEntry list with realistic stats (key bounds, one
+  * statsColumn range, null counts, an NDV sketch on every 8th file), write
+  * it as a checkpoint sidecar, then time COLD loads (min of 3) of the full
+  * list, a one-partition pruned read and a key-range pruned read, checking
+  * each round-trip, and report bytes. No Spark session — the driver-side
   * planning cost is pure JVM work, which is exactly the point.
   *
   * Run manually (NOT part of the driver contract):
   * {{{ sbt "runMain graft.ManifestProbe /tmp/manifestprobe" }}}
   */
 object ManifestProbe {
-  private implicit val formats: Formats = Serialization.formats(NoTypeHints)
-
   private def time[T](f: => T): Double = {
     val t0 = System.nanoTime()
     f
@@ -45,19 +40,12 @@ object ManifestProbe {
           Map("c_name" -> (0 until 64).map(j => i * 1000L + j))
         else Map.empty)
     }
-    val m = CommitManifest(1, 0, "{}", Seq("k"), None,
-      keyNumeric = true, rowCount = n * 100000L, files = files)
-
-    val jsonPath = out.resolve("full.json")
-    java.nio.file.Files.writeString(jsonPath, Serialization.write(m))
     val pqPath = out.resolve("full.files.parquet")
     java.nio.file.Files.deleteIfExists(pqPath)
     val crc = ManifestCheckpoint.write(pqPath, files,
       partitionKey = Some("cat"), keyNumeric = true)
 
     def best(f: => Int): Double = (1 to 3).map(_ => time(f)).min
-    val tJson = best(Serialization.read[CommitManifest](
-      java.nio.file.Files.readString(jsonPath)).files.size)
     val tPq = best(ManifestCheckpoint.read(pqPath, crc).size)
     // the checkpoint is SORTED by (partition, keyMin) — content equality
     require(ManifestCheckpoint.read(pqPath, crc).sortBy(_.path) ==
@@ -89,10 +77,8 @@ object ManifestProbe {
       "pruned key read lost matching entries")
     val tKey =
       best(ManifestCheckpoint.readPruned(pqKeyPath, crcKey, keyPred).size)
-    println(s"""{"probe":"manifest_encoding","files":$n,""" +
-      s""""json_bytes":${java.nio.file.Files.size(jsonPath)},""" +
+    println(s"""{"probe":"manifest_checkpoint","files":$n,""" +
       s""""parquet_bytes":${java.nio.file.Files.size(pqPath)},""" +
-      s""""json_cold_sec":${f"$tJson%.3f"},""" +
       s""""parquet_cold_sec":${f"$tPq%.3f"},""" +
       s""""pruned_part_entries":${partEntries.size},""" +
       s""""pruned_part_cold_sec":${f"$tPart%.3f"},""" +

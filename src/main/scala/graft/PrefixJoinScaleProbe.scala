@@ -1,7 +1,7 @@
 package graft
 
+import graft.core.SessionTuning
 import graft.text.PrefixJoin
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical 100×-posture probe for the EXACT set-similarity join
@@ -41,12 +41,7 @@ object PrefixJoinScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionTuning.builder(defaultCpus = 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.SessionTuning
 import org.apache.spark.sql.functions._
 import graft.storage.{CowTable, TableConfig}
 
@@ -29,12 +29,7 @@ object RowGroupProbe {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/rgprobe")
-    val spark = SparkSession.builder()
-      .appName("graft-rowgroup-probe")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
+    val spark = SessionTuning.builder(defaultCpus = 32)
       // small parquet blocks so each ~80 MB file carries ~20 row groups
       .config("spark.hadoop.parquet.block.size", 4 << 20)
       .getOrCreate()

@@ -1,8 +1,9 @@
 package graft
 
+import graft.core.SessionTuning
 import graft.operators.Scd2
 import graft.storage.{CowTable, TableConfig}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Empirical 100×-posture probe for the INCREMENTAL SCD2 pillar
@@ -33,13 +34,7 @@ object Scd2ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/scd2probe")
-    val spark = SparkSession.builder()
-      .appName("graft-scd2-scale-probe")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = SessionTuning.builder(defaultCpus = 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // synthetic change log: nKeys keys × 3 versions (I, U, U); change_id

@@ -1,9 +1,10 @@
 package graft
 
+import graft.core.SessionTuning
 import graft.operators.CdcDedup
 import graft.pipeline.CdcPipeline
 import graft.storage.{CowTable, TableConfig}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1-scale probe over the REAL table shapes (VERDICT r7/r9/r10 carry:
@@ -42,13 +43,7 @@ object Sf1Probe {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/sf1probe")
-    val spark = SparkSession.builder()
-      .appName("graft-sf1-probe")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = SessionTuning.builder(defaultCpus = 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

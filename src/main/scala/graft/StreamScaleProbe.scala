@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.SessionTuning
 import graft.streaming.EventStreams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -60,13 +61,7 @@ object StreamScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/streamprobe")
-    val spark = SparkSession.builder()
-      .appName("graft-stream-scale-probe")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = SessionTuning.builder(defaultCpus = 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF1", "/root/testdata/sf0.1")

@@ -2,18 +2,19 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Shuffle-shape session defaults shared by every graft main (Bench,
-  * Verify, and the profiling tools — one session shape everywhere, so the
-  * bench measures what the verifier runs).
+/** The one session shape of every graft main ([[builder]]): Bench, Verify,
+  * Profile and the scale probes all run the same confs and the same
+  * injected rules, so the bench measures what the verifier runs and a
+  * profile shows what the bench executes.
   *
-  * Both settings attack the same measured cost (round 18, TaskSample on
-  * q46): a small shuffle whose reduce count R is below the bypass-merge
-  * threshold uses BypassMergeSortShuffleWriter, which opens R partition
-  * files PER MAP TASK and then concatenates them — M×R file creates +
-  * NIO copies per shuffle. On the bounded per-commit batches every DML
-  * and streaming fixture shuffles, that file churn dominated task CPU
-  * (66% of executor samples sat in DiskBlockObjectWriter.open /
-  * copyFileStreamNIO).
+  * The three tuning confs ([[apply]]) attack measured costs (round 18,
+  * executor-thread samples of q46): a small shuffle whose reduce count R
+  * is below the bypass-merge threshold uses BypassMergeSortShuffleWriter,
+  * which opens R partition files PER MAP TASK and then concatenates them —
+  * M×R file creates + NIO copies per shuffle. On the bounded per-commit
+  * batches every DML and streaming fixture shuffles, that file churn
+  * dominated task CPU (66% of executor samples sat in
+  * DiskBlockObjectWriter.open / copyFileStreamNIO).
   *
   *  - `bypassMergeThreshold=2`: only trivially narrow shuffles (R ≤ 2,
   *    where one or two file opens genuinely beat sort-writer setup) keep
@@ -32,20 +33,21 @@ import org.apache.spark.sql.SparkSession
   *    has none (explicit-n repartitions are never AQE-adjusted, and the
   *    one partition-id consumer, SeqPack, reads a single materialized
   *    cache, so its ids stay self-consistent).
+  *  - `codegen.cache.maxEntries=1000` (below).
   *
-  * Env overrides (SPARK_GRAFT_BYPASS_THRESHOLD / SPARK_GRAFT_CACHED_AQE)
-  * keep the pair measurable A/B without a rebuild.
+  * The A/B runs behind these values are recorded in
+  * `plans/r18/ab_shuffle_configs.txt`, `plans/r18/ab_codegen_cache.txt`
+  * and `OPTIMIZATION_r18.md`.
   */
 object SessionTuning {
   def apply(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.shuffle.sort.bypassMergeThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "2"))
+    .config("spark.shuffle.sort.bypassMergeThreshold", "2")
     .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "true"))
+      "true")
     // Whole-stage-codegen compile cache (STATIC conf, JVM-global, LRU).
     // Upstream default is 100 entries — a single lifecycle statement chain
     // emits enough distinct codegen units to evict its own earlier
-    // compiles (janino frames show up in TIMED DriverSample passes even
+    // compiles (janino frames show up in timed driver-gap samples even
     // though the warmup pass compiled the same sources), and a long-lived
     // session running many query shapes re-pays Janino per-statement
     // forever. 1000 holds the working set with bounded metaspace (~10×
@@ -53,6 +55,20 @@ object SessionTuning {
     // every plan still executes in full. Scale-neutral: production
     // drivers run FEWER distinct tiny statements, but any multi-tenant /
     // long-lived session benefits the same way.
-    .config("spark.sql.codegen.cache.maxEntries",
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "1000"))
+    .config("spark.sql.codegen.cache.maxEntries", "1000")
+
+  /** `local[cpus]` with `cpus` shuffle partitions, UTC, no UI, the tuning
+    * confs above and [[graft.GraftExtensions]] (the SQL-surface functions
+    * such as the `table_changes` TVF, and the injected optimizer rules).
+    * `cpus` is `SPARK_GRAFT_CPUS`, else `defaultCpus`. A main that needs
+    * one more conf adds it to the returned builder. */
+  def builder(defaultCpus: Int): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    apply(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+      .withExtensions(new graft.GraftExtensions)
+  }
 }

@@ -2201,12 +2201,14 @@ object StorageQueries {
       tbl.create(t(s, d, "customer")
         .select("c_custkey", "c_name", "c_acctbal"))
       graft.storage.LakeRegistry.register(lake, tbl.config, "cust_v")
-      // view resolution needs the extension — build a sibling session on
-      // the same SparkContext, restoring the verify session afterwards
+      // view resolution needs the extension — build a sibling session of
+      // the main session shape on the same SparkContext, restoring the
+      // verify session afterwards
       org.apache.spark.sql.SparkSession.clearActiveSession()
       org.apache.spark.sql.SparkSession.clearDefaultSession()
-      val es = org.apache.spark.sql.SparkSession.builder()
-        .withExtensions(new graft.GraftExtensions).getOrCreate()
+      val es = graft.core.SessionTuning
+        .builder(defaultCpus = s.sparkContext.defaultParallelism)
+        .getOrCreate()
       try {
         es.conf.set("spark.sql.catalog.lake", "graft.sources.GraftCatalog")
         es.conf.set("spark.sql.catalog.lake.warehouse", lake)

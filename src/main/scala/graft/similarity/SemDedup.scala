@@ -85,10 +85,6 @@ object SemDedup {
         dec(lit(tauNum * tauNum)) * col("n2a") * col("n2b")
   }
 
-  /** Per-document semantic-dedup verdicts: (vec_id, cid, dropped,
-    * witness) — `witness` the smallest lower-id cluster-mate at ≥ τ
-    * cosine (null when kept). Zero-norm vectors are excluded upstream
-    * (cosine undefined), same as every [[Similarity]] entry point. */
   /** Pairwise keep-lowest-id verdicts over an [[assign]]ed frame. */
   private def verdicts(assigned: DataFrame, tauNum: Long,
       tauDen: Long): DataFrame = {
@@ -107,6 +103,10 @@ object SemDedup {
         col("witness").isNotNull.as("dropped"), col("witness"))
   }
 
+  /** Per-document semantic-dedup verdicts: (vec_id, cid, dropped,
+    * witness) — `witness` the smallest lower-id cluster-mate at ≥ τ
+    * cosine (null when kept). Zero-norm vectors are excluded upstream
+    * (cosine undefined), same as every [[Similarity]] entry point. */
   def flags(emb: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Long]], tauNum: Long, tauDen: Long,
       maxClusterSize: Long = 1L << 16): DataFrame = {

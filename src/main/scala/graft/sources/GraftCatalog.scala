@@ -507,13 +507,6 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
   }
 
-  /** Durable behavior properties adjustable post-create via
-    * `ALTER TABLE ... SET/UNSET TBLPROPERTIES`. Layout-defining config
-    * (primaryKey, partitionKey, clusterByKey) is immutable — changing it
-    * would invalidate every existing file's stats and placement. New
-    * `statsColumns`/`bloomIndex` apply to FUTURE files only; older files
-    * simply lack the stats and are never skipped on them (the documented
-    * degrade-safe direction). */
   /** Split the `checkConstraints` property on ';' — QUOTE-AWARE: a ';'
     * inside a SQL string literal (`c <> 'a;b'`, including the doubled-quote
     * escape `'it''s;ok'`) or a back-quoted identifier does not split, so
@@ -549,6 +542,13 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     frags.map(_.trim).filter(_.nonEmpty).toSeq
   }
 
+  /** Durable behavior properties adjustable post-create via
+    * `ALTER TABLE ... SET/UNSET TBLPROPERTIES`. Layout-defining config
+    * (primaryKey, partitionKey, clusterByKey) is immutable — changing it
+    * would invalidate every existing file's stats and placement. New
+    * `statsColumns`/`bloomIndex` apply to FUTURE files only; older files
+    * simply lack the stats and are never skipped on them (the documented
+    * degrade-safe direction). */
   private def applyProperty(
       cfg: graft.storage.TableConfig, key: String,
       value: Option[String]): graft.storage.TableConfig = key match {

@@ -241,15 +241,15 @@ final class GraftTable(
   scala.util.Try(GraftSessionRules.ensureInstalled(
     org.apache.spark.sql.SparkSession.active)): Unit
 
-  /** No backticks: Spark renders this name inside SQL-identifier error
-    * messages (e.g. TOO_MANY_DATA_COLUMNS), and embedded quoting makes the
-    * real error unreadable (INVALID_ATTRIBUTE_NAME_SYNTAX). */
   /** Change-feed streaming read (`option("readChangeFeed","true")`):
     * the schema grows the CDF metadata columns and scans route to the
     * change-feed micro-batch planner. */
   private def cdfRead: Boolean =
     props.getBoolean("readChangeFeed", false)
 
+  /** No backticks: Spark renders this name inside SQL-identifier error
+    * messages (e.g. TOO_MANY_DATA_COLUMNS), and embedded quoting makes the
+    * real error unreadable (INVALID_ATTRIBUTE_NAME_SYNTAX). */
   override def name(): String = s"graft:$root@v$version"
   override def schema(): StructType =
     if (cdfRead) GraftTable.withCdfColumns(tableSchema) else tableSchema
@@ -1069,9 +1069,6 @@ object GraftScan {
     * constant lives with the storage layer (checkpoint index sharing). */
   private[sources] val NullPartitionName: String = CowTable.NullPartitionName
 
-  /** Hive partition value sitting in a file's path, if any (files written
-    * without partition directories — e.g. pre-r6 DSv2 writers — have none
-    * and are never partition-pruned). */
   /** Hive path-segment decode: the EXACT inverse of the escaping both
     * writers use (`ExternalCatalogUtils.escapePathName`, same as Spark's
     * partitioned writes). URLDecoder is NOT that inverse — it turns a
@@ -1081,6 +1078,9 @@ object GraftScan {
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .unescapePathName(s)
 
+  /** Hive partition value sitting in a file's path, if any (files written
+    * without partition directories — e.g. pre-r6 DSv2 writers — have none
+    * and are never partition-pruned). */
   private[sources] def pathPartValue(
       partitionKey: Option[String], e: FileEntry): Option[String] =
     CowTable.pathPartValue(partitionKey, e) // one derivation, shared with

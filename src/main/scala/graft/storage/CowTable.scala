@@ -1289,19 +1289,6 @@ final class CowTable private[storage] (
       m: CommitManifest, bin: Seq[FileEntry]): DataFrame =
     readFiles(m, bin).coalesce(1)
 
-  /** Change feed: rows in files added by DATA commits between `fromVersion`
-    * (exclusive) and `toVersion` (inclusive) — the incremental-consumption
-    * surface (Delta CDF-lite). COW invariant makes this exact for inserts/
-    * updates: every touched row is rewritten into a new file; deletes are
-    * absences (pair with the manifest diff of removed files when tombstones
-    * matter). Rewrite-only commits (compaction, rollback — dataChange=false)
-    * are skipped, so consumers never re-receive compacted rows; files a later
-    * compaction removed stay readable (COW never deletes), so the walk is
-    * exact even with interleaved compactions. O(files·versions) metadata,
-    * reads only the changed files. On a deletionVectors table a DV delete
-    * adds no files, so (consistent with the adds-only contract) it emits
-    * nothing here — use [[readChangeFeed]] for tombstones, which such
-    * tables always materialize (the config fence). */
   /** Shared guard for both change-feed entry points. */
   private def requireFeedRange(fromVersion: Int, toVersion: Int): Unit = {
     require(fromVersion >= 0 && fromVersion <= toVersion
@@ -1311,17 +1298,15 @@ final class CowTable private[storage] (
         s"readable: $earliestReadableVersion)")
   }
 
-  /** Union the per-commit feed subplans with BOUNDED plan width: every
-    * `graft.feedChunkCommits` (default 32) branches are materialized via an
-    * eager localCheckpoint — a lineage cut, so a month of hourly commits
-    * (720) analyzes ~23 bounded subplans instead of one 720-branch Catalyst
-    * tree (O(commits) driver memory + analysis time). Short feeds (the
-    * common incremental-consumer case) stay fully lazy — no checkpoint, no
-    * early job. */
   /** Union a per-commit plan list without unbounded Catalyst growth: past
-    * `graft.feedChunkCommits` branches, each chunk is materialized via
-    * localCheckpoint. Trade-off, eyes open: checkpointing is EAGER (a
-    * feed over hundreds of commits runs its chunk jobs at construction)
+    * `graft.feedChunkCommits` (default 32) branches, each chunk is
+    * materialized via an eager localCheckpoint — a lineage cut, so a month
+    * of hourly commits (720) analyzes ~23 bounded subplans instead of one
+    * 720-branch Catalyst tree (O(commits) driver memory + analysis time).
+    * Short feeds (the common incremental-consumer case) stay fully lazy —
+    * no checkpoint, no early job. Trade-off, eyes open: checkpointing is
+    * EAGER (a feed over hundreds of commits runs its chunk jobs at
+    * construction)
     * and the blocks are executor-local (an executor lost mid-read cannot
     * recompute them — on a cluster with decommissioning, raise the chunk
     * size or set a reliable checkpoint dir and swap to `checkpoint()`).
@@ -1351,6 +1336,19 @@ final class CowTable private[storage] (
     out.values.toSeq
   }
 
+  /** Change feed: rows in files added by DATA commits between `fromVersion`
+    * (exclusive) and `toVersion` (inclusive) — the incremental-consumption
+    * surface (Delta CDF-lite). COW invariant makes this exact for inserts/
+    * updates: every touched row is rewritten into a new file; deletes are
+    * absences (pair with the manifest diff of removed files when tombstones
+    * matter). Rewrite-only commits (compaction, rollback — dataChange=false)
+    * are skipped, so consumers never re-receive compacted rows; files a later
+    * compaction removed stay readable (COW never deletes), so the walk is
+    * exact even with interleaved compactions. O(files·versions) metadata,
+    * reads only the changed files. On a deletionVectors table a DV delete
+    * adds no files, so (consistent with the adds-only contract) it emits
+    * nothing here — use [[readChangeFeed]] for tombstones, which such
+    * tables always materialize (the config fence). */
   def readChanges(fromVersion: Int, toVersion: Int): DataFrame = {
     val m = manifest(toVersion)
     readFiles(m, changedFiles(fromVersion, toVersion))
@@ -1985,24 +1983,6 @@ final class CowTable private[storage] (
       "commit_time_ms")
   }
 
-  /** SHALLOW CLONE (Delta `CREATE TABLE ... CLONE` re-expressed): fork the
-    * current snapshot into `destDir` at ZERO data-copy cost. Every live data
-    * file (and bloom sidecar) is hard-linked into the clone root under its
-    * original root-relative path — O(files) metadata ops, no bytes moved, so
-    * a 100 TB table forks in seconds; the manifest is copied with the
-    * source's per-file stats VERBATIM (no footer re-stat, the other O(files)
-    * cost). Safe because COW discipline never mutates a data file in place:
-    * the shared inodes are immutable, every write on either side creates
-    * new files, and each root owns its own directory entries — vacuum or
-    * delete on one side never perturbs the other. The clone starts a fresh
-    * history at version 1 (its change feed replays the snapshot as inserts,
-    * its time travel starts at the fork), carrying the source's durable
-    * table properties. A destination on another filesystem (no hard links
-    * possible) degrades to a per-file copy — same result, real IO.
-    *
-    * This is the experiment-branch primitive a training pipeline wants:
-    * fork the corpus, dedup/filter/repack the fork, keep the original
-    * bit-identical. */
   /** GENERATE symlink_format_manifest (Delta's Presto/Athena/Redshift-
     * Spectrum integration — exactly the surface the reference provisions
     * with its symlink-manifest crawler + second catalog,
@@ -2048,6 +2028,24 @@ final class CowTable private[storage] (
     }
   }
 
+  /** SHALLOW CLONE (Delta `CREATE TABLE ... CLONE` re-expressed): fork the
+    * current snapshot into `destDir` at ZERO data-copy cost. Every live data
+    * file (and bloom sidecar) is hard-linked into the clone root under its
+    * original root-relative path — O(files) metadata ops, no bytes moved, so
+    * a 100 TB table forks in seconds; the manifest is copied with the
+    * source's per-file stats VERBATIM (no footer re-stat, the other O(files)
+    * cost). Safe because COW discipline never mutates a data file in place:
+    * the shared inodes are immutable, every write on either side creates
+    * new files, and each root owns its own directory entries — vacuum or
+    * delete on one side never perturbs the other. The clone starts a fresh
+    * history at version 1 (its change feed replays the snapshot as inserts,
+    * its time travel starts at the fork), carrying the source's durable
+    * table properties. A destination on another filesystem (no hard links
+    * possible) degrades to a per-file copy — same result, real IO.
+    *
+    * This is the experiment-branch primitive a training pipeline wants:
+    * fork the corpus, dedup/filter/repack the fork, keep the original
+    * bit-identical. */
   def shallowClone(destDir: String, cloneName: Option[String] = None)
       : CowTable = {
     val cur = currentVersion
@@ -2243,11 +2241,6 @@ final class CowTable private[storage] (
     case _ => false
   }
 
-  /** Read a set of manifest files, reconciling to `m`'s schema (files written
-    * by older commits may predate added columns — null-fill + cast, the read
-    * side of schema-merge-on-write). Files are grouped by the version segment
-    * they live in so hive-style partition-value inference (basePath) works
-    * per group. */
   /** Directory prefix of a relative file path up to (excluding) the first
     * hive `k=v` segment — the basePath hive-partition inference needs. The
     * delta write path nests hive dirs under per-kind subdirs
@@ -2292,6 +2285,11 @@ final class CowTable private[storage] (
     rdr.schema(StructType(data.fields ++ typed)).parquet(paths: _*)
   }
 
+  /** Read a set of manifest files, reconciling to `m`'s schema (files written
+    * by older commits may predate added columns — null-fill + cast, the read
+    * side of schema-merge-on-write). Files are grouped by the version segment
+    * they live in so hive-style partition-value inference (basePath) works
+    * per group. */
   private[storage] def readFiles(
       m: CommitManifest, files: Seq[FileEntry]): DataFrame = {
     val schema = structFromJson(m.schemaJson)
@@ -2419,11 +2417,6 @@ final class CowTable private[storage] (
     }: _*)
   }
 
-  /** Write `df` as the data of version parent+1 (hive-style partitionBy when
-    * configured, clustered so each partition value lands in few files —
-    * reference INSERT ... ORDER BY partition_key,
-    * src/iceberg/iceberg-initial-load.py:87-92), collect per-file key stats,
-    * and commit manifest + atomic pointer. */
   /** Scope `spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS` to a
     * graft TABLE write: INT64-micros timestamps carry parquet footer stats
     * (the session-default INT96 does not), so timestamp keys avoid the
@@ -2442,6 +2435,11 @@ final class CowTable private[storage] (
     }
   }
 
+  /** Write `df` as the data of version parent+1 (hive-style partitionBy when
+    * configured, clustered so each partition value lands in few files —
+    * reference INSERT ... ORDER BY partition_key,
+    * src/iceberg/iceberg-initial-load.py:87-92), collect per-file key stats,
+    * and commit manifest + atomic pointer. */
   private[storage] def writeVersion(
       df0: DataFrame, schema0: StructType,
       carryOver: Seq[FileEntry], parent: Int,
@@ -2535,32 +2533,6 @@ final class CowTable private[storage] (
       rebase = rebase)
   }
 
-  /** Commit `fresh` + carry-over, REBASING onto concurrent winners instead
-    * of failing when the conflict is provably disjoint (Delta
-    * WriteSerializable's logical rebase, decided from manifests alone —
-    * zero data re-read or re-written, which is the whole point at 100 TB
-    * where re-executing a large merge costs minutes):
-    *
-    *  - every winner must leave schema, column mapping, and CHECK
-    *    constraints untouched (our fresh files were validated and
-    *    physically named under the old ones);
-    *  - no winner may have removed/rewritten a file this op READ
-    *    (`touchedPaths`) — that would make the merge's inputs stale;
-    *  - no winner-ADDED file may possibly contain one of the op's source
-    *    keys (the exact key-set prune, [[KeyPrune.touched]], re-run against just
-    *    the added files) — otherwise carrying both the winner's file and
-    *    our merged output could duplicate or shadow a key. This is
-    *    stats-conservative: a reorganization whose bins span wide key
-    *    ranges can flag a false overlap and fall back to the loud failure;
-    *    never the reverse.
-    *
-    * On pass: carry-over is recomputed from the WINNER's file set (so a
-    * winner's rewrite of files this op never read — a compaction of cold
-    * partitions, another key range's merge — is carried forward verbatim)
-    * and the commit retries at the new head, looping (bounded) if yet
-    * another writer lands first. Ops that read the whole table
-    * (create/overwrite/compact/optimize) pass no [[RebaseCtx]] and keep the
-    * loud fail-fast contract. */
   /** [[commitWithRebase]] for the DSv2 row-level path (SQL MERGE / UPDATE /
     * DELETE), where the source batch is gone by commit time: the key
     * footprint is the stat-range union of the files the op scanned plus the
@@ -2654,6 +2626,32 @@ final class CowTable private[storage] (
       m.columnMapping)
   }
 
+  /** Commit `fresh` + carry-over, REBASING onto concurrent winners instead
+    * of failing when the conflict is provably disjoint (Delta
+    * WriteSerializable's logical rebase, decided from manifests alone —
+    * zero data re-read or re-written, which is the whole point at 100 TB
+    * where re-executing a large merge costs minutes):
+    *
+    *  - every winner must leave schema, column mapping, and CHECK
+    *    constraints untouched (our fresh files were validated and
+    *    physically named under the old ones);
+    *  - no winner may have removed/rewritten a file this op READ
+    *    (`touchedPaths`) — that would make the merge's inputs stale;
+    *  - no winner-ADDED file may possibly contain one of the op's source
+    *    keys (the exact key-set prune, [[KeyPrune.touched]], re-run against just
+    *    the added files) — otherwise carrying both the winner's file and
+    *    our merged output could duplicate or shadow a key. This is
+    *    stats-conservative: a reorganization whose bins span wide key
+    *    ranges can flag a false overlap and fall back to the loud failure;
+    *    never the reverse.
+    *
+    * On pass: carry-over is recomputed from the WINNER's file set (so a
+    * winner's rewrite of files this op never read — a compaction of cold
+    * partitions, another key range's merge — is carried forward verbatim)
+    * and the commit retries at the new head, looping (bounded) if yet
+    * another writer lands first. Ops that read the whole table
+    * (create/overwrite/compact/optimize) pass no [[RebaseCtx]] and keep the
+    * loud fail-fast contract. */
   private def commitWithRebase(
       parent0: Int, fresh: Seq[FileEntry], carry0: Seq[FileEntry],
       schema: StructType, dataChange: Boolean,
@@ -2664,7 +2662,6 @@ final class CowTable private[storage] (
     var parent = parent0
     var carry = carry0
     var attempts = 0
-    val maxAttempts = spark.conf.get("graft.commitRetries", "5").toInt
     while (true) {
       try return commitAt(parent, fresh, carry, schema, dataChange,
         cdcDir = cdcDir, mappingOpt = mappingOpt)
@@ -2692,8 +2689,8 @@ final class CowTable private[storage] (
           val ctx = rebase.getOrElse(throw e)
           attempts += 1
           val head = currentVersion
-          if (attempts > maxAttempts || head <= parent || base.isEmpty)
-            throw e
+          if (attempts > CowTable.CommitRebaseAttempts || head <= parent ||
+              base.isEmpty) throw e
           val b = base.get
           var wv = parent + 1
           while (wv <= head) {
@@ -2836,11 +2833,6 @@ final class CowTable private[storage] (
       }
   }
 
-  /** Publish a commit whose data files already exist (written by
-    * [[writeVersion]] or by the DSv2 write path's executors): manifest
-    * assembly + the CAS of [[commitManifest]]. `parent` is the version the
-    * writer based its work on — a concurrent commit in between fails the
-    * CAS. Returns the committed version. */
   /** Latest committed epoch of streaming query `queryId`, walking back from
     * the current version (manifests survive vacuum, so the walk is always
     * complete); stops at the query's FIRST marker found — epochs are
@@ -2856,6 +2848,11 @@ final class CowTable private[storage] (
     None
   }
 
+  /** Publish a commit whose data files already exist (written by
+    * [[writeVersion]] or by the DSv2 write path's executors): manifest
+    * assembly + the CAS of [[commitManifest]]. `parent` is the version the
+    * writer based its work on — a concurrent commit in between fails the
+    * CAS. Returns the committed version. */
   private[graft] def commitAt(
       parent: Int, fresh: Seq[FileEntry], carryOver: Seq[FileEntry],
       schema: StructType, dataChange: Boolean = true,
@@ -3058,14 +3055,6 @@ final class CowTable private[storage] (
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Per-file row count + first-key min/max for the freshly written files,
-    * read from the parquet FOOTERS — zero data scanned, O(files) metadata
-    * work, which is what keeps commits cheap at 100 TB (the previous
-    * implementation re-scanned the key column of every new file). Falls back
-    * to a columnar key-column scan if footers can't provide the stats
-    * (unsupported physical type, missing column, stats absent). Missing
-    * stats degrade safely: a file without min/max is always treated as
-    * touched by pruning. */
   /** (name, numeric-compare, dtype) of the stat-tracked key columns — the
     * first TWO primary-key columns (composite-key pruning; further columns
     * add little skip power for their metadata cost). */
@@ -3103,6 +3092,14 @@ final class CowTable private[storage] (
       .map(f => (mapping.getOrElse(f.name, f.name),
         statKeyNumeric(f.dataType), Some(f.dataType)))
 
+  /** Per-file row count + first-key min/max for the freshly written files,
+    * read from the parquet FOOTERS — zero data scanned, O(files) metadata
+    * work, which is what keeps commits cheap at 100 TB (the previous
+    * implementation re-scanned the key column of every new file). Falls back
+    * to a columnar key-column scan if footers can't provide the stats
+    * (unsupported physical type, missing column, stats absent). Missing
+    * stats degrade safely: a file without min/max is always treated as
+    * touched by pruning. */
   private[graft] def statFiles(verDir: Path, schema: StructType,
       mapping: Map[String, String] = Map.empty): Seq[FileEntry] = {
     import scala.jdk.CollectionConverters._
@@ -3514,6 +3511,10 @@ object CowTable {
     * — bounds the [[manifestAt]] fold chain (≤ 7 extra metadata reads). */
   private[graft] val ManifestCheckpointEvery: Int = 8
 
+  /** How often [[commitWithRebase]] rebases onto concurrent winners before
+    * a lost CAS race fails loudly. */
+  private val CommitRebaseAttempts = 5
+
   /** Driver-side cache of FOLDED manifests. Manifest files are append-only
     * (rollback/restore commit NEW versions; they never rewrite an existing
     * file), so a parsed manifest is immutable — but a table dir may be
@@ -3720,12 +3721,12 @@ object CowTable {
     m.files.filter(e =>
       rangeOverlaps(ColRange(e.minKey, e.maxKey), lower, upper, m.keyNumeric))
 
-  /** Open a table directory (existing or about-to-be-created). */
   /** KMV sketch size for [[TableConfig.ndvSketch]] — 64 minima give a
     * ~1/sqrt(k-1) ≈ 13% relative NDV error, plenty for join reordering,
     * at ~0.5 kB of manifest JSON per column per file. */
   val NdvK = 64
 
+  /** Open a table directory (existing or about-to-be-created). */
   def apply(spark: SparkSession, root: String, config: TableConfig): CowTable =
     new CowTable(spark, root, config)
 

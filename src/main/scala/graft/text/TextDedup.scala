@@ -48,8 +48,6 @@ object TextDedup {
       maxIterations: Int = 50): DataFrame =
     nearDupClustersWithRounds(pairs, idA, idB, maxIterations)._1
 
-  /** [[nearDupClusters]] plus the number of star rounds it took — the
-    * O(log n)-convergence evidence the scale specs assert on. */
   /** Plan-cutting materialization for the iterative rounds: RELIABLE
     * `checkpoint()` when the context has a checkpoint dir configured
     * (cluster mode — survives executor loss, where a lost
@@ -60,6 +58,8 @@ object TextDedup {
       df.checkpoint()
     else df.localCheckpoint()
 
+  /** [[nearDupClusters]] plus the number of star rounds it took — the
+    * O(log n)-convergence evidence the scale specs assert on. */
   private[text] def nearDupClustersWithRounds(
       pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
       maxIterations: Int = 50): (DataFrame, Int) = {

@@ -264,6 +264,32 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("the shared main session builder: tuned, UTC, table_changes resolves") {
+    // same clear-active-session pattern as above: a NEW session on the
+    // suite's SparkContext, never stopped (that would stop the context)
+    val base = TestSpark.spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s = graft.core.SessionTuning.builder(defaultCpus = 2).getOrCreate()
+    try {
+      assert(s ne base)
+      assert(s.conf.get(
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+      assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+      val lake = java.nio.file.Files.createTempDirectory("builder").toString
+      s.conf.set("spark.sql.catalog.lake", "graft.sources.GraftCatalog")
+      s.conf.set("spark.sql.catalog.lake.warehouse", lake)
+      s.sql("CREATE TABLE lake.default.sb (id BIGINT) " +
+        "TBLPROPERTIES (primaryKey 'id', changeDataFeed 'true')")
+      s.sql("INSERT INTO lake.default.sb VALUES (1), (2)")
+      assert(s.sql("SELECT id FROM table_changes('lake.sb', 2)").collect()
+        .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+    } finally {
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
+
   test("table_changes TVF reads the change feed through SQL") {
     val base = TestSpark.spark
     SparkSession.clearActiveSession()
