@@ -9,7 +9,7 @@ import graft.storage.{CowTable, TableConfig}
   * every file of a heavily-mutated CDC table paid per-row decode until
   * purge/OPTIMIZE. Now DV'd files stay on the vectorized path (batches
   * without deletions pass through untouched; batches with deletions
-  * compact). This probe builds the RowGroupProbe fixture (4 M rows,
+  * compact). This probe builds a key-clustered fixture (4 M rows,
   * 4 × ~41 MB key-clustered files, ~11 groups/file), DV-deletes a small
   * scattered set (the CDC-merge shape), and times a wide-projection full
   * aggregation three ways:

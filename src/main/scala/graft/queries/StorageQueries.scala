@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * the end-to-end bookmark→dedup→merge pipeline, each checked against a DuckDB
   * oracle that replays the identical semantics in SQL.
   *
-  * Tables are written under GRAFT_TABLE_DIR (default target/graft-tables) —
+  * Tables are written under GRAFT_TABLE_DIR (default target/graft-tables,
+  * resolved against the working directory) —
   * each query rebuilds its table from scratch so results are deterministic
   * for any run order.
   */
@@ -21,8 +22,9 @@ object StorageQueries {
     Tables.table(s, d, n)
 
   def tableDir(name: String): String =
-    sys.env.getOrElse("GRAFT_TABLE_DIR", "/root/repo/target/graft-tables") +
-      "/" + name
+    sys.env.getOrElse("GRAFT_TABLE_DIR",
+      java.nio.file.Paths.get("target", "graft-tables").toAbsolutePath
+        .toString) + "/" + name
 
   /** The synthetic CDC envelope used by q27/q46: events after the cutoff
     * become the change log (DMS-shaped: Op + timestamp + full row image,

@@ -137,16 +137,16 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       e.partition_key)
   }
 
-  /** SQL `TIMESTAMP AS OF ts` (micros since epoch from Spark). */
+  /** SQL `TIMESTAMP AS OF ts` (micros since epoch from Spark), resolved
+    * once here from manifest headers; the handle is then a plain
+    * `versionAsOf` read (writes through it are rejected the same way). */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val e = entryFor(ident).getOrElse(throw new NoSuchTableException(ident))
     val root = rootOf(e)
-    val tsMs = Math.floorDiv(timestampMicros, 1000L)
-    val v = CowTable(SparkSession.active, root.toString, e.config)
-      .versionAsOf(tsMs)
+    val v = CowTable.versionAsOfAt(root, Math.floorDiv(timestampMicros, 1000L))
     new GraftTable(root, v, None,
       new CaseInsensitiveStringMap(
-        java.util.Map.of("timestampAsOf", tsMs.toString)),
+        java.util.Map.of("versionAsOf", v.toString)),
       e.partition_key)
   }
 

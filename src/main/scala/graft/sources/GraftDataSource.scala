@@ -8,9 +8,10 @@ import scala.jdk.CollectionConverters._
 import graft.storage.{CommitManifest, CowTable, FileEntry, PartitionTransform}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, MapType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource V2 connector for CowTable — the catalog-integration surface
@@ -148,30 +149,8 @@ object GraftDataSource {
         throw new IllegalArgumentException(
           s"graft: no tag '$s' at $root (tags: " +
             s"${CowTable.tagsAt(root).keys.toSeq.sorted.mkString(", ")})"))
-    }.getOrElse {
-      // epoch millis OR a timestamp/date string (Delta accepts both;
-      // strings are UTC wall-clock like the commit stamps)
-      Option(options.get("timestampAsOf")).map { s0 =>
-        val s = s0.trim
-        if (s.matches("-?\\d+")) s.toLong
-        else {
-          val ldt =
-            try java.time.LocalDateTime.parse(s.replace(' ', 'T'))
-            catch {
-              case _: java.time.format.DateTimeParseException =>
-                java.time.LocalDate.parse(s).atStartOfDay()
-            }
-          ldt.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-        }
-      } match {
-        case None => cur
-        case Some(ts) =>
-          (1 to cur)
-            .takeWhile(CowTable.manifestHeaderAt(root, _).commitTimeMs <= ts)
-            .lastOption.getOrElse(throw new IllegalArgumentException(
-              s"graft: no commit at or before timestamp $ts in $root"))
-      }
-    }
+    }.getOrElse(timestampMs(options, "timestampAsOf")
+      .fold(cur)(CowTable.versionAsOfAt(root, _)))
     require(v >= 1 && v <= cur,
       s"graft: versionAsOf $v out of range 1..$cur at $root")
     val earliest = CowTable.earliestReadableAt(root)
@@ -179,6 +158,25 @@ object GraftDataSource {
       s"graft: version $v was vacuumed (earliest readable: $earliest)")
     v
   }
+
+  /** A timestamp read option (`timestampAsOf`, `startingTimestamp`,
+    * `endingTimestamp`) as epoch millis: epoch millis OR a timestamp/date
+    * string (Delta accepts both; strings are UTC wall-clock like the commit
+    * stamps, a date is its midnight). */
+  private[sources] def timestampMs(
+      options: CaseInsensitiveStringMap, key: String): Option[Long] =
+    Option(options.get(key)).map(_.trim).map { s =>
+      if (s.matches("-?\\d+")) s.toLong
+      else {
+        val ldt =
+          try java.time.LocalDateTime.parse(s.replace(' ', 'T'))
+          catch {
+            case _: java.time.format.DateTimeParseException =>
+              java.time.LocalDate.parse(s).atStartOfDay()
+          }
+        ldt.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
+      }
+    }
 }
 
 final class GraftTable(
@@ -292,29 +290,12 @@ final class GraftTable(
     val columnar = Seq(Option(options.get("columnar")),
       Option(props.get("columnar"))).flatten.headOption
       .forall(_.trim.toBoolean)
-    // parquet row-group skipping inside surviving files — ON by default;
-    // option/table-property kill switch (pruning-only, so "off" is always
-    // safe, just slower)
-    val rowGroupFilter = Seq(Option(options.get("rowGroupFilter")),
-      Option(props.get("rowGroupFilter"))).flatten.headOption
-      .forall(_.trim.toBoolean)
     // TIMESTAMP window options (Delta CDF parity): resolved here against
     // commit times, so both the batch feed and the streaming source see
     // plain versions. Timestamps are UTC wall-clock (commit stamps are
     // epoch millis); version + timestamp for the same bound conflict loud.
-    def tsMs(key: String): Option[Long] =
-      Option(options.get(key)).map { s =>
-        val t0 = s.trim
-        val ldt =
-          try java.time.LocalDateTime.parse(t0.replace(' ', 'T'))
-          catch {
-            case _: java.time.format.DateTimeParseException =>
-              java.time.LocalDate.parse(t0).atStartOfDay()
-          }
-        ldt.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-      }
-    val startTs = tsMs("startingTimestamp")
-    val endTs = tsMs("endingTimestamp")
+    val startTs = GraftDataSource.timestampMs(options, "startingTimestamp")
+    val endTs = GraftDataSource.timestampMs(options, "endingTimestamp")
     require(startTs.isEmpty || Option(options.get("startingVersion")).isEmpty,
       s"graft: startingVersion and startingTimestamp conflict on $root")
     require(endTs.isEmpty || Option(options.get("endingVersion")).isEmpty,
@@ -336,9 +317,8 @@ final class GraftTable(
       readChangeFeed = cdfRead,
       endingVersion = Option(options.get("endingVersion"))
         .map(_.trim.toInt)
-        .orElse(endTs.map(CowTable.versionAtOrBefore(root, _))))
+        .orElse(endTs.map(CowTable.versionAsOfAt(root, _))))
     new GraftScanBuilder(root, m, schema(), columnar, streamOpts,
-      rowGroupFilter = rowGroupFilter,
       filesSrc = graft.storage.ManifestFiles.lazyAt(root, version))
   }
 
@@ -445,9 +425,6 @@ final class GraftScanBuilder(
       * AFTER the optimizer rule ran its source-bounds job. None ⇒ no extra
       * pruning. Only row-level operations pass a real thunk. */
     dynamicKeep: () => Option[Set[String]] = () => None,
-    /** Parquet row-group skipping toggle (option/table property
-      * `rowGroupFilter`, default on). */
-    rowGroupFilter: Boolean = true,
     /** Lazy file-list source (predicate-pruned cold planning over parquet
       * checkpoints). Null ⇒ wrap the resolved manifest's list (row-level
       * ops, tests) — the pre-r18 behavior. */
@@ -462,9 +439,7 @@ final class GraftScanBuilder(
     Option(filesSrc).getOrElse(graft.storage.ManifestFiles.eager(m.files))
 
   private var required: StructType = fullSchema
-  // set when the whole aggregation is answerable from the manifest:
-  // (output schema, the pre-computed result rows — one per group)
-  private var pushedAgg: Option[(StructType, Seq[Array[Any]])] = None
+  private var pushedAgg: Option[ManifestAgg.Answer] = None
   private var allPushed: Seq[Filter] = Nil
   /** The pushed filters, compiled once into the per-file evaluator the
     * scan, its micro-batch stream and aggregate pushdown share. */
@@ -516,241 +491,6 @@ final class GraftScanBuilder(
 
   override def pushedFilters(): Array[Filter] = pred.pushed.toArray
 
-  /** COMPLETE aggregate pushdown from the manifest — zero data IO,
-    * O(files) driver metadata:
-    *  - COUNT(*): the live-row sum (rows − dvRows per file);
-    *  - MIN/MAX of the LEADING primary-key column: the extremum of the
-    *    per-file footer stats, decodable exactly for numeric/temporal
-    *    keys (stat-string space is the typed value / epoch micros / epoch
-    *    days; parquet numeric footers are exact and null-ignoring, the
-    *    same semantics as SQL MIN/MAX) — REJECTED when any file carries a
-    *    deletion vector (the extremum may be deleted), lacks key stats
-    *    (all-null key file), or the stat string isn't a finite numeral
-    *    (NaN/Infinity doubles);
-    *  - MIN/MAX of a declared [[graft.storage.TableConfig.statsColumns]]
-    *    column: the per-file footer ranges already ride the manifest
-    *    (`FileEntry.extra`) — same numeric/temporal exactness rules, same
-    *    DV rejections; a provably ALL-NULL file (null count == rows) just
-    *    skips; strings rejected (parquet may truncate binary stats — fine
-    *    for pruning, wrong for an exact extremum);
-    *  - COUNT(col) (non-distinct): sum(rows − null count) when every file
-    *    carries a footer null count for the column and no deletion vector;
-    *    the hive partition column counts liveRows of non-null-partition
-    *    files instead (path-borne, DV-exact);
-    *  - GROUP BY the hive PARTITION KEY: the same aggregates answered per
-    *    partition value from the per-file stats (every file must carry a
-    *    path-borne value — an old-layout file after partition-spec
-    *    evolution rejects the pushdown). The most common metadata rollup
-    *    a lake user runs (per-partition row counts), O(files) driver-side.
-    * Spark only attempts aggregate pushdown when every filter was
-    * consumed. Key-range and stats filters always stay residual (their
-    * pruning is approximate), so they block pushdown; whole-conjunct
-    * PARTITION filters are consumed exactly when every file carries a
-    * path value (see [[pushFilters]]) — which is what makes the
-    * partition-scoped metadata query (`COUNT(*) WHERE pk = v`) answerable
-    * here, over the pruned file set. Change-feed reads aggregate change
-    * HISTORY, never pushed. */
-  private def tryManifestAgg(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Option[(StructType, Seq[Array[Any]])] = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-    import org.apache.spark.sql.connector.expressions.NamedReference
-    if (streamOpts.readChangeFeed) return None
-    // `SELECT DISTINCT <partition key>` arrives as a group-by with ZERO
-    // aggregate expressions — answerable as the path-borne value list
-    // (zero IO); the generic group machinery below handles it once the
-    // empty-aggregates guard is scoped to the truly-empty case
-    if (agg.aggregateExpressions.isEmpty && agg.groupByExpressions.isEmpty)
-      return None
-    val pk = m.primaryKey.headOption.getOrElse(return None)
-    val pkType = fullSchema.find(_.name == pk).map(_.dataType)
-      .getOrElse(return None)
-    def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
-        : Option[String] = e match {
-      case nr: NamedReference if nr.fieldNames.length == 1 =>
-        Some(nr.fieldNames.head)
-      case _ => None
-    }
-    def isPk(e: org.apache.spark.sql.connector.expressions.Expression)
-        : Boolean = colOf(e).contains(pk)
-    // MIN/MAX of a [[graft.storage.TableConfig.statsColumns]] column is
-    // answerable from the per-file footer ranges the manifest already
-    // carries (`FileEntry.extra`, keyed by PHYSICAL name) under the same
-    // exactness rules as the key path. STRING stats are rejected even
-    // though files carry them: parquet writers may truncate binary
-    // min/max (fine for pruning, wrong for an exact extremum).
-    def statsCol(e: org.apache.spark.sql.connector.expressions.Expression)
-        : Option[String] =
-      colOf(e).filter(c => c != pk && m.statsColumns.contains(c))
-    def typeDecodable(dt: org.apache.spark.sql.types.DataType): Boolean =
-      GraftScan.statDecodable(dt)
-    def typeDecode(dt: org.apache.spark.sql.types.DataType, s: String): Any =
-      GraftScan.statDecode(dt, s)
-    def decodable: Boolean = typeDecodable(pkType)
-    def decode(s: String): Any = typeDecode(pkType, s)
-    val aggFiles: Seq[FileEntry] = aggScopeFiles
-    // The group structure: no GROUP BY ⇒ one group of all files; GROUP BY
-    // exactly the hive partition key ⇒ one group per path-borne partition
-    // value (every file must carry one — an old-layout file after
-    // partition-spec evolution cannot be attributed, rejecting the whole
-    // pushdown). Anything else ⇒ not answerable from the manifest.
-    val groups: Seq[(Option[Any], Seq[FileEntry])] =
-      agg.groupByExpressions.toSeq match {
-        case Seq() => Seq((None, aggFiles))
-        case Seq(nr: NamedReference)
-          if m.partitionKey.contains(nr.fieldNames.mkString(".")) =>
-          val pcol = m.partitionKey.get
-          val pDt = fullSchema.find(_.name == pcol).map(_.dataType)
-            .getOrElse(return None)
-          val raw = aggFiles.map(e =>
-            GraftScan.pathPartValue(m.partitionKey, e))
-          if (raw.contains(None)) return None // flat-layout file: no value
-          if (scala.util.Try(raw.flatten.distinct.foreach(v =>
-            GraftColumnarPartitionReader.parsePartitionValue(v, pDt)))
-            .isFailure) return None // unparseable dir value: never guess
-          aggFiles.zip(raw.flatten).groupBy(_._2).toSeq.sortBy(_._1)
-            .map { case (v, fs) =>
-              (Some(GraftColumnarPartitionReader.parsePartitionValue(v, pDt)),
-                fs.map(_._1))
-            }
-        case _ => return None
-      }
-    // a partition whose files are ALL fully DV-deleted (liveRows sums to 0)
-    // still lists its files in the manifest (writeFoldedSidecar keeps them
-    // for time travel) — but a real scan emits NO group for it: neither
-    // `SELECT DISTINCT part` nor a grouped COUNT may surface the value.
-    // Drop dead groups before emitting; the GLOBAL (no group-by) row is
-    // unaffected and still always emitted (partial-COUNT contract).
-    val liveGroups =
-      if (agg.groupByExpressions.isEmpty) groups
-      else groups.filter { case (_, fs) => fs.map(_.liveRows).sum > 0 }
-    if (groups.isEmpty) return None // zero files: the plain scan handles it
-    // EVERY group dead (all files fully DV-deleted): the rows loop below
-    // never runs, so aggFields would stay empty and the reported schema
-    // (group column only) would miss the aggregate fields Spark consumes
-    // positionally — planning would fail instead of returning the empty
-    // result. Fall back to the plain scan, which yields it correctly.
-    if (agg.groupByExpressions.nonEmpty && liveGroups.isEmpty) return None
-    def statsUsable(fs: Seq[FileEntry]): Boolean =
-      fs.forall(e => e.dvPath.isEmpty &&
-        e.minKey.isDefined && e.maxKey.isDefined &&
-        scala.util.Try(BigDecimal(e.minKey.get) +
-          BigDecimal(e.maxKey.get)).isSuccess)
-    // statsColumns twin of [[statsUsable]]: every file must carry a finite
-    // footer range for the PHYSICAL column and no deletion vector (the
-    // extremum may be deleted) — EXCEPT a provably ALL-NULL file (null
-    // count == rows), which has no range but contributes nothing to a
-    // null-ignoring MIN/MAX and may simply be skipped.
-    def extraUsable(fs: Seq[FileEntry], phys: String): Boolean =
-      fs.forall(e => e.dvPath.isEmpty &&
-        (e.extra.get(phys).exists(r => r.mn.isDefined && r.mx.isDefined &&
-          scala.util.Try(BigDecimal(r.mn.get) +
-            BigDecimal(r.mx.get)).isSuccess) ||
-          e.nulls.get(phys).contains(e.rows)))
-    // COUNT(col) (non-distinct, null-excluding) is answerable when every
-    // file carries a null count for the column: sum(rows − nulls). Any
-    // deletion vector rejects (the deleted rows' null-ness is unknown).
-    // The hive PARTITION column counts from liveRows instead: a file's
-    // rows all share its path value (null partition ⇒ all null), and
-    // liveRows stays exact under deletion vectors.
-    def countable(fs: Seq[FileEntry], c: String): Option[Long] =
-      if (m.partitionKey.contains(c)) {
-        val vals = fs.map(e => GraftScan.pathPartValue(m.partitionKey, e))
-        if (vals.contains(None)) None // flat-layout file: value unknown
-        else Some(fs.zip(vals.flatten).collect {
-          case (e, v) if v != GraftScan.NullPartitionName => e.liveRows
-        }.sum)
-      } else {
-        val phys = m.physicalName(c)
-        if (fs.forall(e => e.dvPath.isEmpty && e.nulls.contains(phys)))
-          Some(fs.map(e => e.rows - e.nulls(phys)).sum)
-        else None
-      }
-    // a ZERO floating-point extremum is sign-ambiguous in parquet stats
-    // (readers widen +0.0 → -0.0 per the spec's FP-stats guidance) — fine
-    // for pruning, not for an exact answer: reject the pushdown
-    def fpAmbiguous(dt: org.apache.spark.sql.types.DataType, s: String)
-        : Boolean = dt match {
-      case org.apache.spark.sql.types.DoubleType |
-           org.apache.spark.sql.types.FloatType =>
-        scala.util.Try(BigDecimal(s) == 0).getOrElse(true)
-      case _ => false
-    }
-    // field layout of a complete group-by pushdown: group columns first,
-    // then the aggregate columns, in declared order (Spark projects the
-    // scan output positionally against exactly that shape)
-    val gField = agg.groupByExpressions.toSeq.map { _ =>
-      val pcol = m.partitionKey.get
-      StructField(pcol, fullSchema(pcol).dataType, nullable = true)
-    }
-    val aggFields = scala.collection.mutable.ArrayBuffer.empty[StructField]
-    val rows = liveGroups.map { case (gv, fs) =>
-      aggFields.clear()
-      val values = scala.collection.mutable.ArrayBuffer.empty[Any]
-      gv.foreach(values += _)
-      lazy val minStr = fs.map(_.minKey.get).minBy(BigDecimal(_))
-      lazy val maxStr = fs.map(_.maxKey.get).maxBy(BigDecimal(_))
-      agg.aggregateExpressions.zipWithIndex.foreach {
-        case (_: CountStar, i) =>
-          aggFields += StructField(s"manifest_agg_$i", LongType,
-            nullable = false)
-          values += fs.map(_.liveRows).sum
-        case (mn: Min, i) if isPk(mn.column) && decodable =>
-          if (!statsUsable(fs)) return None
-          if (fs.nonEmpty && fpAmbiguous(pkType, minStr)) return None
-          aggFields += StructField(s"manifest_agg_$i", pkType,
-            nullable = true)
-          values += (if (fs.isEmpty) null else decode(minStr))
-        case (mx: Max, i) if isPk(mx.column) && decodable =>
-          if (!statsUsable(fs)) return None
-          if (fs.nonEmpty && fpAmbiguous(pkType, maxStr)) return None
-          aggFields += StructField(s"manifest_agg_$i", pkType,
-            nullable = true)
-          values += (if (fs.isEmpty) null else decode(maxStr))
-        case (mn: Min, i) if statsCol(mn.column).exists(c =>
-            fullSchema.find(_.name == c).map(_.dataType)
-              .exists(typeDecodable)) =>
-          val c = statsCol(mn.column).get
-          val dt = fullSchema(c).dataType
-          val phys = m.physicalName(c)
-          if (fs.nonEmpty && !extraUsable(fs, phys)) return None
-          aggFields += StructField(s"manifest_agg_$i", dt, nullable = true)
-          val ranged = fs.filter(_.extra.contains(phys)) // all-null files skip
-          values += (if (ranged.isEmpty) null
-            else {
-              val s = ranged.map(_.extra(phys).mn.get).minBy(BigDecimal(_))
-              if (fpAmbiguous(dt, s)) return None
-              scala.util.Try(typeDecode(dt, s)).getOrElse(return None)
-            })
-        case (mx: Max, i) if statsCol(mx.column).exists(c =>
-            fullSchema.find(_.name == c).map(_.dataType)
-              .exists(typeDecodable)) =>
-          val c = statsCol(mx.column).get
-          val dt = fullSchema(c).dataType
-          val phys = m.physicalName(c)
-          if (fs.nonEmpty && !extraUsable(fs, phys)) return None
-          aggFields += StructField(s"manifest_agg_$i", dt, nullable = true)
-          val ranged = fs.filter(_.extra.contains(phys)) // all-null files skip
-          values += (if (ranged.isEmpty) null
-            else {
-              val s = ranged.map(_.extra(phys).mx.get).maxBy(BigDecimal(_))
-              if (fpAmbiguous(dt, s)) return None
-              scala.util.Try(typeDecode(dt, s)).getOrElse(return None)
-            })
-        case (ct: org.apache.spark.sql.connector.expressions.aggregate.Count,
-            i) if !ct.isDistinct && colOf(ct.column).isDefined =>
-          val c = colOf(ct.column).get
-          val n = countable(fs, c).getOrElse(return None)
-          aggFields += StructField(s"manifest_agg_$i", LongType,
-            nullable = false)
-          values += n
-        case _ => return None
-      }
-      values.toArray
-    }
-    Some((StructType(gField ++ aggFields.toSeq), rows))
-  }
-
   /** The files an aggregation ranges over. Spark attempts aggregate
     * pushdown only when no residual filter remains, so every pushed filter
     * is a CONSUMED partition filter (consumption invariant: every file
@@ -760,194 +500,28 @@ final class GraftScanBuilder(
   private def aggScopeFiles: Seq[FileEntry] =
     mfiles.pruned(pred.ckptPred).filter(pred.keeps)
 
-  private var partialAgg: Option[PartialAgg.Plan] = None
-
-  /** PARTIAL aggregate pushdown — the per-file refinement tried only when
-    * the complete manifest answer is impossible (see [[PartialAgg]]).
-    * Global MIN/MAX of the leading key / a stats column, COUNT(*), and
-    * COUNT(non-partition col): every file whose manifest evidence answers
-    * EVERY aggregate folds driver-side; DV'd / stat-less / all-null-key /
-    * ±0.0-extremum files are read per-file instead of failing the whole
-    * pushdown. Declines when nothing folds (no benefit over the normal
-    * plan) — declining is always sound, Spark just runs the full scan. */
-  private def tryPartialAgg(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Option[PartialAgg.Plan] = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min}
-    import org.apache.spark.sql.connector.expressions.NamedReference
-    if (streamOpts.readChangeFeed || agg.aggregateExpressions.isEmpty)
-      return None
-    val pk = m.primaryKey.headOption.getOrElse(return None)
-    def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
-        : Option[String] = e match {
-      case nr: NamedReference if nr.fieldNames.length == 1 =>
-        Some(nr.fieldNames.head)
-      case _ => None
-    }
-    val files = aggScopeFiles
-    if (files.isEmpty) return None
-    // grouping: none (global), or exactly the hive partition key — then
-    // every file must carry a parseable path value (it pins the one group
-    // a DV'd file's pre-aggregated row belongs to)
-    val grouping: Option[(String, DataType)] =
-      agg.groupByExpressions.toSeq match {
-        case Seq() => None
-        case Seq(nr: NamedReference)
-          if m.partitionKey.contains(nr.fieldNames.mkString(".")) =>
-          val pcol = m.partitionKey.get
-          Some((pcol, fullSchema.find(_.name == pcol).map(_.dataType)
-            .getOrElse(return None)))
-        case _ => return None
-      }
-    // group value per file (null = the hive null partition); global reads
-    // share the single unit group
-    val groupOf: Map[String, Any] = grouping match {
-      case None => Map.empty
-      case Some((_, pDt)) =>
-        files.map { e =>
-          val raw = GraftScan.pathPartValue(m.partitionKey, e)
-            .getOrElse(return None) // flat-layout file: group unknown
-          e.path -> scala.util.Try(
-            GraftColumnarPartitionReader.parsePartitionValue(raw, pDt))
-            .getOrElse(return None)
-        }.toMap
-    }
-    // kind: '*' COUNT(*), 'c' COUNT(col), 'm' MIN, 'M' MAX
-    final case class RA(col: Option[String], kind: Char, dt: DataType)
-    val ras: Seq[RA] = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => RA(None, '*', LongType)
-      case ct: Count if !ct.isDistinct =>
-        val c = colOf(ct.column).getOrElse(return None)
-        if (m.partitionKey.contains(c)) return None // path-borne: complete-only
-        val f = fullSchema.find(_.name == c).getOrElse(return None)
-        f.dataType match {
-          case _: StructType | _: ArrayType | _: MapType => return None
-          case _ => ()
-        }
-        RA(Some(c), 'c', f.dataType)
-      case mn: Min =>
-        val c = colOf(mn.column).getOrElse(return None)
-        val dt = fullSchema.find(_.name == c).map(_.dataType)
-          .getOrElse(return None)
-        if ((c != pk && !m.statsColumns.contains(c)) ||
-          !GraftScan.statDecodable(dt)) return None
-        RA(Some(c), 'm', dt)
-      case mx: Max =>
-        val c = colOf(mx.column).getOrElse(return None)
-        val dt = fullSchema.find(_.name == c).map(_.dataType)
-          .getOrElse(return None)
-        if ((c != pk && !m.statsColumns.contains(c)) ||
-          !GraftScan.statDecodable(dt)) return None
-        RA(Some(c), 'M', dt)
-      case _ => return None
-    }
-    def fpAmb(dt: DataType, s: String): Boolean = dt match {
-      case DoubleType | FloatType =>
-        scala.util.Try(BigDecimal(s) == 0).getOrElse(true)
-      case _ => false
-    }
-    // one file's manifest answer for one aggregate:
-    //   None = undecidable (read the file); Some(Left(n)) = a count;
-    //   Some(Right(Some(stat))) = an extremum; Some(Right(None)) = the
-    //   file provably contributes nothing (all-null column)
-    def answer(e: FileEntry, ra: RA)
-        : Option[Either[Long, Option[String]]] = ra.kind match {
-      case '*' => Some(Left(e.liveRows)) // exact under deletion vectors
-      case 'c' =>
-        val phys = m.physicalName(ra.col.get)
-        if (e.dvPath.isEmpty && e.nulls.contains(phys))
-          Some(Left(e.rows - e.nulls(phys)))
-        else None // deleted rows' null-ness unknown
+  /** [[ManifestAgg]]'s answer, memoized per Aggregation: Spark asks
+    * `supportCompletePushDown` and `pushAggregation` about the same object.
+    * Change-feed reads aggregate change HISTORY, never pushed. */
+  private var aggMemo: Option[(Aggregation, Option[ManifestAgg.Answer])] =
+    None
+  private def aggAnswer(agg: Aggregation): Option[ManifestAgg.Answer] =
+    aggMemo match {
+      case Some((a, r)) if a eq agg => r
       case _ =>
-        if (e.dvPath.isDefined) return None // the extremum may be deleted
-        val isK = ra.col.contains(pk)
-        val phys = m.physicalName(ra.col.get)
-        val side =
-          if (isK) { if (ra.kind == 'm') e.minKey else e.maxKey }
-          else e.extra.get(phys)
-            .flatMap(r => if (ra.kind == 'm') r.mn else r.mx)
-        side match {
-          // require the per-type decode too, so row construction below
-          // can never fail after a file was accepted
-          case Some(s) if scala.util.Try {
-            BigDecimal(s); GraftScan.statDecode(ra.dt, s)
-          }.isSuccess && !fpAmb(ra.dt, s) => Some(Right(Some(s)))
-          case None if e.nulls.get(phys).contains(e.rows) =>
-            Some(Right(None)) // provably all-null: null-ignoring skip
-          case _ => None
-        }
+        val r =
+          if (streamOpts.readChangeFeed) None
+          else ManifestAgg.evaluate(agg, m, fullSchema, aggScopeFiles)
+        aggMemo = Some((agg, r))
+        r
     }
-    final class Acc {
-      val counts = Array.fill(ras.size)(0L)
-      val bestStr = Array.fill[String](ras.size)(null)
-    }
-    val folds = scala.collection.mutable.LinkedHashMap.empty[Any, Acc]
-    val reads = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
-    files.foreach { e =>
-      val ans = ras.map(ra => answer(e, ra))
-      if (ans.exists(_.isEmpty)) reads += e
-      else {
-        val acc = folds.getOrElseUpdate(
-          if (grouping.isDefined) groupOf(e.path) else (), new Acc)
-        ans.zipWithIndex.foreach {
-          case (Some(Left(n)), i) => acc.counts(i) += n
-          case (Some(Right(Some(s))), i) =>
-            val better = acc.bestStr(i) == null || {
-              val c = BigDecimal(s).compare(BigDecimal(acc.bestStr(i)))
-              if (ras(i).kind == 'm') c < 0 else c > 0
-            }
-            if (better) acc.bestStr(i) = s
-          case _ => ()
-        }
-      }
-    }
-    // nothing to read ⇒ the complete path answers (never shadow it);
-    // everything to read ⇒ no benefit over the normal scan
-    if (reads.isEmpty || reads.size == files.size) return None
-    def rowOf(acc: Acc): Array[Any] = ras.zipWithIndex.map {
-      case (RA(_, '*' | 'c', _), i) => acc.counts(i): Any
-      case (ra, i) =>
-        if (acc.bestStr(i) == null) null
-        else GraftScan.statDecode(ra.dt, acc.bestStr(i)) // pre-validated
-    }.toArray
-    val manifestRows: Seq[Array[Any]] =
-      if (grouping.isDefined)
-        folds.toSeq.map { case (gv, acc) => (gv +: rowOf(acc).toSeq).toArray }
-      else Seq(rowOf(folds(())))
-    val readCols: Seq[String] = ras.flatMap(ra =>
-      if (ra.kind == '*') None else ra.col).distinct
-    val readSchema = StructType(readCols.map(c => fullSchema(c)))
-    val specs: Seq[PartialAgg.Spec] = ras.map {
-      case RA(None, _, _) => PartialAgg.CountStarSpec()
-      case RA(Some(c), 'c', _) => PartialAgg.CountColSpec(readCols.indexOf(c))
-      case RA(Some(c), 'm', dt) => PartialAgg.MinSpec(readCols.indexOf(c), dt)
-      case RA(Some(c), _, dt) => PartialAgg.MaxSpec(readCols.indexOf(c), dt)
-    }
-    val gField = grouping.toSeq.map { case (pcol, pDt) =>
-      StructField(pcol, pDt, nullable = true) }
-    val schema = StructType(gField ++ ras.zipWithIndex.map {
-      case (RA(_, '*' | 'c', _), i) =>
-        StructField(s"partial_agg_$i", LongType, nullable = false)
-      case (ra, i) => StructField(s"partial_agg_$i", ra.dt, nullable = true)
-    })
-    val prefixes: Map[String, Array[Any]] =
-      if (grouping.isEmpty) Map.empty
-      else reads.map(e => e.path -> Array[Any](groupOf(e.path))).toMap
-    Some(PartialAgg.Plan(
-      schema, manifestRows, reads.toSeq, readSchema, specs, prefixes,
-      totalFiles = files.size))
-  }
 
-  override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Boolean = tryManifestAgg(agg).isDefined
+  override def supportCompletePushDown(agg: Aggregation): Boolean =
+    aggAnswer(agg).exists(_.isLeft)
 
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Boolean = {
-    pushedAgg = tryManifestAgg(agg)
-    if (pushedAgg.isEmpty) partialAgg = tryPartialAgg(agg)
-    pushedAgg.isDefined || partialAgg.isDefined
+  override def pushAggregation(agg: Aggregation): Boolean = {
+    pushedAgg = aggAnswer(agg)
+    pushedAgg.isDefined
   }
 
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -1008,19 +582,21 @@ final class GraftScanBuilder(
   override def isPartiallyPushed(): Boolean = true
 
   override def build(): Scan = {
-    pushedAgg.foreach { case (schema, groupRows) =>
-      return new Scan with org.apache.spark.sql.connector.read.LocalScan {
-        override def readSchema(): StructType = schema
-        override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-          groupRows.map(vs => new org.apache.spark.sql.catalyst.expressions
-            .GenericInternalRow(vs): org.apache.spark.sql.catalyst.InternalRow)
-            .toArray
-        override def description(): String =
-          s"graft manifest-agg pushdown v${m.version} " +
-            s"(${groupRows.size} group rows, 0 files read)"
-      }
+    pushedAgg.foreach {
+      case Left((schema, groupRows)) =>
+        return new Scan with org.apache.spark.sql.connector.read.LocalScan {
+          override def readSchema(): StructType = schema
+          override def rows()
+              : Array[org.apache.spark.sql.catalyst.InternalRow] =
+            groupRows.map(vs => new org.apache.spark.sql.catalyst.expressions
+              .GenericInternalRow(vs): org.apache.spark.sql.catalyst.InternalRow)
+              .toArray
+          override def description(): String =
+            s"graft manifest-agg pushdown v${m.version} " +
+              s"(${groupRows.size} group rows, 0 files read)"
+        }
+      case Right(p) => return new GraftPartialAggScan(root, m, p)
     }
-    partialAgg.foreach { p => return new GraftPartialAggScan(root, m, p) }
     required.fields.foreach { f =>
       f.dataType match {
         case _: StructType | _: ArrayType | _: MapType =>
@@ -1033,7 +609,7 @@ final class GraftScanBuilder(
     }
     new GraftScan(root, m, required, pred, columnar, streamOpts,
       consumedPartFilter, dynamicKeep, topNPush, limitPush,
-      pushedSource = if (rowGroupFilter) allPushed else Nil,
+      pushedSource = allPushed,
       filesSrc = mfiles)
   }
 }
@@ -1303,10 +879,8 @@ final class GraftScan(
   /** Manifest-derived statistics for the PRUNED file set — what lets
     * Catalyst auto-broadcast a small graft table in a join (and shrink the
     * estimate further when partition/key pruning dropped files) without
-    * opening a single data file at planning time. `bytes` rides in the
-    * manifest; a pre-upgrade entry (bytes=0) is stat'ed lazily — O(kept
-    * files) driver metadata IO, once per plan, only on old tables. The
-    * reference formats all feed Spark's join planning the same way (Delta
+    * opening a single data file at planning time: `bytes` rides in the
+    * manifest. The reference formats all feed Spark's join planning the same way (Delta
     * add-file sizes / Iceberg manifests). */
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
@@ -1321,11 +895,7 @@ final class GraftScan(
           java.util.OptionalLong.empty()
       }
     val rowCount = kept.map(_.liveRows).sum
-    val sizeBytes = kept.map { e =>
-      if (e.bytes > 0L) e.bytes
-      else scala.util.Try(java.nio.file.Files.size(root.resolve(e.path)))
-        .getOrElse(0L)
-    }.sum
+    val sizeBytes = kept.map(_.bytes).sum
     // COLUMN STATISTICS for CBO (estimates by contract — deletion vectors
     // may make ranges/null counts slightly stale-wide, which only makes
     // the optimizer conservative, never wrong):

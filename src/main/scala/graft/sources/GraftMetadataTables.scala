@@ -124,10 +124,6 @@ object GraftMetadataTables {
     val earliest = CowTable.earliestReadableAt(root)
     val createdMs = scala.util.Try(
       CowTable.manifestAt(root, earliest).commitTimeMs).getOrElse(0L)
-    def bytesOf(f: graft.storage.FileEntry): Long =
-      if (f.bytes > 0) f.bytes
-      else scala.util.Try(
-        java.nio.file.Files.size(root.resolve(f.path))).getOrElse(0L)
     val branches = {
       val dir = root.resolve("_branches")
       if (!java.nio.file.Files.isDirectory(dir)) 0
@@ -144,7 +140,7 @@ object GraftMetadataTables {
       if (createdMs > 0) createdMs * 1000L else null,
       if (m.commitTimeMs > 0) m.commitTimeMs * 1000L else null,
       m.files.size.toLong, m.files.map(_.liveRows).sum,
-      m.files.map(bytesOf).sum,
+      m.files.map(_.bytes).sum,
       m.files.count(_.dvPath.isDefined).toLong,
       m.files.map(_.dvRows).sum,
       UTF8String.fromString(m.primaryKey.mkString(",")),
@@ -209,10 +205,7 @@ object GraftMetadataTables {
     val (m, files) = scopedFiles(root, cur, partIn)
     files.map { f =>
       new GenericInternalRow(Array[Any](
-        UTF8String.fromString(f.path), f.rows,
-        if (f.bytes > 0) f.bytes
-        else scala.util.Try(
-          java.nio.file.Files.size(root.resolve(f.path))).getOrElse(0L),
+        UTF8String.fromString(f.path), f.rows, f.bytes,
         f.minKey.map(UTF8String.fromString).orNull,
         f.maxKey.map(UTF8String.fromString).orNull,
         f.minKey2.map(UTF8String.fromString).orNull,
@@ -235,14 +228,10 @@ object GraftMetadataTables {
     val cur = CowTable.currentVersionAt(root)
     if (cur == 0) return Array.empty
     val (m, files) = scopedFiles(root, cur, partIn)
-    def bytesOf(f: graft.storage.FileEntry): Long =
-      if (f.bytes > 0) f.bytes
-      else scala.util.Try(
-        java.nio.file.Files.size(root.resolve(f.path))).getOrElse(0L)
     files.groupBy(f => GraftScan.pathPartValue(m.partitionKey, f))
       .toSeq.sortBy(_._1.getOrElse(""))
       .map { case (pv, fs) =>
-        val bytes = fs.map(bytesOf).sum
+        val bytes = fs.map(_.bytes).sum
         new GenericInternalRow(Array[Any](
           pv.map(UTF8String.fromString).orNull,
           fs.size.toLong, fs.map(_.rows).sum, bytes,

@@ -21,10 +21,10 @@ import org.json4s.jackson.Serialization
   * tables (absent on single-key tables and pre-upgrade manifests — both
   * degrade to "no col-2 stats ⇒ no extra pruning", never to a wrong skip):
   * each column prunes independently, so a MERGE touching (a=1, b=high) can
-  * carry files holding only (a=1, b=low). `bytes` is the file's on-disk size
-  * (0 on pre-upgrade manifests ⇒ callers stat the file lazily) — what the
-  * DSv2 scan reports to Catalyst so small graft tables auto-broadcast in
-  * joins without touching any data file at planning time.
+  * carry files holding only (a=1, b=low). `bytes` is the file's on-disk size,
+  * recorded by every writer — what the DSv2 scan reports to Catalyst so
+  * small graft tables auto-broadcast in joins without touching any data
+  * file at planning time.
   */
 final case class FileEntry(
     path: String, rows: Long, minKey: Option[String], maxKey: Option[String],
@@ -1299,7 +1299,7 @@ final class CowTable private[storage] (
   }
 
   /** Union a per-commit plan list without unbounded Catalyst growth: past
-    * `graft.feedChunkCommits` (default 32) branches, each chunk is
+    * [[CowTable.FeedChunkCommits]] branches, each chunk is
     * materialized via an eager localCheckpoint — a lineage cut, so a month
     * of hourly commits (720) analyzes ~23 bounded subplans instead of one
     * 720-branch Catalyst tree (O(commits) driver memory + analysis time).
@@ -1308,15 +1308,13 @@ final class CowTable private[storage] (
     * EAGER (a feed over hundreds of commits runs its chunk jobs at
     * construction)
     * and the blocks are executor-local (an executor lost mid-read cannot
-    * recompute them — on a cluster with decommissioning, raise the chunk
-    * size or set a reliable checkpoint dir and swap to `checkpoint()`).
+    * recompute them — on a cluster with decommissioning, set a reliable
+    * checkpoint dir and swap to `checkpoint()`).
     * The alternative — a thousand-branch union — fails the analyzer
     * outright, which is worse than either cost. */
   private def unionBounded(parts: Seq[DataFrame]): DataFrame = {
-    val chunk = math.max(2,
-      spark.conf.get("graft.feedChunkCommits", "32").toInt)
-    if (parts.size <= chunk) parts.reduce(_.unionAll(_))
-    else parts.grouped(chunk)
+    if (parts.size <= CowTable.FeedChunkCommits) parts.reduce(_.unionAll(_))
+    else parts.grouped(CowTable.FeedChunkCommits)
       .map(g => g.reduce(_.unionAll(_)).localCheckpoint())
       .reduce(_.unionAll(_))
   }
@@ -1696,17 +1694,9 @@ final class CowTable private[storage] (
   }
 
   /** Latest version whose commit time is <= `tsMs` — `TIMESTAMP AS OF`
-    * resolution (commit times are stamped by the injectable [[withClock]]
-    * clock, monotone under the single-writer discipline; resolution scans
-    * O(versions) manifests, pure metadata). */
-  def versionAsOf(tsMs: Long): Int = {
-    val cur = currentVersion
-    require(cur > 0, s"table ${config.tableName} does not exist")
-    val v = (1 to cur).takeWhile(manifest(_).commitTimeMs <= tsMs).lastOption
-    v.getOrElse(throw new IllegalArgumentException(
-      s"no commit at or before timestamp $tsMs (earliest commit: " +
-        s"${manifest(1).commitTimeMs})"))
-  }
+    * resolution ([[CowTable.versionAsOfAt]]; commit times are stamped by
+    * the injectable [[withClock]] clock). */
+  def versionAsOf(tsMs: Long): Int = CowTable.versionAsOfAt(root, tsMs)
 
   /** Time-travel by timestamp (`TIMESTAMP AS OF` — the Delta/Iceberg surface
     * VERSION-only travel lacked); subject to the same vacuum low-water mark
@@ -2162,9 +2152,7 @@ final class CowTable private[storage] (
     val cur = currentVersion
     require(cur > 0, s"table ${config.tableName} does not exist")
     require(retainMs >= 0, "retainMs must be non-negative")
-    val cutoff = clockMs() - retainMs
-    var v = cur
-    while (v > 1 && manifest(v).commitTimeMs > cutoff) v -= 1
+    val v = CowTable.versionAtOrBefore(root, clockMs() - retainMs).getOrElse(1)
     vacuum(retainLast = cur - v + 1)
   }
 
@@ -3226,14 +3214,16 @@ final class CowTable private[storage] (
     * dir may be trusted — a zombie task attempt could still be writing).
     * Degrades safely, never drops data: any stat failure — and decimal keys,
     * whose footer stats are unscaled and would misprune — falls back to the
-    * message-carried row counts with no min/max (stat-less ⇒ always treated
-    * as touched by pruning). */
+    * message-carried row counts and the on-disk size with no min/max
+    * (stat-less ⇒ always treated as touched by pruning). */
   private[graft] def statListedFiles(
       files: Seq[(String, Long)], schema: StructType,
       mapping: Map[String, String] = Map.empty): Seq[FileEntry] = {
     if (files.isEmpty) return Nil
     val keyDt = schema.find(_.name == config.primaryKey.head).map(_.dataType)
-    def fallback = files.map { case (p, n) => FileEntry(p, n, None, None) }
+    def fallback = files.map { case (p, n) =>
+      FileEntry(p, n, None, None, bytes = Files.size(root.resolve(p)))
+    }
     if (keyDt.exists(_.isInstanceOf[org.apache.spark.sql.types.DecimalType]))
       fallback
     else {
@@ -3337,7 +3327,7 @@ final class CowTable private[storage] (
       val nullsMap = (cols.map(_._1) ++ extras.map(_._1)).distinct
         .flatMap(k => colNulls(k).map(k -> _)).toMap
       FileEntry(relativize(file.toString), rows, mn, mx, mn2, mx2,
-        bytes = Try(Files.size(file)).getOrElse(0L), extra = extraMap,
+        bytes = Files.size(file), extra = extraMap,
         nulls = nullsMap)
     } finally reader.close()
   }
@@ -3384,7 +3374,7 @@ final class CowTable private[storage] (
           FileEntry(rel, r.getLong(1),
             Option(r.getString(2)), Option(r.getString(3)),
             Option(r.getString(4)), Option(r.getString(5)),
-            bytes = Try(Files.size(root.resolve(rel))).getOrElse(0L))
+            bytes = Files.size(root.resolve(rel)))
         }.sortBy(_.path)
     }.getOrElse(Nil) // empty write ⇒ no readable files ⇒ no entries
   }
@@ -3646,15 +3636,23 @@ object CowTable {
           s"(${manifestHeaderAt(root, cur).commitTimeMs}) of $root"))
   }
 
-  /** `endingTimestamp` twin: the LATEST version committed at or before
-    * `tsMs` — loud when the timestamp precedes the first commit. */
-  private[graft] def versionAtOrBefore(root: Path, tsMs: Long): Int = {
-    val cur = currentVersionAt(root)
-    require(cur > 0, s"graft: no table at $root")
-    (1 to cur).takeWhile(v => manifestHeaderAt(root, v).commitTimeMs <= tsMs)
-      .lastOption.getOrElse(throw new IllegalArgumentException(
-        s"graft: endingTimestamp $tsMs precedes the first commit " +
-          s"(${manifestHeaderAt(root, 1).commitTimeMs}) of $root"))
+  /** The one timestamp→version resolver (`TIMESTAMP AS OF`,
+    * `timestampAsOf`, `endingTimestamp`, age-based vacuum): the LATEST
+    * version committed at or before `tsMs`, None when `tsMs` precedes the
+    * first commit. Header-only reads walking back from the current version
+    * (commit times are monotone under the single-writer discipline), so a
+    * recent timestamp costs a few small JSON reads at any table size. */
+  private[graft] def versionAtOrBefore(root: Path, tsMs: Long): Option[Int] =
+    Iterator.iterate(currentVersionAt(root))(_ - 1).takeWhile(_ >= 1)
+      .find(v => manifestHeaderAt(root, v).commitTimeMs <= tsMs)
+
+  /** [[versionAtOrBefore]], loud when the timestamp precedes the first
+    * commit. */
+  private[graft] def versionAsOfAt(root: Path, tsMs: Long): Int = {
+    require(currentVersionAt(root) > 0, s"graft: no table at $root")
+    versionAtOrBefore(root, tsMs).getOrElse(throw new IllegalArgumentException(
+      s"graft: timestamp $tsMs precedes the first commit " +
+        s"(${manifestHeaderAt(root, 1).commitTimeMs}) of $root"))
   }
 
   /** A filter/merge bound in the manifest stats' value space: temporal
@@ -3725,6 +3723,10 @@ object CowTable {
     * ~1/sqrt(k-1) ≈ 13% relative NDV error, plenty for join reordering,
     * at ~0.5 kB of manifest JSON per column per file. */
   val NdvK = 64
+
+  /** Per-commit branches a change-feed union carries before it is cut
+    * into checkpointed chunks ([[CowTable.unionBounded]]). */
+  private[graft] val FeedChunkCommits = 32
 
   /** Open a table directory (existing or about-to-be-created). */
   def apply(spark: SparkSession, root: String, config: TableConfig): CowTable =

@@ -39,6 +39,23 @@ class GraftWriteSpec extends SparkSpec {
     assert(fresh.flatMap(_.minKey).map(BigDecimal(_)).min == BigDecimal(101))
   }
 
+  test("a decimal-keyed append records every file's on-disk size") {
+    val dir = tmpDir("dsv2w") + "/t"
+    def rows(ids: Range) = ids.map(i => (s"$i.25", s"n$i")).toDF("k_s", "name")
+      .select($"k_s".cast("decimal(10,2)").as("k"), $"name")
+    val t = CowTable(spark, dir, TableConfig("t", Seq("k")))
+    t.create(rows(1 to 50))
+    // decimal keys take the stat-less listed-files path (unscaled footers)
+    rows(51 to 80).repartition(2).write.format("graft").mode("append")
+      .save(dir)
+    val files = t.manifest(t.currentVersion).files
+    assert(files.size >= 2, files)
+    files.foreach(f => assert(
+      f.bytes == java.nio.file.Files.size(java.nio.file.Paths.get(dir, f.path)),
+      s"${f.path}: bytes=${f.bytes}"))
+    assert(spark.read.format("graft").load(dir).count() == 80L)
+  }
+
   test("mode(overwrite).save truncates: new snapshot replaces the old") {
     val dir = tmpDir("dsv2w") + "/t"
     val t = CowTable(spark, dir, TableConfig("t", Seq("id")))

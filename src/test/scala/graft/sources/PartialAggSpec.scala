@@ -108,32 +108,83 @@ class PartialAggSpec extends SparkSpec {
   }
 
   test("differential sweep: random DV populations, engine == brute force") {
+    // each trial draws a layout; every trial runs the same four aggregate
+    // shapes (global, GROUP BY partition, COUNT(partition), DISTINCT
+    // partition) and compares them with brute force over the live rows
+    val layouts = Seq("dv", "clean", "nullKey", "fpZero", "deadPart",
+      "countPart", "distinct")
     val rnd = new scala.util.Random(20260816L)
-    for (trial <- 1 to 10) {
+    val draws = rnd.shuffle(layouts) ++
+      Seq.fill(3)(layouts(rnd.nextInt(layouts.size)))
+    for ((layout, trial) <- draws.zipWithIndex) {
       val dir = tmpDir("pagg")
       val n = 60 + rnd.nextInt(140)
-      val rows = (1L to n.toLong).map(i =>
-        (i, if (rnd.nextInt(7) == 0) None else Some(rnd.nextInt(1000).toLong)))
+      val segs = Seq("A", "B", "C") ++
+        (if (Set("countPart", "distinct", "dv")(layout)) Seq(null) else Nil)
+      def v(i: Long): Option[Double] = layout match {
+        case "fpZero" if i % 5 == 0 => Some(if (rnd.nextBoolean()) 0.0 else -0.0)
+        case "fpZero" => Some(rnd.nextInt(1000) - 500.0)
+        case _ if rnd.nextInt(7) == 0 => None
+        case _ => Some(1.0 + rnd.nextInt(1000))
+      }
+      val rows: Seq[(Option[Long], String, Option[Double])] =
+        (1L to n.toLong).map(i =>
+          (Option(i), segs(rnd.nextInt(segs.size)), v(i))) ++
+          // one partition whose files hold no key at all
+          (if (layout == "nullKey") (1 to 5).map(_ => (Option.empty[Long], "N", v(0L)))
+           else Nil)
       val t = CowTable(spark, dir + "/t", TableConfig("t", Seq("id"),
-        clusterByKey = rnd.nextBoolean(), changeDataFeed = true,
-        deletionVectors = true, statsColumns = Seq("v")))
-      t.create(rows.toDF("id", "v").repartition(2 + rnd.nextInt(3)))
-      val deleted = rows.map(_._1).filter(_ => rnd.nextInt(4) == 0)
-      if (deleted.nonEmpty) t.delete(deleted.toDF("id"))
-      val live = rows.filterNot(r => deleted.contains(r._1))
-      val vs = live.flatMap(_._2)
-      val got = spark.read.format("graft").load(dir + "/t")
-        .agg(min("id").as("a"), max("id").as("b"), count(lit(1)).as("c"),
-          count("v").as("d"), min("v").as("e"), max("v").as("f"))
-        .as[(Option[Long], Option[Long], Long, Long, Option[Long], Option[Long])]
-        .head()
-      val want = (live.headOption.map(_ => live.map(_._1).min),
-        live.headOption.map(_ => live.map(_._1).max),
-        live.size.toLong, vs.size.toLong,
-        if (vs.isEmpty) None else Some(vs.min),
-        if (vs.isEmpty) None else Some(vs.max))
-      assert(got == want, s"trial $trial (deleted ${deleted.size}/$n): " +
-        s"$got != $want")
+        partitionKey = Some("seg"), clusterByKey = rnd.nextBoolean(),
+        changeDataFeed = true, deletionVectors = true, statsColumns = Seq("v")))
+      t.create(rows.toDF("id", "seg", "v").repartition(2 + rnd.nextInt(3)))
+      val keyed = rows.flatMap(_._1)
+      val deleted: Set[Long] = layout match {
+        case "clean" | "nullKey" => Set.empty
+        // one whole partition vectored away, a few rows of another: C
+        // folds, A is read, B must not surface as a group
+        case "deadPart" => rows.collect {
+          case (Some(i), s, _) if s == "B" || (s == "A" && rnd.nextInt(4) == 0) =>
+            i
+        }.toSet
+        case _ => keyed.filter(_ => rnd.nextInt(4) == 0).toSet
+      }
+      if (deleted.nonEmpty) t.delete(deleted.toSeq.toDF("id"))
+      val live = rows.filterNot(r => r._1.exists(deleted))
+      val df = spark.read.format("graft").load(dir + "/t")
+      def mn[T: Ordering](xs: Seq[T]) = xs.minOption
+      def mx[T: Ordering](xs: Seq[T]) = xs.maxOption
+      val ctx = s"trial $trial ($layout, deleted ${deleted.size}/$n)"
+
+      val global = df.agg(min("id"), max("id"), count(lit(1)), count("v"),
+        min("v"), max("v"))
+      val vs = live.flatMap(_._3)
+      assert(global.as[(Option[Long], Option[Long], Long, Long,
+        Option[Double], Option[Double])].head() ==
+        ((mn(live.flatMap(_._1)), mx(live.flatMap(_._1)), live.size.toLong,
+          vs.size.toLong, mn(vs), mx(vs))), ctx)
+      // DV-free layouts answer completely — an all-null key file included
+      if (layout == "clean" || layout == "nullKey")
+        assert(global.queryExecution.executedPlan.toString
+          .contains("manifest_agg_"), s"$ctx\n${global.queryExecution.executedPlan}")
+
+      val grouped = df.groupBy("seg").agg(count(lit(1)), min("id"),
+        count("v"), max("v"))
+      assert(grouped.as[(Option[String], Long, Option[Long], Long,
+        Option[Double])].collect().toSet ==
+        live.groupBy(r => Option(r._2)).map { case (s, rs) =>
+          (s, rs.size.toLong, mn(rs.flatMap(_._1)),
+            rs.count(_._3.isDefined).toLong, mx(rs.flatMap(_._3)))
+        }.toSet, ctx)
+
+      val countPart = df.agg(count("seg"), count(lit(1)))
+      assert(countPart.as[(Long, Long)].head() ==
+        ((live.count(_._2 != null).toLong, live.size.toLong)), ctx)
+
+      val distinct = df.select("seg").distinct()
+      assert(distinct.as[Option[String]].collect().toSet ==
+        live.map(r => Option(r._2)).toSet, ctx)
+      assert(distinct.queryExecution.executedPlan.toString
+        .contains("LocalTableScan"), ctx)
     }
   }
 

@@ -211,26 +211,24 @@ class CowTableSpec extends SparkSpec {
 
   test("change feed over many commits: bounded plan width, identical content") {
     val (t, _) = freshTable()
-    spark.conf.set("graft.feedChunkCommits", "8")
-    try {
-      t.create(Seq((0L, "v0")).toDF("id", "name"))
-      (1L to 40L).foreach(i => t.upsert(Seq((i, s"v$i")).toDF("id", "name")))
-      val feed = t.readChangesWithVersion(1, t.currentVersion)
-      // every upsert rewrote its file set; each commit's added rows appear
-      val rows = feed.as[(Long, String, Int)].collect()
-      assert(rows.map(_._3).distinct.sorted.toSeq == (2 to 41))
-      assert(rows.filter(_._3 == 41).map(_._1).contains(40L))
-      // plan width is bounded: 40 per-commit branches fold into <=
-      // ceil(40/8)=5 checkpointed leaves (vs 40 parquet-scan leaves unbatched)
-      val leaves = feed.queryExecution.optimizedPlan.collectLeaves()
-      assert(leaves.size <= 6, s"plan has ${leaves.size} leaves")
-      // the tombstone feed goes through the same bounded union
-      val cdf = t.readChangeFeed(0, t.currentVersion)
-      assert(cdf.queryExecution.optimizedPlan.collectLeaves().size <= 12)
-      val byType = cdf.groupBy("_change_type").count()
-        .as[(String, Long)].collect().toMap
-      assert(byType("insert") == 41L) // 1 create row + 40 fresh keys... none deleted
-    } finally spark.conf.unset("graft.feedChunkCommits")
+    t.create(Seq((0L, "v0")).toDF("id", "name"))
+    (1L to 40L).foreach(i => t.upsert(Seq((i, s"v$i")).toDF("id", "name")))
+    val feed = t.readChangesWithVersion(1, t.currentVersion)
+    // every upsert rewrote its file set; each commit's added rows appear
+    val rows = feed.as[(Long, String, Int)].collect()
+    assert(rows.map(_._3).distinct.sorted.toSeq == (2 to 41))
+    assert(rows.filter(_._3 == 41).map(_._1).contains(40L))
+    // plan width is bounded: 40 per-commit branches fold into
+    // ceil(40/32)=2 checkpointed leaves (vs 40 parquet-scan leaves unbatched)
+    val leaves = feed.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.size <= 2, s"plan has ${leaves.size} leaves")
+    // the tombstone feed goes through the same bounded union
+    val cdf = t.readChangeFeed(0, t.currentVersion)
+    val cdfLeaves = cdf.queryExecution.optimizedPlan.collectLeaves().size
+    assert(cdfLeaves <= 4, s"feed plan has $cdfLeaves leaves")
+    val byType = cdf.groupBy("_change_type").count()
+      .as[(String, Long)].collect().toMap
+    assert(byType("insert") == 41L) // 1 create row + 40 fresh keys... none deleted
   }
 
   test("composite keys: second-column stats prune files the first can't") {
