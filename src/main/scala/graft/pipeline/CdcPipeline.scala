@@ -26,6 +26,14 @@ import org.apache.spark.sql.functions._
   *    a key whose final row is D is removed even if a tied U also survived);
   *  - empty batch ⇒ "No Data changed." early exit, no commit
   *    (src/iceberg/iceberg-cdc-load.py:79-82).
+  *
+  * A batch is two commits (two versions, `$history` rows and change-feed
+  * versions); on a deletion-vector table both come from ONE match scan
+  * ([[CowTable.upsertThenDelete]]). Under a strict dedup the upsert and
+  * delete key sets are disjoint (one surviving row per key), so the
+  * upsert's appended files cannot hold a delete key and are not scanned.
+  * Under the keep-ties dedup a key may survive as both U/I and D: the
+  * upsert marks its old row, the delete scans the appended files for it.
   */
 object CdcPipeline {
 
@@ -67,15 +75,17 @@ object CdcPipeline {
     try {
       // Single-pass per-Op metrics (vs the reference's 4 separate counts).
       val counts = CdcDedup.opCounts(finalInput, opCol)
-      // Upserts first, then deletes — reference statement order.
-      val upserts = finalInput.filter(col(opCol) =!= "D").drop(opCol)
+      // Upserts first, then deletes — reference statement order. A side
+      // the counts show empty is not run at all.
+      val upserts = Some(finalInput.filter(col(opCol) =!= "D").drop(opCol))
+        .filter(_ => counts.keySet.exists(_ != "D"))
+      val dels = Some(finalInput.filter(col(opCol) === "D")
+        .select(cfg.primaryKey.map(col): _*)).filter(_ => counts.contains("D"))
       // the strict dedup (a precombine key or tie-break set) leaves one
-      // row per key by construction; only the keep-ties dedup can leave
-      // duplicates for the assert to catch
-      val v1 = table.upsert(upserts, assertUniqueKeys = pcs.isEmpty)
-      val dels = finalInput.filter(col(opCol) === "D")
-        .select(cfg.primaryKey.map(col): _*)
-      val v2 = table.delete(dels)
+      // row per key by construction; only the keep-ties dedup can leave a
+      // key on both sides, or duplicates for the upsert's assert to catch
+      val (v1, v2) = table.upsertThenDelete(upserts, dels,
+        oneRowPerKey = pcs.nonEmpty)
       BatchResult(counts, v1, v2)
     } finally finalInput.unpersist(blocking = false)
   }

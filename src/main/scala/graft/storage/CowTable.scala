@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import graft.operators.MergeEngine
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, NumericType, StringType, StructField, StructType}
 import org.json4s.{Formats, NoTypeHints}
@@ -617,11 +617,11 @@ final class CowTable private[storage] (
       maxKeys: Int = KeyPrune.MaxKeys): Int = {
     if (parent == 0) return writeVersion(source, source.schema, Nil, 0)
     val m = manifest(parent)
+    if (morEligible(m, source))
+      return mutateDv(parent, Some(source), None, keysDisjoint = true,
+        maxKeys)._1
     KeyPrune.touched(m, root, source, maxKeys) match {
       case None => parent // empty batch: no-op, no empty commit
-      case Some((touched, untouched)) if config.deletionVectors &&
-          config.precombineKey.isEmpty && morSchemaMatch(m, source) =>
-        morUpsert(m, parent, touched, untouched, source)
       case Some((touched, untouched)) =>
         val rb = Some(RebaseCtx(touched.map(_.path).toSet, Some(source)))
         val target = readFiles(m, touched)
@@ -661,11 +661,11 @@ final class CowTable private[storage] (
   /** [[delete]] against an explicit snapshot version (see [[upsertFrom]]). */
   private[storage] def deleteFrom(parent: Int, deleteKeys: DataFrame): Int = {
     require(parent > 0, s"table ${config.tableName} does not exist")
+    if (config.deletionVectors)
+      return mutateDv(parent, None, Some(deleteKeys), keysDisjoint = true)._2
     val m = manifest(parent)
     KeyPrune.touched(m, root, deleteKeys) match {
       case None => parent
-      case Some((touched, untouched)) if config.deletionVectors =>
-        deleteWithVectors(m, parent, touched, untouched, deleteKeys)
       case Some((touched, untouched)) =>
         val target = readFiles(m, touched)
         val remaining = MergeEngine.delete(target, deleteKeys, config.primaryKey)
@@ -683,98 +683,149 @@ final class CowTable private[storage] (
     }
   }
 
-  /** MERGE-ON-READ delete ([[TableConfig.deletionVectors]]): instead of
-    * rewriting the touched files, mark the matched rows' positions in a
-    * parquet sidecar the commit's entries point at — O(matched rows)
-    * written regardless of file sizes (the COW rewrite is O(touched file
-    * bytes): a 10-row delete from a 1 GB file costs 10 positions, not
-    * 1 GB). An entry carries exactly ONE sidecar, so re-deleting from an
-    * already-vectored file folds its old positions into the new sidecar.
-    * CDF tombstones are materialized here from the matched PREIMAGE rows
-    * (config fence: deletionVectors requires changeDataFeed). One
-    * per-file count over the checkpointed matches both detects a no-match
-    * batch and hands [[writeFoldedSidecar]] each file's new marks. Commits
-    * race via the manifest CAS loudly — no rebase for in-place entry
-    * changes. */
-  private def deleteWithVectors(
-      m: CommitManifest, parent: Int, touched: Seq[FileEntry],
-      untouched: Seq[FileEntry], deleteKeys: DataFrame): Int = {
-    val v = parent + 1
-    val withPos = readFilesWithPositions(m, touched)
-    val dKeys = deleteKeys.select(config.primaryKey.map(col): _*).distinct()
-    // one evaluation feeds positions AND cdc tombstones
-    val matches = withPos.join(dKeys, config.primaryKey, "left_semi")
-      .localCheckpoint()
-    val newPos = matches.select(col("__rel").as("path"), col("__pos").as("pos"))
-    val marks = marksPerFile(newPos)
-    if (marks.isEmpty) return parent // range-prune false positives only
-    val updated = writeFoldedSidecar(v, touched, newPos, marks)
-    val cdc = writeCdc(
-      matches.drop("__rel", "__pos").withColumn("_change_type", lit("delete")),
-      v, m.columnMapping)
-    commitAt(parent, Nil, updated ++ untouched,
-      structFromJson(m.schemaJson), dataChange = true, cdcDir = cdc,
-      mappingOpt = Some((m.columnMapping, m.effectiveUsedPhysical)))
+  /** One CDC batch as two commits: [[upsert]] `source`, then [[delete]]
+    * `deleteKeys` (None = no rows on that side). Returns (upsert version,
+    * delete version), each the version current after that side. An armed
+    * [[withTxn]] marker tags the upsert only. `oneRowPerKey` (a strict
+    * dedup) else the upsert side is checked key-unique and a key may be on
+    * both sides. A deletion-vector table shares one match scan between the
+    * commits ([[mutateDv]]) unless the upsert needs the COW path; a COW
+    * table runs the two operations in turn. */
+  def upsertThenDelete(source: Option[DataFrame],
+      deleteKeys: Option[DataFrame], oneRowPerKey: Boolean): (Int, Int) = {
+    val src = source.filterNot(_ => txnAlreadyApplied())
+    if (src.isEmpty) txn = None // the marker tags the upsert only
+    if (!oneRowPerKey)
+      src.foreach(MergeEngine.assertKeyUnique(_, config.primaryKey))
+    try {
+      val parent = currentVersion
+      if (config.deletionVectors &&
+          src.forall(s => parent > 0 && morEligible(manifest(parent), s)))
+        mutateDv(parent, src, deleteKeys, keysDisjoint = oneRowPerKey)
+      else {
+        val v1 = src.fold(parent)(upsertFrom(parent, _))
+        txn = None
+        (v1, deleteKeys.fold(v1)(deleteFrom(v1, _)))
+      }
+    } finally txn = None
   }
 
-  /** MOR-upsert eligibility: exact schema match (names + types) with the
-    * table — schema evolution stays on the COW path, which already owns
+  /** MOR-upsert eligibility: a deletion-vector table without a precombine
+    * key (the MOR upsert is source-wins), and an exact schema match (names
+    * + types) — schema evolution stays on the COW path, which already owns
     * the widening/mapping machinery. */
-  private def morSchemaMatch(m: CommitManifest, source: DataFrame): Boolean = {
+  private def morEligible(m: CommitManifest, source: DataFrame): Boolean = {
     val schema = structFromJson(m.schemaJson)
-    source.columns.toSet == schema.fieldNames.toSet &&
-      schema.fields.forall(f =>
-        source.schema(f.name).dataType == f.dataType)
+    config.deletionVectors && config.precombineKey.isEmpty &&
+      source.columns.toSet == schema.fieldNames.toSet &&
+      schema.fields.forall(f => source.schema(f.name).dataType == f.dataType)
   }
 
-  /** MERGE-ON-READ upsert ([[TableConfig.deletionVectors]]): instead of
-    * rewriting the touched files, mark the MATCHED rows' positions in a
-    * sidecar and APPEND the whole source batch as fresh files — commit
-    * cost O(batch + matched rows), never O(touched file bytes) (Delta's
-    * DV-update shape). Semantics are the source-wins upsert, so the path
-    * is fenced to precombine-free tables and exact-schema batches (both
-    * fall back to the COW rewrite, same results). The appended file is
-    * unclustered until the next OPTIMIZE — the standard MOR trade. CDF
-    * materializes the same insert/update_pre/postimage rows as COW. One
-    * per-file count over the checkpointed matches both detects a
-    * pure-insert batch and hands [[writeFoldedSidecar]] each file's new
-    * marks. Commits race via the manifest CAS loudly (in-place entry
-    * changes cannot rebase — a rebased carry would drop the updated
-    * entries). */
-  private def morUpsert(
-      m: CommitManifest, parent: Int, touched: Seq[FileEntry],
-      untouched: Seq[FileEntry], source0: DataFrame): Int = {
-    val v = parent + 1
+  /** MERGE-ON-READ upsert then delete ([[TableConfig.deletionVectors]]):
+    * matched rows' positions are marked in a parquet sidecar the commit's
+    * entries point at — O(batch + matched rows) written, never O(touched
+    * file bytes). Either side may be None; when both are given each holds
+    * rows. Returns (upsert version, delete version), the parent when a
+    * side moved nothing.
+    *
+    *  1. ONE key prune over both key sets ([[KeyPrune.touched]]).
+    *  2. ONE position scan of the touched files joined with the kind-tagged
+    *     keys (update wins a key on both sides), checkpointed, and ONE
+    *     per-(file, kind) mark count; none of it runs on an empty touch set.
+    *  3. Upsert commit: update marks fold into a sidecar, the source is
+    *     APPENDED (Delta's DV-update shape, unclustered until OPTIMIZE), CDF
+    *     gets insert / update_preimage / update_postimage rows.
+    *  4. Delete commit: the marks of both kinds fold into the next sidecar
+    *     with the parent-era positions, from the frames in hand (the
+    *     upsert's sidecar is never read back); the marked rows become CDF
+    *     tombstones.
+    *
+    * Unless `keysDisjoint` (see [[graft.pipeline.CdcPipeline]]), step 4
+    * also scans the appended files for delete keys. An entry carries ONE
+    * sidecar: each new one folds in the old positions of every touched
+    * vectored file, so scans keep reading few sidecars.
+    * Both commits race via the manifest CAS loudly: in-place entry changes
+    * cannot rebase, and the delete is pinned to the upsert's version. */
+  private def mutateDv(parent: Int, source0: Option[DataFrame],
+      deleteKeys: Option[DataFrame], keysDisjoint: Boolean,
+      maxKeys: Int = KeyPrune.MaxKeys): (Int, Int) = {
+    require(parent > 0, s"table ${config.tableName} does not exist")
+    val m = manifest(parent)
     val schema = structFromJson(m.schemaJson)
-    val source = source0.select(schema.fields.toSeq.map(f => col(f.name)): _*)
-    val withPos = readFilesWithPositions(m, touched)
-    val ks = config.primaryKey.map(col)
-    val sKeys = source.select(ks: _*).distinct()
-    val matched = withPos.join(sKeys, config.primaryKey, "left_semi")
-      .localCheckpoint()
-    val newPos = matched.select(col("__rel").as("path"), col("__pos").as("pos"))
-    val marks = marksPerFile(newPos)
-    val updated =
-      if (marks.isEmpty) touched // pure-insert batch: entries unchanged
-      else writeFoldedSidecar(v, touched, newPos, marks)
-    // insert-vs-update classification in ONE left join against the matched
-    // key set (was an anti join + a semi join — same membership probed
-    // twice); a source key with no matched target row is an insert
-    val mk = "__graft_matched"
-    val mKeys = matched.select(ks: _*).distinct().withColumn(mk, lit(1))
-    val srcTagged = source.join(mKeys, config.primaryKey, "left")
-      .withColumn("_change_type",
-        when(col(mk).isNotNull, lit("update_postimage"))
-          .otherwise(lit("insert")))
-      .drop(mk)
-    val preimages = matched.drop("__rel", "__pos")
-      .withColumn("_change_type", lit("update_preimage"))
-    val cdc = writeCdc(
-      srcTagged.unionByName(preimages), v,
-      m.columnMapping)
-    writeVersion(source, schema, untouched ++ updated, parent,
-      cdcDir = cdc,
-      mappingOpt = Some((m.columnMapping, m.effectiveUsedPhysical)))
+    val pk = config.primaryKey
+    val ks = pk.map(col)
+    val (upd, del, kind) = (0, 1, "__kind")
+    val source = source0.map(_.select(schema.fieldNames.toSeq.map(col): _*))
+    val keys = (source.map(_.select(ks: _*).withColumn(kind, lit(upd))) ++
+      deleteKeys.map(_.select(ks: _*).withColumn(kind, lit(del))))
+      .reduceOption(_ unionAll _)
+    val touched = keys.flatMap(KeyPrune.touched(m, root, _, maxKeys))
+      .getOrElse(return (parent, parent))._1 // empty batch: no commit
+    val matches = keys.filter(_ => touched.nonEmpty).map { k =>
+      val tagged = k.groupBy(ks: _*).agg(min(col(kind)).as(kind))
+      readFiles(m, touched, positions = true).join(tagged, pk).localCheckpoint()
+    }
+    val marks = matches.fold(Map.empty[(String, Int), Long])(
+      _.groupBy("__rel", kind).count().collect()
+        .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap)
+    def marksOf(k: Int) = marks.collect { case ((p, `k`), n) => p -> n }
+    def rowsOf(k: Int) =
+      matches.filter(_ => marksOf(k).nonEmpty).map(_.filter(col(kind) === k))
+    val (uMarks, dMarks0, uRows, dRows) =
+      (marksOf(upd), marksOf(del), rowsOf(upd), rowsOf(del))
+    def positions(df: DataFrame) =
+      df.select(col("__rel").as("path"), col("__pos").as("pos"))
+    def image(df: DataFrame, changeType: String) =
+      df.drop("__rel", "__pos", kind).withColumn("_change_type", lit(changeType))
+    val v1 = source.fold(parent) { src =>
+      val updated = uRows.fold(Map.empty[String, FileEntry])(u =>
+        writeFoldedSidecar(parent + 1, touched.filter(e =>
+          e.dvPath.isDefined || uMarks.contains(e.path)), positions(u), uMarks))
+      // a source key with a matched target row is an update, else insert
+      val mk = "__graft_matched"
+      val srcTagged = uRows.fold(src.withColumn("_change_type",
+        lit("insert"))) { u =>
+        src.join(u.select(ks: _*).distinct().withColumn(mk, lit(1)), pk, "left")
+          .withColumn("_change_type", when(col(mk).isNotNull,
+            lit("update_postimage")).otherwise(lit("insert")))
+          .drop(mk)
+      }
+      val cdc = writeCdc((srcTagged +: uRows.map(image(_, "update_preimage"))
+        .toSeq).reduce(_ unionByName _), parent + 1, m.columnMapping)
+      val v = writeVersion(src, schema, m.files.map(e =>
+        updated.getOrElse(e.path, e)), parent, cdcDir = cdc,
+        mappingOpt = Some((m.columnMapping, m.effectiveUsedPhysical)))
+      txn = None // the marker tags the upsert only
+      v
+    }
+    val v2 = deleteKeys.fold(v1) { dk =>
+      val m1 = if (v1 == parent) m else manifest(v1)
+      val parentPaths = m.files.map(_.path).toSet
+      val appended =
+        if (keysDisjoint) Nil else m1.files.filterNot(e => parentPaths(e.path))
+      val appendedRows = if (appended.isEmpty) None else Some(
+        readFiles(m1, appended, positions = true)
+          .join(dk.select(ks: _*).distinct(), pk, "left_semi")
+          .withColumn(kind, lit(del)).localCheckpoint())
+      val dMarks = dMarks0 ++ appendedRows.fold(Map.empty[String, Long])(df =>
+        marksPerFile(positions(df)))
+      if (dMarks.isEmpty) v1 // range-prune false positives only
+      else {
+        val files = touched.filter(e => e.dvPath.isDefined ||
+          uMarks.contains(e.path) || dMarks.contains(e.path)) ++
+          appended.filter(e => dMarks.contains(e.path))
+        val folded = writeFoldedSidecar(v1 + 1, files, positions(
+          (matches ++ appendedRows).reduce(_ unionByName _)),
+          (uMarks.keySet ++ dMarks.keySet).map(p => p ->
+            (uMarks.getOrElse(p, 0L) + dMarks.getOrElse(p, 0L))).toMap)
+        val cdc = writeCdc(image((dRows ++ appendedRows).reduce(_ unionByName _),
+          "delete"), v1 + 1, m1.columnMapping)
+        commitAt(v1, Nil, m1.files.map(e => folded.getOrElse(e.path, e)),
+          structFromJson(m1.schemaJson), dataChange = true, cdcDir = cdc,
+          mappingOpt = Some((m1.columnMapping, m1.effectiveUsedPhysical)))
+      }
+    }
+    (v1, v2)
   }
 
   /** Commit of the SQL delta-based row-level path
@@ -783,7 +834,7 @@ final class CowTable private[storage] (
     * inserted/updated rows as fresh data files — this folds the positions
     * into a deletion-vector sidecar, materializes the CDF rows, and commits
     * O(matched + written rows) without rewriting a single data file. The
-    * SQL DELETE/UPDATE twin of [[deleteWithVectors]]/[[morUpsert]]: the
+    * SQL DELETE/UPDATE twin of [[mutateDv]]: the
     * reference's CDC apply IS a SQL statement
     * (reference: src/delta/delta-cdc-load.py:121-141), so a DV-enabled
     * table must get the MOR write economics on the SQL path too. Commits
@@ -817,12 +868,9 @@ final class CowTable private[storage] (
     val marks = posDf.fold(Map.empty[String, Long])(marksPerFile)
     if (marks.isEmpty && insertFiles.isEmpty && updateFiles.isEmpty)
       return parent // nothing matched, nothing written: no empty commit
-    val (touched, untouched) = m.files.partition(e => marks.contains(e.path))
-    val updatedEntries = posDf match {
-      case Some(df) if touched.nonEmpty =>
-        writeFoldedSidecar(v, touched, df, marks)
-      case _ => touched
-    }
+    val touched = m.files.filter(e => marks.contains(e.path))
+    val updated = posDf.filter(_ => touched.nonEmpty)
+      .fold(Map.empty[String, FileEntry])(writeFoldedSidecar(v, touched, _, marks))
     val freshIns = statListedFiles(insertFiles, schema, m.columnMapping)
     val freshUpd = statListedFiles(updateFiles, schema, m.columnMapping)
     enforceConstraintsOnFiles(freshIns ++ freshUpd, schema,
@@ -839,7 +887,7 @@ final class CowTable private[storage] (
       // (a matched row is claimed by exactly one clause) and each task
       // emits a position at most once, so tagging the mark rows with their
       // change type and inner-joining classifies in a single pass (was two
-      // readFilesWithPositions scans + two semi joins).
+      // position scans + two semi joins).
       def tag(df: DataFrame, changeType: String): DataFrame =
         df.select(col("path").as("__mark_path"),
           col("pos").as("__mark_pos"),
@@ -849,7 +897,7 @@ final class CowTable private[storage] (
         delPosDf.map(tag(_, "delete"))).flatten
         .reduceOption(_ unionAll _)
       val preBoth = marks.filter(_ => touched.nonEmpty).map { mk =>
-        val withPos = readFilesWithPositions(m, touched)
+        val withPos = readFiles(m, touched, positions = true)
         withPos.join(mk,
           withPos("__rel") === mk("__mark_path") &&
             withPos("__pos") === mk("__mark_pos"))
@@ -872,7 +920,8 @@ final class CowTable private[storage] (
     // path (verDir param is unused by the explicit-file-list form)
     if (config.bloomIndex) writeBlooms(root, freshIns ++ freshUpd, schema)
     val out = commitAt(parent, freshIns ++ freshUpd,
-      updatedEntries ++ untouched, schema, dataChange = true, cdcDir = cdc,
+      m.files.map(e => updated.getOrElse(e.path, e)), schema,
+      dataChange = true, cdcDir = cdc,
       mappingOpt = Some((m.columnMapping, m.effectiveUsedPhysical)))
     // the position files were transport, not table data
     (updPosFiles ++ delPosFiles).foreach(p =>
@@ -883,18 +932,17 @@ final class CowTable private[storage] (
   /** Write version `v`'s deletion-vector sidecar: `newPos` (path, pos)
     * rows FOLDED with the prior positions of every touched file (an entry
     * points at exactly ONE sidecar), and return the touched entries with
-    * updated refs/counts. Sidecar dir is writer-unique — a losing CAS
+    * updated refs/counts, by path. Sidecar dir is writer-unique — a losing CAS
     * leaves an inert orphan, same as data files.
     *
     * `newMarks` is the caller's per-file count of `newPos` (the count it
     * already took to find the touched files): each entry's `dvRows`
-    * becomes its old `dvRows` plus its new marks. The sum is exact, with
-    * no read-back of the written sidecar, because the new positions are
-    * distinct and were read with existing vectors subtracted — disjoint
-    * from the old ones. */
+    * becomes its old `dvRows` plus its new marks. The sum is exact, with no read-back of the written sidecar,
+    * because the new positions are distinct and were read with existing
+    * vectors subtracted — disjoint from the old ones. */
   private def writeFoldedSidecar(
       v: Int, touched: Seq[FileEntry], newPos: DataFrame,
-      newMarks: Map[String, Long]): Seq[FileEntry] = {
+      newMarks: Map[String, Long]): Map[String, FileEntry] = {
     // each old sidecar contributes only the files that still point at it:
     // a file re-marked since then carries its positions in a newer sidecar
     val oldPos = touched.filter(_.dvPath.isDefined).groupBy(_.dvPath.get)
@@ -908,11 +956,8 @@ final class CowTable private[storage] (
     val dvDirRel = f"v$v%05d-" + java.util.UUID.randomUUID
       .toString.replace("-", "").substring(0, 8) + "/dv"
     all.coalesce(1).write.parquet(root.resolve(dvDirRel).toString)
-    touched.map { e =>
-      val n = newMarks.getOrElse(e.path, 0L)
-      if (n == 0 && e.dvPath.isEmpty) e
-      else e.copy(dvPath = Some(dvDirRel), dvRows = e.dvRows + n)
-    }
+    touched.map(e => e.path -> e.copy(dvPath = Some(dvDirRel),
+      dvRows = e.dvRows + newMarks.getOrElse(e.path, 0L))).toMap
   }
 
   /** Marked positions per root-relative file path of a (path, pos) frame —
@@ -2277,99 +2322,42 @@ final class CowTable private[storage] (
     * by older commits may predate added columns — null-fill + cast, the read
     * side of schema-merge-on-write). Files are grouped by the version segment
     * they live in so hive-style partition-value inference (basePath) works
-    * per group. */
-  private[storage] def readFiles(
-      m: CommitManifest, files: Seq[FileEntry]): DataFrame = {
+    * per group. DELETION-VECTOR files, grouped by (version seg, sidecar):
+    * marked positions are subtracted before conform — one broadcast
+    * anti-join per sidecar against its (root-relative path, row position)
+    * rows (a sidecar is O(deleted rows), transient until the next rewrite).
+    * `positions` keeps two columns, `__rel` (root-relative file path) and
+    * `__pos` (parquet row index): the input side of a DV mutation's match
+    * scan (a re-mark never re-marks a subtracted position). */
+  private[storage] def readFiles(m: CommitManifest, files: Seq[FileEntry],
+      positions: Boolean = false): DataFrame = {
     val schema = structFromJson(m.schemaJson)
+    if (files.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     // the current generated partition column, derivable for old-era files
     // that predate the spec (partition-spec evolution)
     val genFill = m.partitionSpec.map(PartitionTransform.parse)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else {
-      val declared = m.physicalTypes
-      val (dvFiles, plain) = files.partition(_.dvPath.isDefined)
-      val plainParts = plain.groupBy(e => inferenceBase(e.path))
-        .toSeq.sortBy(_._1).map { case (base, fs) =>
-          val df = readSegGroup(base,
-            fs.map(f => root.resolve(f.path).toString), declared)
-          conform(df, schema, m.columnMapping, genFill)
-        }
-      // DELETION-VECTOR files: subtract marked positions before conform.
-      // Grouped by (version seg, dv sidecar) — one anti-join per sidecar
-      // against its (root-relative path, row position) rows, broadcast
-      // (a sidecar is O(deleted rows), transient until the next rewrite).
-      val rootAbs = root.toString
-      val dvParts = dvFiles
-        .groupBy(e => (inferenceBase(e.path), e.dvPath.get))
-        .toSeq.sortBy(_._1).map { case ((base, dvp), fs) =>
-          val raw = readSegGroup(base,
-            fs.map(f => root.resolve(f.path).toString), declared)
-          val dv = spark.read.schema(CowTable.dvSchema)
-            .parquet(root.resolve(dvp).toString)
-            .select(col("path").as("__dv_path"), col("pos").as("__dv_pos"))
-          val withPos = raw.withColumn("__rel",
-            expr(s"substring(regexp_replace(_metadata.file_path, " +
-              s"'^file:', ''), ${rootAbs.length + 2})"))
-            .withColumn("__pos", col("_metadata.row_index"))
-          val alive = withPos.join(broadcast(dv),
-            withPos("__rel") === dv("__dv_path") &&
-              withPos("__pos") === dv("__dv_pos"),
-            "left_anti")
-          conform(alive, schema, m.columnMapping, genFill)
-        }
-      (plainParts ++ dvParts).reduce(_.union(_))
-    }
-  }
-
-  /** [[readFiles]] keeping two position columns — `__rel` (root-relative
-    * file path) and `__pos` (parquet row index) — with existing deletion
-    * vectors already subtracted (a re-delete never re-marks a position).
-    * The input side of a DV delete. */
-  private[storage] def readFilesWithPositions(
-      m: CommitManifest, files: Seq[FileEntry]): DataFrame = {
-    val schema = structFromJson(m.schemaJson)
-    // Empty touched set (KeyPrune can return Some((Nil, all)) when no
-    // file's key range overlaps the batch — e.g. a pure-insert upsert of
-    // fresh monotonic keys, or deleting absent keys): an empty frame with
-    // the position columns, NOT an empty .reduce crash.
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(schema.fields :+ StructField("__rel", StringType) :+
-          StructField("__pos", LongType)))
-    val rootAbs = root.toString
     val declared = m.physicalTypes
-    files.groupBy(e => (inferenceBase(e.path), e.dvPath))
-      .toSeq.sortBy(_._1).map { case ((base, dvp), fs) =>
+    val rootAbs = root.toString
+    val kept = if (positions) Seq(col("__rel"), col("__pos")) else Nil
+    files.groupBy(e =>
+      (e.dvPath.isDefined, inferenceBase(e.path), e.dvPath.getOrElse("")))
+      .toSeq.sortBy(_._1).map { case ((vectored, base, dvp), fs) =>
         val raw = readSegGroup(base,
           fs.map(f => root.resolve(f.path).toString), declared)
+        val withPos = if (!positions && !vectored) raw else raw
           .withColumn("__rel",
             expr(s"substring(regexp_replace(_metadata.file_path, " +
               s"'^file:', ''), ${rootAbs.length + 2})"))
           .withColumn("__pos", col("_metadata.row_index"))
-        val alive = dvp match {
-          case None => raw
-          case Some(p) =>
-            val dv = spark.read.schema(CowTable.dvSchema)
-              .parquet(root.resolve(p).toString)
-              .select(col("path").as("__dv_path"), col("pos").as("__dv_pos"))
-            raw.join(broadcast(dv),
-              raw("__rel") === dv("__dv_path") &&
-                raw("__pos") === dv("__dv_pos"), "left_anti")
+        val alive = if (!vectored) withPos else {
+          val dv = spark.read.schema(CowTable.dvSchema)
+            .parquet(root.resolve(dvp).toString)
+            .select(col("path").as("__dv_path"), col("pos").as("__dv_pos"))
+          withPos.join(broadcast(dv), withPos("__rel") === dv("__dv_path") &&
+            withPos("__pos") === dv("__dv_pos"), "left_anti")
         }
-        val present = alive.columns.toSet
-        val genFill = m.partitionSpec.map(PartitionTransform.parse)
-        alive.select(schema.fields.toSeq.map { f =>
-          val p = m.columnMapping.getOrElse(f.name, f.name)
-          (if (present(p)) col(p).cast(f.dataType)
-           else genFill match { // evolved-in generated column: derive it
-             case Some(t)
-               if f.name == t.name &&
-                 present(m.physicalName(t.source)) =>
-               t.applyTo(col(m.physicalName(t.source))).cast(f.dataType)
-             case _ => ColumnDefaults.fillExpr(f) // initial defaults
-           }).as(f.name)
-        } ++ Seq(col("__rel"), col("__pos")): _*)
+        conform(alive, schema, m.columnMapping, genFill, kept)
       }.reduce(_.union(_))
   }
 
@@ -2380,7 +2368,8 @@ final class CowTable private[storage] (
     * hive path columns already arrive in their declared types). */
   private def conform(df: DataFrame, schema: StructType,
       mapping: Map[String, String] = Map.empty,
-      genFill: Option[PartitionTransform] = None): DataFrame = {
+      genFill: Option[PartitionTransform] = None,
+      kept: Seq[Column] = Nil): DataFrame = {
     val present = df.columns.toSet
     // absence is PER VERSION GROUP (readFiles reads each writer-unique
     // version dir separately), so "file predates the column" — fill the
@@ -2402,7 +2391,7 @@ final class CowTable private[storage] (
              .cast(f.dataType)
          case _ => ColumnDefaults.fillExpr(f)
        }).as(f.name)
-    }: _*)
+    } ++ kept: _*)
   }
 
   /** Scope `spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS` to a

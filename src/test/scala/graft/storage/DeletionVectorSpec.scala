@@ -1,6 +1,6 @@
 package graft.storage
 
-import graft.SparkSpec
+import graft.{SparkJobs, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -205,11 +205,20 @@ class DeletionVectorSpec extends SparkSpec {
     val t = fresh()
     t.create(rows(1 to 20).coalesce(1))
     // monotonically fresh keys: no file key range overlaps → touched = Nil,
-    // which must not crash readFilesWithPositions (empty .reduce)
-    t.upsert(Seq((100L, "x", 1.0), (101L, "y", 2.0)).toDF("id", "name", "v"))
+    // so no position scan, checkpoint, mark count or matched-key distinct
+    // runs — only the prune's key collect and the writes
+    val (_, upsertJobs) = SparkJobs.counted(spark) {
+      t.upsert(Seq((100L, "x", 1.0), (101L, "y", 2.0)).toDF("id", "name", "v"))
+    }
+    assert(upsertJobs <= 4, s"$upsertJobs jobs")
     assert(t.read().count() == 22)
     val v = t.currentVersion
-    t.delete(Seq(500L).toDF("id")) // absent keys: no-op commit-free
+    val absent = Seq(500L).toDF("id")
+    val (_, pruneJobs) = SparkJobs.counted(spark) {
+      KeyPrune.touched(t.manifest(v), t.root, absent)
+    }
+    val (_, deleteJobs) = SparkJobs.counted(spark)(t.delete(absent))
+    assert(deleteJobs == pruneJobs) // absent keys: the prune alone
     assert(t.currentVersion == v && t.read().count() == 22)
   }
 

@@ -70,7 +70,7 @@ class SegmentReadSpec extends SparkSpec {
     // a segment no read has touched yet: the writer's prefill alone
     val (_, fresh) = SparkJobs.counted(spark) {
       t.readFiles(m1, m1.files)
-      t.readFilesWithPositions(m1, m1.files)
+      t.readFiles(m1, m1.files, positions = true)
     }
     assert(fresh == 0)
     t.delete(Seq(5L, 6L).toDF("id")) // vectors on the v1 segment
@@ -81,7 +81,7 @@ class SegmentReadSpec extends SparkSpec {
       .size == 2)
     val (_, jobs) = SparkJobs.counted(spark) {
       t.readFiles(m, m.files)
-      t.readFilesWithPositions(m, m.files)
+      t.readFiles(m, m.files, positions = true)
     }
     assert(jobs == 0)
     // the helper does count: one action is at least one job
