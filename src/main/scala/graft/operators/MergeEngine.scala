@@ -56,7 +56,7 @@ object MergeEngine {
 
   /** Cast both sides' SHARED columns to their widened common type; throws
     * on any incompatible change. Returns (target', source'). */
-  private def reconcileSchemas(
+  private[graft] def reconcileSchemas(
       target: DataFrame, source: DataFrame): (DataFrame, DataFrame) = {
     val tTypes = target.schema.map(f => f.name -> f.dataType).toMap
     val shared = source.schema.filter(f => tTypes.contains(f.name))
@@ -104,65 +104,6 @@ object MergeEngine {
       else col(s"t.$c").as(c)
     } ++ source.columns.filterNot(tCols.contains).map(c => col(s"s.$c").as(c))
     joined.select(merged: _*)
-  }
-
-  /** [[upsert]]'s result plus its ROW-exact CDF classification, both derived
-    * from ONE persisted full-outer join (guide §2.4: remove shuffles
-    * outright). The caller previously re-derived membership with four key
-    * joins over the merged frame (two distinct aggregates + semi/anti
-    * joins) — but the full-outer join already knows, per row, whether the
-    * source and/or target side was present:
-    *   - both present  ⇒ `update_preimage` (target image) +
-    *     `update_postimage` (merged image) — Delta's paired CDF contract,
-    *     emitted via the same array+explode shape [[CowTable.readChangeFeed]]
-    *     uses for reconstructed feeds (one join, no double execution);
-    *   - source only   ⇒ `insert` (merged image);
-    *   - target only   ⇒ carried row, NO change emitted.
-    * An evolved-in (source-only) column null-fills on the preimage, matching
-    * the old `unionByName(allowMissingColumns)` semantics. Call `release()`
-    * after BOTH frames' actions have run. */
-  final case class MergedWithChanges(
-      merged: DataFrame, changes: DataFrame, release: () => Unit)
-
-  def upsertWithChanges(
-      target: DataFrame, source: DataFrame, keys: Seq[String])
-      : MergedWithChanges = {
-    val (target1, source1) = reconcileSchemas(target, source)
-    val tMark = "__graft_tgt_present"
-    val t = target1.withColumn(tMark, lit(1)).alias("t")
-    val s = source1.withColumn(marker, lit(1)).alias("s")
-    val cond = keys.map(k => col(s"t.$k") <=> col(s"s.$k")).reduce(_ && _)
-    val joined = t.join(s, cond, "full_outer")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val srcPresent = col(s"s.$marker").isNotNull
-    val tgtPresent = col(s"t.$tMark").isNotNull
-    val tCols = target.columns
-    val sCols = source.columns.toSet
-    val outCols: Seq[String] =
-      tCols.toSeq ++ source.columns.filterNot(tCols.contains)
-    val sTypes = source1.schema.map(f => f.name -> f.dataType).toMap
-    def mergedCol(c: String) =
-      if (tCols.contains(c) && sCols.contains(c))
-        when(srcPresent, col(s"s.$c")).otherwise(col(s"t.$c")).as(c)
-      else if (tCols.contains(c)) col(s"t.$c").as(c)
-      else col(s"s.$c").as(c)
-    val merged = joined.select(outCols.map(mergedCol): _*)
-    def img(tpe: String, cols: Seq[org.apache.spark.sql.Column]) =
-      struct(cols :+ lit(tpe).as("_change_type"): _*)
-    val preCols = outCols.map { c =>
-      if (tCols.contains(c)) col(s"t.$c").as(c)
-      else lit(null).cast(sTypes(c)).as(c) // column predates the preimage
-    }
-    val postCols = outCols.map(mergedCol)
-    val rows = when(tgtPresent,
-      array(img("update_preimage", preCols),
-        img("update_postimage", postCols)))
-      .otherwise(array(img("insert", postCols)))
-    val changes = joined.filter(srcPresent)
-      .select(explode(rows).as("__c"))
-      .select(outCols.map(c => col(s"__c.$c").as(c)) :+
-        col("__c._change_type").as("_change_type"): _*)
-    MergedWithChanges(merged, changes, () => { joined.unpersist(); () })
   }
 
   /** Delete: remove target rows whose key appears in `deletes`

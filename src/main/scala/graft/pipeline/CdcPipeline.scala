@@ -28,10 +28,13 @@ import org.apache.spark.sql.functions._
   *    (src/iceberg/iceberg-cdc-load.py:79-82).
   *
   * A batch is two commits (two versions, `$history` rows and change-feed
-  * versions); on a deletion-vector table both come from ONE match scan
-  * ([[CowTable.upsertThenDelete]]). Under a strict dedup the upsert and
-  * delete key sets are disjoint (one surviving row per key), so the
-  * upsert's appended files cannot hold a delete key and are not scanned.
+  * versions); on both layouts they come from ONE match scan
+  * ([[CowTable.upsertThenDelete]]), and only files holding a matched key
+  * change. Under a strict dedup the upsert and delete key sets are
+  * disjoint (one surviving row per key), so the upsert's appended files
+  * cannot hold a delete key and the delete does not scan them. A
+  * copy-on-write upsert that rewrites a file holding a delete-marked row
+  * writes that row to a file of its own, which the delete drops by path.
   * Under the keep-ties dedup a key may survive as both U/I and D: the
   * upsert marks its old row, the delete scans the appended files for it.
   */

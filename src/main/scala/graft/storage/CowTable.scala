@@ -226,11 +226,12 @@ final class ConcurrentWriteException(msg: String)
   extends RuntimeException(msg)
 
 /** What a row-level write (upsert/delete/SQL MERGE) READ, for the
-  * snapshot-isolation rebase on commit conflict: the file paths it rewrote
-  * plus its key footprint — either the exact source batch (`source`; its
-  * key set decides disjointness vs a winner's added files) or, when the
-  * source is no longer available at commit time (the DSv2 row-level path),
-  * the stat ranges of the files it read and wrote (`footprint`): every key
+  * snapshot-isolation rebase on commit conflict: the file paths it read
+  * (a superset of those it replaces) plus its key footprint — either the
+  * exact source batch (`source`; its key set decides disjointness vs a
+  * winner's added files) or, when the source is no longer available at
+  * commit time (the DSv2 row-level path), the stat ranges of the files it
+  * read and wrote (`footprint`): every key
   * the op read, updated, deleted, or inserted lies inside a touched file's
   * range or a fresh output file's range, so a winner-added file whose
   * range misses ALL of them is provably non-interacting. */
@@ -261,8 +262,7 @@ private[graft] final case class RebaseCtx(
   * it), time-travel read of any version by number or commit timestamp,
   * schema evolution on write (new columns null-filled for old files at read
   * time, mirroring Delta autoMerge, src/delta/delta-initial-load.py:33), and
-  * pruned merges: only files whose key range overlaps the source batch are
-  * rewritten.
+  * match-exact merges: only files that hold a matched key are rewritten.
   */
 final class CowTable private[storage] (
     val spark: SparkSession, rootDir: String, config0: TableConfig) {
@@ -592,21 +592,16 @@ final class CowTable private[storage] (
   }
 
   /** MERGE ... WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED INSERT *
-    * against the current snapshot, as a pruned copy-on-write rewrite:
-    * files whose [minKey, maxKey] cannot contain any source key are carried
-    * over untouched (at 100 TB a 100-row CDC batch rewrites a handful of
-    * files, not the table). Source must be key-unique — enforce upstream with
-    * [[graft.operators.CdcDedup.latestPerKeyStrict]] or pass
-    * `assertUniqueKeys = true` (one cheap extra job over the small source).
+    * against the current snapshot ([[mutate]]): only the files that hold a
+    * matched key change, and files whose [minKey, maxKey] cannot contain
+    * any source key are not even read (at 100 TB a 100-row CDC batch
+    * touches a handful of files, not the table). Source must be key-unique
+    * — enforce upstream with [[graft.operators.CdcDedup.latestPerKeyStrict]]
+    * or pass `assertUniqueKeys = true` (one cheap extra job over the small
+    * source).
     */
-  def upsert(source: DataFrame, assertUniqueKeys: Boolean = false): Int = {
-    if (txnAlreadyApplied()) return currentVersion // replayed batch: no-op
-    if (assertUniqueKeys) MergeEngine.assertKeyUnique(source, config.primaryKey)
-    // finally-clear: an EMPTY batch no-ops without committing, and the
-    // armed marker must not leak onto the next (un-tagged) operation
-    try upsertFrom(currentVersion, source)
-    finally txn = None
-  }
+  def upsert(source: DataFrame, assertUniqueKeys: Boolean = false): Int =
+    upsertThenDelete(Some(source), None, oneRowPerKey = !assertUniqueKeys)._1
 
   /** [[upsert]] against an explicit snapshot version — the commit rebases
     * ([[commitWithRebase]]) or fails loud if versions landed after it.
@@ -614,100 +609,38 @@ final class CowTable private[storage] (
     * stale mid-operation (the thing that actually happens on a cluster),
     * and pass a small `maxKeys` to run the pruner's over-cap path. */
   private[storage] def upsertFrom(parent: Int, source: DataFrame,
-      maxKeys: Int = KeyPrune.MaxKeys): Int = {
-    if (parent == 0) return writeVersion(source, source.schema, Nil, 0)
-    val m = manifest(parent)
-    if (morEligible(m, source))
-      return mutateDv(parent, Some(source), None, keysDisjoint = true,
-        maxKeys)._1
-    KeyPrune.touched(m, root, source, maxKeys) match {
-      case None => parent // empty batch: no-op, no empty commit
-      case Some((touched, untouched)) =>
-        val rb = Some(RebaseCtx(touched.map(_.path).toSet, Some(source)))
-        val target = readFiles(m, touched)
-        if (!config.changeDataFeed) {
-          val merged0 = MergeEngine.upsert(target, source, config.primaryKey)
-          writeVersion(merged0, merged0.schema, untouched, parent,
-            rebase = rb)
-        } else {
-          // ROW-exact changes derived from the merge's OWN full-outer join
-          // ([[MergeEngine.upsertWithChanges]]): one persisted evaluation
-          // feeds both the CDC write and the data write — the former
-          // re-derivation cost four extra key joins (two distinct
-          // aggregates + semi/anti membership probes) per CDF upsert.
-          val u = MergeEngine.upsertWithChanges(
-            target, source, config.primaryKey)
-          try {
-            // one mapping resolution feeds BOTH writes — the CDC files and
-            // the data files must agree on evolved-in columns' physical names
-            val mapEv = CowTable.evolveMapping(Some(m), u.merged.schema)
-            val cdc = writeCdc(u.changes, parent + 1, mapEv._1)
-            writeVersion(u.merged, u.merged.schema, untouched, parent,
-              cdcDir = cdc, mappingOpt = Some(mapEv), rebase = rb)
-          } finally u.release()
-        }
-    }
-  }
+      maxKeys: Int = KeyPrune.MaxKeys): Int =
+    mutate(parent, Some(source), None, keysDisjoint = true, maxKeys)._1
 
-  /** MERGE ... WHEN MATCHED THEN DELETE: anti-join rewrite of only the files
-    * whose key range overlaps the delete set
-    * (reference: src/iceberg/iceberg-cdc-load.py:147-150). */
+  /** MERGE ... WHEN MATCHED THEN DELETE ([[mutate]]): only the files that
+    * hold a matched key change; a delete that matches no row commits
+    * nothing (reference: src/iceberg/iceberg-cdc-load.py:147-150). */
   def delete(deleteKeys: DataFrame): Int = {
     if (txnAlreadyApplied()) return currentVersion // replayed batch: no-op
+    // finally-clear: an EMPTY batch no-ops without committing, and the
+    // armed marker must not leak onto the next (un-tagged) operation
     try deleteFrom(currentVersion, deleteKeys)
-    finally txn = None // see [[upsert]]'s empty-batch note
+    finally txn = None
   }
 
   /** [[delete]] against an explicit snapshot version (see [[upsertFrom]]). */
-  private[storage] def deleteFrom(parent: Int, deleteKeys: DataFrame): Int = {
-    require(parent > 0, s"table ${config.tableName} does not exist")
-    if (config.deletionVectors)
-      return mutateDv(parent, None, Some(deleteKeys), keysDisjoint = true)._2
-    val m = manifest(parent)
-    KeyPrune.touched(m, root, deleteKeys) match {
-      case None => parent
-      case Some((touched, untouched)) =>
-        val target = readFiles(m, touched)
-        val remaining = MergeEngine.delete(target, deleteKeys, config.primaryKey)
-        val cdc = if (!config.changeDataFeed) None else {
-          // tombstones carry the PREIMAGE row (what Delta CDF emits)
-          val dKeys = deleteKeys
-            .select(config.primaryKey.map(col): _*).distinct()
-          writeCdc(target.join(dKeys, config.primaryKey, "left_semi")
-            .withColumn("_change_type", lit("delete")), parent + 1,
-            m.columnMapping)
-        }
-        writeVersion(remaining, structFromJson(m.schemaJson), untouched,
-          parent, cdcDir = cdc,
-          rebase = Some(RebaseCtx(touched.map(_.path).toSet, Some(deleteKeys))))
-    }
-  }
+  private[storage] def deleteFrom(parent: Int, deleteKeys: DataFrame): Int =
+    mutate(parent, None, Some(deleteKeys), keysDisjoint = true)._2
 
   /** One CDC batch as two commits: [[upsert]] `source`, then [[delete]]
-    * `deleteKeys` (None = no rows on that side). Returns (upsert version,
-    * delete version), each the version current after that side. An armed
-    * [[withTxn]] marker tags the upsert only. `oneRowPerKey` (a strict
-    * dedup) else the upsert side is checked key-unique and a key may be on
-    * both sides. A deletion-vector table shares one match scan between the
-    * commits ([[mutateDv]]) unless the upsert needs the COW path; a COW
-    * table runs the two operations in turn. */
+    * `deleteKeys` (None = no rows on that side), both off ONE match scan
+    * ([[mutate]]). Returns (upsert version, delete version), each the
+    * version current after that side. An armed [[withTxn]] marker tags
+    * the upsert only. `oneRowPerKey` (a strict dedup) else the upsert side
+    * is checked key-unique and a key may be on both sides. */
   def upsertThenDelete(source: Option[DataFrame],
       deleteKeys: Option[DataFrame], oneRowPerKey: Boolean): (Int, Int) = {
     val src = source.filterNot(_ => txnAlreadyApplied())
     if (src.isEmpty) txn = None // the marker tags the upsert only
     if (!oneRowPerKey)
       src.foreach(MergeEngine.assertKeyUnique(_, config.primaryKey))
-    try {
-      val parent = currentVersion
-      if (config.deletionVectors &&
-          src.forall(s => parent > 0 && morEligible(manifest(parent), s)))
-        mutateDv(parent, src, deleteKeys, keysDisjoint = oneRowPerKey)
-      else {
-        val v1 = src.fold(parent)(upsertFrom(parent, _))
-        txn = None
-        (v1, deleteKeys.fold(v1)(deleteFrom(v1, _)))
-      }
-    } finally txn = None
+    try mutate(currentVersion, src, deleteKeys, keysDisjoint = oneRowPerKey)
+    finally txn = None
   }
 
   /** MOR-upsert eligibility: a deletion-vector table without a precombine
@@ -721,108 +654,188 @@ final class CowTable private[storage] (
       schema.fields.forall(f => source.schema(f.name).dataType == f.dataType)
   }
 
-  /** MERGE-ON-READ upsert then delete ([[TableConfig.deletionVectors]]):
-    * matched rows' positions are marked in a parquet sidecar the commit's
-    * entries point at — O(batch + matched rows) written, never O(touched
-    * file bytes). Either side may be None; when both are given each holds
-    * rows. Returns (upsert version, delete version), the parent when a
+  /** `rows` joined with `keys` on the primary key NULL-SAFELY (`<=>`): a
+    * NULL key matches a NULL key, as the batch dedup groups them. The
+    * output drops `keys`' own key columns. */
+  private def keyJoin(rows: DataFrame, keys: DataFrame, how: String)
+      : DataFrame = {
+    val pk = config.primaryKey
+    def k(c: String) = s"__key_$c"
+    val renamed = keys.select(keys.columns.toSeq.map(c =>
+      col(c).as(if (pk.contains(c)) k(c) else c)): _*)
+    rows.join(renamed, pk.map(c => col(c) <=> col(k(c))).reduce(_ && _), how)
+      .drop(pk.map(k): _*)
+  }
+
+  /** The one mutation pipeline: upsert `source0`, then delete `deleteKeys`,
+    * against version `parent`, as two commits. Either side may be None.
+    * Returns (upsert version, delete version), the prior version when a
     * side moved nothing.
     *
     *  1. ONE key prune over both key sets ([[KeyPrune.touched]]).
-    *  2. ONE position scan of the touched files joined with the kind-tagged
-    *     keys (update wins a key on both sides), checkpointed, and ONE
-    *     per-(file, kind) mark count; none of it runs on an empty touch set.
-    *  3. Upsert commit: update marks fold into a sidecar, the source is
-    *     APPENDED (Delta's DV-update shape, unclustered until OPTIMIZE), CDF
-    *     gets insert / update_preimage / update_postimage rows.
-    *  4. Delete commit: the marks of both kinds fold into the next sidecar
-    *     with the parent-era positions, from the frames in hand (the
-    *     upsert's sidecar is never read back); the marked rows become CDF
-    *     tombstones.
+    *  2. ONE match scan of the touched files joined null-safely with the
+    *     kind-tagged keys (update wins a key on both sides), checkpointed
+    *     by ONE per-(file, kind) mark count; none of it runs on an empty
+    *     touch set.
+    *  3. One materialize step per commit, the only place the layouts
+    *     differ. A deletion-vector table (an upsert must be
+    *     [[morEligible]]) folds the marked positions into a sidecar and
+    *     appends the upsert rows (Delta's DV-update shape). A copy-on-write
+    *     table rewrites only the files holding a mark, without the marked
+    *     rows, and carries every other file by path. Its upsert writes the
+    *     upsert rows ([[MergeEngine.reconcileSchemas]] widens) in one
+    *     key-sorted shuffle, and a rewritten file's delete-marked rows to
+    *     files of their own (`aside`), which the delete drops by path.
     *
-    * Unless `keysDisjoint` (see [[graft.pipeline.CdcPipeline]]), step 4
-    * also scans the appended files for delete keys. An entry carries ONE
-    * sidecar: each new one folds in the old positions of every touched
-    * vectored file, so scans keep reading few sidecars.
-    * Both commits race via the manifest CAS loudly: in-place entry changes
-    * cannot rebase, and the delete is pinned to the upsert's version. */
-  private def mutateDv(parent: Int, source0: Option[DataFrame],
+    * CDF images come from the marked rows on both layouts. A delete that
+    * marks nothing commits nothing. Under the keep-ties dedup (not
+    * `keysDisjoint`, see [[graft.pipeline.CdcPipeline]]) the delete also
+    * rescans the upsert's appended files for the delete keys.
+    * A DV entry carries ONE sidecar: each new one folds in the old
+    * positions of every touched vectored file. COW commits rebase
+    * ([[commitWithRebase]]); DV in-place entry changes cannot, so DV
+    * commits race loudly and the delete is pinned to the upsert's version. */
+  private def mutate(parent: Int, source0: Option[DataFrame],
       deleteKeys: Option[DataFrame], keysDisjoint: Boolean,
       maxKeys: Int = KeyPrune.MaxKeys): (Int, Int) = {
-    require(parent > 0, s"table ${config.tableName} does not exist")
-    val m = manifest(parent)
-    val schema = structFromJson(m.schemaJson)
     val pk = config.primaryKey
     val ks = pk.map(col)
     val (upd, del, kind) = (0, 1, "__kind")
-    val source = source0.map(_.select(schema.fieldNames.toSeq.map(col): _*))
-    val keys = (source.map(_.select(ks: _*).withColumn(kind, lit(upd))) ++
+    val keys = (source0.map(_.select(ks: _*).withColumn(kind, lit(upd))) ++
       deleteKeys.map(_.select(ks: _*).withColumn(kind, lit(del))))
-      .reduceOption(_ unionAll _)
-    val touched = keys.flatMap(KeyPrune.touched(m, root, _, maxKeys))
-      .getOrElse(return (parent, parent))._1 // empty batch: no commit
-    val matches = keys.filter(_ => touched.nonEmpty).map { k =>
-      val tagged = k.groupBy(ks: _*).agg(min(col(kind)).as(kind))
-      readFiles(m, touched, positions = true).join(tagged, pk).localCheckpoint()
+      .reduceOption(_ unionAll _).getOrElse(return (parent, parent))
+    if (parent == 0 && source0.isDefined) { // the upsert creates the table
+      val v1 = writeVersion(source0.get, source0.get.schema, Nil, 0)
+      txn = None
+      return (v1, deleteKeys.fold(v1)(deleteFrom(v1, _)))
     }
+    require(parent > 0, s"table ${config.tableName} does not exist")
+    val m = manifest(parent)
+    val schema = structFromJson(m.schemaJson)
+    val dv = config.deletionVectors && source0.forall(morEligible(m, _))
+    val source =
+      source0.map(s => if (dv) s.select(schema.fieldNames.toSeq.map(col): _*) else s)
+    val touched = KeyPrune.touched(m, root, keys, maxKeys)
+      .getOrElse(return (parent, parent))._1 // empty batch: no commit
+    // every key once, with its kind: the match scan computes it, the
+    // rewrite reuses it (a lazy val: checkpointing runs the group-by's
+    // shuffle, which a batch that touches no file must not pay)
+    lazy val keyKinds = keys.groupBy(ks: _*).agg(min(col(kind)).as(kind))
+      .localCheckpoint(eager = false)
+    val readPaths = touched.map(_.path).toSet
+    val matches = Option.when(touched.nonEmpty)(keyJoin(readFiles(m, touched,
+      positions = true), keyKinds, "inner").localCheckpoint(eager = false))
     val marks = matches.fold(Map.empty[(String, Int), Long])(
-      _.groupBy("__rel", kind).count().collect()
-        .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap)
+      countsBy(_, "__rel", kind).map { case (r, n) =>
+        (r.getString(0), r.getInt(1)) -> n })
     def marksOf(k: Int) = marks.collect { case ((p, `k`), n) => p -> n }
     def rowsOf(k: Int) =
       matches.filter(_ => marksOf(k).nonEmpty).map(_.filter(col(kind) === k))
-    val (uMarks, dMarks0, uRows, dRows) =
-      (marksOf(upd), marksOf(del), rowsOf(upd), rowsOf(del))
+    val (uMarks, dMarks0) = (marksOf(upd), marksOf(del))
     def positions(df: DataFrame) =
       df.select(col("__rel").as("path"), col("__pos").as("pos"))
     def image(df: DataFrame, changeType: String) =
       df.drop("__rel", "__pos", kind).withColumn("_change_type", lit(changeType))
-    val v1 = source.fold(parent) { src =>
-      val updated = uRows.fold(Map.empty[String, FileEntry])(u =>
-        writeFoldedSidecar(parent + 1, touched.filter(e =>
-          e.dvPath.isDefined || uMarks.contains(e.path)), positions(u), uMarks))
-      // a source key with a matched target row is an update, else insert
+    val rewrite1 = if (dv) Nil else m.files.filter(e => uMarks.contains(e.path))
+    val rewritten = rewrite1.map(_.path).toSet
+    val (v1, aside) = source.fold((parent, Seq.empty[FileEntry])) { src =>
+      val uRows = rowsOf(upd)
+      // a source key with a matched target row is an update, else insert;
+      // a target column the source lacks keeps the matched row's value
       val mk = "__graft_matched"
-      val srcTagged = uRows.fold(src.withColumn("_change_type",
-        lit("insert"))) { u =>
-        src.join(u.select(ks: _*).distinct().withColumn(mk, lit(1)), pk, "left")
-          .withColumn("_change_type", when(col(mk).isNotNull,
-            lit("update_postimage")).otherwise(lit("insert")))
-          .drop(mk)
+      val absent = schema.fieldNames.toSeq.filterNot(src.columns.contains)
+      val tagged = uRows.fold(src.withColumn(mk, lit(null))) { u =>
+        keyJoin(src, u.select((pk ++ absent).map(col): _*)
+          .dropDuplicates(pk).withColumn(mk, lit(1)), "left")
       }
-      val cdc = writeCdc((srcTagged +: uRows.map(image(_, "update_preimage"))
-        .toSeq).reduce(_ unionByName _), parent + 1, m.columnMapping)
-      val v = writeVersion(src, schema, m.files.map(e =>
-        updated.getOrElse(e.path, e)), parent, cdcDir = cdc,
-        mappingOpt = Some((m.columnMapping, m.effectiveUsedPhysical)))
+      val post = if (dv || absent.isEmpty) src else tagged.drop(mk)
+      // COW: the rewritten files' unmarked rows, widened together with the
+      // upsert rows
+      val fresh = if (dv) src else {
+        val target = readFiles(m, rewrite1)
+        val (t, p) = MergeEngine.reconcileSchemas(if (rewrite1.isEmpty) target
+          else keyJoin(target, keyKinds, "left_anti"), post)
+        t.unionByName(p, allowMissingColumns = true)
+      }
+      val freshSchema = if (dv) schema else fresh.schema
+      // one mapping resolution feeds BOTH writes — the CDC files and the
+      // data files must agree on evolved-in columns' physical names
+      val mapEv = CowTable.evolveMapping(Some(m), freshSchema)
+      val cdc = if (!config.changeDataFeed) None else writeCdc(
+        (tagged.withColumn("_change_type", when(col(mk).isNotNull,
+          lit("update_postimage")).otherwise(lit("insert"))).drop(mk) +:
+          uRows.map(image(_, "update_preimage")).toSeq)
+          .reduce(_.unionByName(_, allowMissingColumns = true)),
+        parent + 1, mapEv._1)
+      val out =
+        if (dv) {
+          val updated = uRows.fold(Map.empty[String, FileEntry])(u =>
+            writeFoldedSidecar(parent + 1, touched.filter(e =>
+              e.dvPath.isDefined || uMarks.contains(e.path)), positions(u),
+              uMarks))
+          (writeVersion(src, schema, m.files.map(e =>
+            updated.getOrElse(e.path, e)), parent, cdcDir = cdc,
+            mappingOpt = Some(mapEv)), Nil)
+        } else {
+          // one key-sorted shuffle partition per ~advisory size (AQE):
+          // rewritten files keep disjoint key ranges
+          val kept = writeFiles(fresh.repartition(ks: _*)
+            .sortWithinPartitions(ks: _*), freshSchema, parent,
+            mappingOpt = Some(mapEv))._1
+          // a rewritten file's delete-marked rows (at most the delete
+          // batch) go to a file of their own, which the delete commit
+          // drops by path
+          val parked = dMarks0.keys.filter(rewritten).toSeq
+          val aside = if (parked.isEmpty) Nil else writeFiles(conform(
+            rowsOf(del).get.filter(col("__rel").isin(parked: _*)), freshSchema)
+            .coalesce(1), freshSchema, parent, mappingOpt = Some(mapEv))._1
+          (commitFiles(parent, kept ++ aside, m.files.filterNot(e =>
+            rewritten(e.path)), freshSchema, dataChange = true, cdc, mapEv,
+            Some(RebaseCtx(readPaths, Some(keys)))), aside)
+        }
       txn = None // the marker tags the upsert only
-      v
+      out
     }
     val v2 = deleteKeys.fold(v1) { dk =>
       val m1 = if (v1 == parent) m else manifest(v1)
-      val parentPaths = m.files.map(_.path).toSet
+      val prior = (m.files ++ aside).map(_.path).toSet
+      // keep-ties: an upserted key the batch also deletes was appended
       val appended =
-        if (keysDisjoint) Nil else m1.files.filterNot(e => parentPaths(e.path))
-      val appendedRows = if (appended.isEmpty) None else Some(
-        readFiles(m1, appended, positions = true)
-          .join(dk.select(ks: _*).distinct(), pk, "left_semi")
-          .withColumn(kind, lit(del)).localCheckpoint())
-      val dMarks = dMarks0 ++ appendedRows.fold(Map.empty[String, Long])(df =>
-        marksPerFile(positions(df)))
-      if (dMarks.isEmpty) v1 // range-prune false positives only
+        if (keysDisjoint) Nil else m1.files.filterNot(e => prior(e.path))
+      val appendedRows = Option.when(appended.nonEmpty)(keyJoin(
+        readFiles(m1, appended, positions = true), dk.select(ks: _*),
+        "left_semi").withColumn(kind, lit(del)).localCheckpoint(eager = false))
+      val dMarks = dMarks0.filterNot(p => rewritten(p._1)) ++
+        appendedRows.fold(Map.empty[String, Long])(df =>
+          marksPerFile(positions(df)))
+      if (dMarks.isEmpty && aside.isEmpty) v1 // range-prune false positives
       else {
-        val files = touched.filter(e => e.dvPath.isDefined ||
-          uMarks.contains(e.path) || dMarks.contains(e.path)) ++
-          appended.filter(e => dMarks.contains(e.path))
-        val folded = writeFoldedSidecar(v1 + 1, files, positions(
-          (matches ++ appendedRows).reduce(_ unionByName _)),
-          (uMarks.keySet ++ dMarks.keySet).map(p => p ->
-            (uMarks.getOrElse(p, 0L) + dMarks.getOrElse(p, 0L))).toMap)
-        val cdc = writeCdc(image((dRows ++ appendedRows).reduce(_ unionByName _),
-          "delete"), v1 + 1, m1.columnMapping)
-        commitAt(v1, Nil, m1.files.map(e => folded.getOrElse(e.path, e)),
-          structFromJson(m1.schemaJson), dataChange = true, cdcDir = cdc,
-          mappingOpt = Some((m1.columnMapping, m1.effectiveUsedPhysical)))
+        val (schema1, mapping1) = (structFromJson(m1.schemaJson),
+          (m1.columnMapping, m1.effectiveUsedPhysical))
+        val cdc = if (!config.changeDataFeed) None else writeCdc(image(
+          (rowsOf(del) ++ appendedRows).reduce(
+            _.unionByName(_, allowMissingColumns = true)), "delete"),
+          v1 + 1, m1.columnMapping)
+        if (dv) {
+          val files = touched.filter(e => e.dvPath.isDefined ||
+            uMarks.contains(e.path) || dMarks.contains(e.path)) ++
+            appended.filter(e => dMarks.contains(e.path))
+          val folded = writeFoldedSidecar(v1 + 1, files, positions(
+            (matches ++ appendedRows).reduce(_ unionByName _)),
+            (uMarks.keySet ++ dMarks.keySet).map(p => p ->
+              (uMarks.getOrElse(p, 0L) + dMarks.getOrElse(p, 0L))).toMap)
+          commitAt(v1, Nil, m1.files.map(e => folded.getOrElse(e.path, e)),
+            schema1, dataChange = true, cdcDir = cdc, mappingOpt = Some(mapping1))
+        } else {
+          val rewrite2 = m1.files.filter(e => dMarks.contains(e.path))
+          val fresh = if (rewrite2.isEmpty) Nil else writeFiles(keyJoin(
+            readFiles(m1, rewrite2), dk.select(ks: _*), "left_anti"), schema1,
+            v1, mappingOpt = Some(mapping1))._1
+          val dropped = dMarks.keySet ++ aside.map(_.path)
+          commitFiles(v1, fresh, m1.files.filterNot(e => dropped(e.path)),
+            schema1, dataChange = true, cdc, mapping1, Some(RebaseCtx(
+              readPaths ++ appended.map(_.path) ++ aside.map(_.path), Some(dk))))
+        }
       }
     }
     (v1, v2)
@@ -834,7 +847,7 @@ final class CowTable private[storage] (
     * inserted/updated rows as fresh data files — this folds the positions
     * into a deletion-vector sidecar, materializes the CDF rows, and commits
     * O(matched + written rows) without rewriting a single data file. The
-    * SQL DELETE/UPDATE twin of [[mutateDv]]: the
+    * SQL DELETE/UPDATE twin of [[mutate]]: the
     * reference's CDC apply IS a SQL statement
     * (reference: src/delta/delta-cdc-load.py:121-141), so a DV-enabled
     * table must get the MOR write economics on the SQL path too. Commits
@@ -963,8 +976,17 @@ final class CowTable private[storage] (
   /** Marked positions per root-relative file path of a (path, pos) frame —
     * one aggregate job, bounded by the number of touched files. */
   private def marksPerFile(pos: DataFrame): Map[String, Long] =
-    pos.groupBy("path").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    countsBy(pos, "path").map { case (r, n) => r.getString(0) -> n }
+
+  /** Rows per distinct value of `cols` in ONE stage without a shuffle:
+    * each partition counts its own rows, and the collected partial
+    * counts (O(distinct values × partitions) rows) are summed. */
+  private def countsBy(df: DataFrame, cols: String*): Map[Row, Long] =
+    df.select(cols.map(col): _*).rdd.mapPartitions { rows =>
+      val n = scala.collection.mutable.HashMap.empty[Row, Long]
+      rows.foreach(r => n(r) = n.getOrElse(r, 0L) + 1)
+      n.iterator
+    }.collect().groupMapReduce(_._1)(_._2)(_ + _)
 
   /** METADATA-ONLY DELETE: publish a new version whose manifest simply
     * DROPS `dropPaths`' entries — zero data read, zero data written, one
@@ -1510,10 +1532,12 @@ final class CowTable private[storage] (
     *   - removed only  → `delete` (PRE-image values — the tombstone carries
     *     the last row state, like Delta's `_change_type='delete'`).
     *
-    * COW makes this exact per touched file: a rewritten file's unchanged
-    * co-located rows classify as `update_postimage` with identical values
-    * (file-granularity false-positive churn — same caveat as
-    * [[readChangesWithVersion]]; a one-row-per-file layout removes it).
+    * COW makes this exact per MARKED file (a mutation rewrites only files
+    * holding a matched key): a rewritten file's unchanged co-located rows
+    * classify as `update_postimage` with identical values (file-granularity
+    * false-positive churn — same caveat as [[readChangesWithVersion]]; a
+    * one-row-per-file layout removes it). Mutations materialize `_cdc`
+    * files, which carry only the changed rows.
     * Rewrite-only commits (`dataChange=false`, e.g. compaction) emit
     * nothing. Rollback commits classify naturally: restored rows as
     * insert/update, rows the rollback dropped as deletes. */
@@ -2332,8 +2356,8 @@ final class CowTable private[storage] (
   private[storage] def readFiles(m: CommitManifest, files: Seq[FileEntry],
       positions: Boolean = false): DataFrame = {
     val schema = structFromJson(m.schemaJson)
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    if (files.isEmpty) // a local relation: the optimizer prunes joins on it
+      return spark.createDataFrame(java.util.Collections.emptyList[Row], schema)
     // the current generated partition column, derivable for old-era files
     // that predate the spec (partition-spec evolution)
     val genFill = m.partitionSpec.map(PartitionTransform.parse)
@@ -2426,6 +2450,21 @@ final class CowTable private[storage] (
       mappingOpt: Option[(Map[String, String], Seq[String])] = None,
       rebase: Option[RebaseCtx] = None,
       fileTag: Option[String] = None): Int = {
+    val (fresh, schema, mapping) =
+      writeFiles(df0, schema0, parent, preshaped, mappingOpt, fileTag)
+    commitFiles(parent, fresh, carryOver, schema, dataChange, cdcDir,
+      mapping, rebase)
+  }
+
+  /** [[writeVersion]]'s write half: `df`'s rows as fresh data files of
+    * version parent+1 in a writer-unique directory, with their stats.
+    * Returns the entries, the written schema and its column mapping. */
+  private def writeFiles(
+      df0: DataFrame, schema0: StructType, parent: Int,
+      preshaped: Boolean = false,
+      mappingOpt: Option[(Map[String, String], Seq[String])] = None,
+      fileTag: Option[String] = None)
+      : (Seq[FileEntry], StructType, (Map[String, String], Seq[String])) = {
     // GENERATED partition column ([[TableConfig.partitionSpec]]): (re)
     // computed unconditionally inside the commit funnel — a pure projection
     // that makes drift from the source column impossible (Delta's generated
@@ -2496,18 +2535,27 @@ final class CowTable private[storage] (
     CowTable.prefillSegSchema(verDir.toString, StructType(physDf.schema
       .fields.filterNot(f => config.partitionKey.contains(f.name))))
     val fresh0 = statFiles(verDir, schema, mapping)
-    val fresh = fileTag.fold(fresh0)(t =>
-      fresh0.map(_.copy(zorderBy = Some(t))))
-    if (config.bloomIndex) writeBlooms(verDir, fresh, schema)
+    (fileTag.fold(fresh0)(t => fresh0.map(_.copy(zorderBy = Some(t)))),
+      schema, (mapping, usedPhys))
+  }
+
+  /** [[writeVersion]]'s commit half: bloom sidecars and CHECK constraints
+    * for the `fresh` files, then the commit. */
+  private def commitFiles(
+      parent: Int, fresh: Seq[FileEntry], carryOver: Seq[FileEntry],
+      schema: StructType, dataChange: Boolean, cdcDir: Option[String],
+      mapping: (Map[String, String], Seq[String]),
+      rebase: Option[RebaseCtx]): Int = {
+    if (config.bloomIndex) writeBlooms(root, fresh, schema)
     // CHECK constraints validate the WRITTEN files pre-commit (one parallel
     // scan of the new data, same shape as the connector paths) — validating
     // the input plan instead would compute it twice AND let a
     // non-deterministic source slip unvalidated rows into the write.
     // Reorganizations (dataChange=false) carry already-validated rows.
-    if (dataChange) enforceConstraintsOnFiles(fresh, schema, "write", mapping)
+    if (dataChange)
+      enforceConstraintsOnFiles(fresh, schema, "write", mapping._1)
     commitWithRebase(parent, fresh, carryOver, schema, dataChange,
-      cdcDir = cdcDir, mappingOpt = Some((mapping, usedPhys)),
-      rebase = rebase)
+      cdcDir = cdcDir, mappingOpt = Some(mapping), rebase = rebase)
   }
 
   /** [[commitWithRebase]] for the DSv2 row-level path (SQL MERGE / UPDATE /
@@ -2622,8 +2670,8 @@ final class CowTable private[storage] (
     *    ranges can flag a false overlap and fall back to the loud failure;
     *    never the reverse.
     *
-    * On pass: carry-over is recomputed from the WINNER's file set (so a
-    * winner's rewrite of files this op never read — a compaction of cold
+    * On pass: carry-over is recomputed from the WINNER's file set, less
+    * the files this op replaced (so a winner's rewrite of files this op never read — a compaction of cold
     * partitions, another key range's merge — is carried forward verbatim)
     * and the commit retries at the new head, looping (bounded) if yet
     * another writer lands first. Ops that read the whole table
@@ -2636,6 +2684,11 @@ final class CowTable private[storage] (
       mappingOpt: Option[(Map[String, String], Seq[String])],
       rebase: Option[RebaseCtx]): Int = {
     val base = if (parent0 >= 1) Some(manifest(parent0)) else None
+    // the parent's files this op replaces: a rebase carries every other
+    // head file (an op may read more files than it replaces)
+    lazy val dropped =
+      base.fold(Set.empty[String])(_.files.map(_.path).toSet) --
+        carry0.map(_.path)
     var parent = parent0
     var carry = carry0
     var attempts = 0
@@ -2712,8 +2765,7 @@ final class CowTable private[storage] (
                   "disjointness; re-read the table and retry")
             wv += 1
           }
-          carry = manifest(head).files.filterNot(f =>
-            ctx.touchedPaths(f.path))
+          carry = manifest(head).files.filterNot(f => dropped(f.path))
           parent = head
       }
     }

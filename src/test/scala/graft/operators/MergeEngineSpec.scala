@@ -46,46 +46,6 @@ class MergeEngineSpec extends SparkSpec {
     assert(out == Set((None, "new"), (Some(1L), "a")))
   }
 
-  test("upsertWithChanges: merged ≡ upsert; changes are the row-exact CDF set") {
-    val target = Seq((1L, "a", 10.0), (2L, "b", 20.0), (4L, "d", 40.0))
-      .toDF("id", "name", "v")
-    // evolved-in source-only column `audit` + an insert, an update, a carry
-    val source = Seq((2L, "b2", 22.0, "s1"), (3L, "c", 30.0, "s2"))
-      .toDF("id", "name", "v", "audit")
-    val u = MergeEngine.upsertWithChanges(target, source, Seq("id"))
-    try {
-      val merged = u.merged.as[(Long, String, Double, Option[String])]
-        .collect().toSet
-      val viaUpsert = MergeEngine.upsert(target, source, Seq("id"))
-        .as[(Long, String, Double, Option[String])].collect().toSet
-      assert(merged == viaUpsert) // single-join path ≡ the plain upsert
-      assert(merged == Set(
-        (1L, "a", 10.0, None), (2L, "b2", 22.0, Some("s1")),
-        (3L, "c", 30.0, Some("s2")), (4L, "d", 40.0, None)))
-      val changes = u.changes
-        .as[(Long, String, Double, Option[String], String)].collect().toSet
-      // carried rows (1, 4) emit NOTHING; the update emits its pre/post
-      // pair (preimage null-fills the evolved-in column); the insert one row
-      assert(changes == Set(
-        (2L, "b", 20.0, None, "update_preimage"),
-        (2L, "b2", 22.0, Some("s1"), "update_postimage"),
-        (3L, "c", 30.0, Some("s2"), "insert")))
-    } finally u.release()
-  }
-
-  test("upsertWithChanges: null source key classifies null-safely as update") {
-    val target = Seq((Option.empty[Long], "old"), (Some(1L), "a"))
-      .toDF("id", "name")
-    val source = Seq((Option.empty[Long], "new")).toDF("id", "name")
-    val u = MergeEngine.upsertWithChanges(target, source, Seq("id"))
-    try {
-      val changes = u.changes.as[(Option[Long], String, String)]
-        .collect().toSet
-      assert(changes == Set(
-        (None, "old", "update_preimage"), (None, "new", "update_postimage")))
-    } finally u.release()
-  }
-
   test("delete removes exactly the keyed rows (duplicate delete keys harmless)") {
     val target = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "name")
     val dels = Seq((2L, "x"), (2L, "y"), (9L, "z")).toDF("id", "junk")

@@ -138,7 +138,7 @@ class CdcPipelineSpec extends SparkSpec {
     assert(state(t)(1L) == "v2")
   }
 
-  // ---- deletion-vector tables: one match scan, two commits ----
+  // ---- both layouts: one match scan, two commits ----
 
   /** (Op, timestamp, id, month, name, seq) */
   private type Ev = (String, String, Long, String, String, Long)
@@ -267,14 +267,13 @@ class CdcPipelineSpec extends SparkSpec {
       val rc = CdcPipeline.applyBatch(cow, evBatch(evs), auditTs = audit,
         tieBreak = tieBreak)
       assert(rd.opCounts == rc.opCounts, ctx)
-      // a side with rows commits; a DV delete commits only when it marks a
-      // row, a COW delete whenever it has keys
+      // an upsert with rows commits; a delete commits iff it marks a row,
+      // on both layouts
       val u = if (upIds.nonEmpty) 1 else 0
-      val dMatched = (delIds & (liveBefore ++ upIds)).nonEmpty
+      val d = if ((delIds & (liveBefore ++ upIds)).nonEmpty) 1 else 0
       assert(rd.upsertVersion == dvB + u && rc.upsertVersion == cowB + u, ctx)
-      assert(rd.deleteVersion == rd.upsertVersion + (if (dMatched) 1 else 0), ctx)
-      assert(rc.deleteVersion == rc.upsertVersion + (if (delIds.nonEmpty) 1 else 0),
-        ctx)
+      assert(rd.deleteVersion == rd.upsertVersion + d &&
+        rc.deleteVersion == rc.upsertVersion + d, ctx)
       assert(modelRows(dv.read()) == state.sorted, ctx)
       assert(modelRows(cow.read()) == state.sorted, ctx)
       assert(fullRows(dv.read()) == fullRows(cow.read()), ctx)
@@ -283,8 +282,7 @@ class CdcPipelineSpec extends SparkSpec {
       assert(feedRows(dv, rd.upsertVersion, rd.deleteVersion) ==
         feedRows(cow, rc.upsertVersion, rc.deleteVersion), ctx)
       assert(historyOf(dv, dvB + 1 to rd.deleteVersion) ==
-        historyOf(cow, (cowB + 1 to rc.upsertVersion) ++
-          Seq(rc.deleteVersion).filter(_ => dMatched)), ctx)
+        historyOf(cow, cowB + 1 to rc.deleteVersion), ctx)
       // no data file rewritten; a file vectored before the batch re-marked
       val after = dv.manifest(rd.deleteVersion).files
       assert(dv.manifest(dvB).files.map(_.path).toSet
@@ -353,5 +351,145 @@ class CdcPipelineSpec extends SparkSpec {
     assert(res.deleteVersion == res.upsertVersion + 1)
     // one key prune, one position scan and one mark count serve both commits
     assert(jobs <= 20, s"$jobs Spark jobs")
+  }
+
+  // ---- NULL keys: one semantics on both layouts ----
+
+  /** (Op, timestamp, id, sub, name, seq) — `id` and `sub` may be NULL. */
+  private type NkEv = (String, String, Option[Long], Option[String], String, Long)
+  private type NkRow = (Option[Long], Option[String], String, Long)
+  private val nkCols = Seq("id", "sub", "name", "seq")
+
+  private def nkBatch(evs: Seq[NkEv]): DataFrame =
+    evs.toDF("Op" +: "timestamp" +: nkCols: _*)
+
+  private def nkRows(df: DataFrame): Seq[NkRow] =
+    df.select(nkCols.map(col): _*).as[NkRow].collect().toSeq.sorted
+
+  /** Plain-Spark replay of one strict batch with NULL-safe key semantics:
+    * the latest event per key (NULLs group together; ties on `seq`), a
+    * surviving D removes the key, else the surviving row replaces it. */
+  private def nkModel(state: Seq[NkRow], evs: Seq[NkEv], pk: Seq[String])
+      : Seq[NkRow] = {
+    val w = Window.partitionBy(pk.map(col): _*)
+    val win = nkBatch(evs).withColumn("timestamp", to_timestamp(col("timestamp")))
+      .withColumn("__t", max("timestamp").over(w))
+      .filter(col("timestamp") === col("__t"))
+      .withColumn("__s", max("seq").over(w)).filter(col("seq") === col("__s"))
+    val old = state.toDF(nkCols: _*)
+    old.join(win, pk.map(c => old(c) <=> win(c)).reduce(_ && _), "left_anti")
+      .unionByName(win.filter(col("Op") =!= "D").select(nkCols.map(col): _*))
+      .as[NkRow].collect().toSeq.sorted
+  }
+
+  private def nkDifferential(pk: Seq[String], init: Seq[NkRow],
+      batches: Seq[(String, Seq[NkEv])]): Unit = {
+    val dir = tmpDir("cdcnull")
+    def table(name: String, dv: Boolean) = {
+      val t = CowTable(spark, s"$dir/$name", TableConfig("t", pk,
+        changeDataFeed = true, deletionVectors = dv))
+      t.create(init.toDF(nkCols: _*)
+        .withColumn("timestamp", lit(null).cast("timestamp"))
+        .withColumn("last_applied_date", lit(null).cast("timestamp"))
+        .repartition(2))
+      t
+    }
+    val (dv, cow) = (table("dv", dv = true), table("cow", dv = false))
+    def key(r: NkRow): Seq[Option[Any]] =
+      pk.map(c => if (c == "id") r._1 else r._2)
+    def evKey(e: NkEv): Seq[Option[Any]] =
+      pk.map(c => if (c == "id") e._3 else e._4)
+    def feed(t: CowTable, from: Int, to: Int) =
+      if (to == from) Nil
+      else t.readChangeFeed(from, to)
+        .select((nkCols :+ "_change_type").map(col): _*)
+        .as[(Option[Long], Option[String], String, Long, String)]
+        .collect().toSeq.sorted
+    var state = init.sorted
+    for ((name, evs) <- batches) {
+      val ctx = s"pk=${pk.mkString(",")}: $name"
+      val before = state
+      state = nkModel(before, evs, pk)
+      // strict dedup: a key's one surviving event decides both sides
+      val deleted = before.map(key).filterNot(state.map(key).toSet)
+      val upserted = state.filterNot(before.contains)
+      val (dvB, cowB) = (dv.currentVersion, cow.currentVersion)
+      val rd = CdcPipeline.applyBatch(dv, nkBatch(evs), auditTs = audit,
+        tieBreak = Seq("seq"))
+      val rc = CdcPipeline.applyBatch(cow, nkBatch(evs), auditTs = audit,
+        tieBreak = Seq("seq"))
+      assert(nkRows(dv.read()) == state, ctx)
+      assert(nkRows(cow.read()) == state, ctx)
+      val (u, d) = (if (upserted.nonEmpty) 1 else 0, if (deleted.nonEmpty) 1 else 0)
+      assert(rd.upsertVersion == dvB + u && rc.upsertVersion == cowB + u, ctx)
+      assert(rd.deleteVersion == rd.upsertVersion + d &&
+        rc.deleteVersion == rc.upsertVersion + d, ctx)
+      assert(feed(dv, dvB, rd.deleteVersion) == feed(cow, cowB, rc.deleteVersion),
+        ctx)
+      // an update of an existing NULL-bearing key is a pre/post pair on
+      // both layouts (the feeds are equal), never a bare insert
+      val upFeed = feed(cow, cowB, rc.upsertVersion)
+      evs.filter(e => e._1 != "D" && evKey(e).contains(None) &&
+          before.map(key).contains(evKey(e))).foreach { e =>
+        assert(upFeed.filter(r => r._1 == e._3 && r._2 == e._4).map(_._5)
+          .toSet == Set("update_preimage", "update_postimage"), ctx)
+      }
+    }
+    assert(dv.validate().filter(!col("ok")).isEmpty)
+    assert(cow.validate().filter(!col("ok")).isEmpty)
+  }
+
+  private def nk(op: String, minute: Int, id: Option[Long], sub: Option[String],
+      name: String): NkEv =
+    (op, f"2024-01-02 10:$minute%02d:00", id, sub, name, minute.toLong)
+
+  test("NULL keys, DV ≡ COW ≡ plain Spark: upsert and delete an existing " +
+    "NULL key") {
+    val init: Seq[NkRow] =
+      (1L to 6L).map(i => (Option(i), Option("s"), s"n$i", 0L)) :+
+        ((None, Some("s"), "nNull", 0L))
+    nkDifferential(Seq("id"), init, Seq(
+      "update NULL key" -> Seq(nk("U", 1, None, Some("s"), "uNull"),
+        nk("U", 2, Some(3L), Some("s"), "u3"), nk("I", 3, Some(7L), Some("s"), "i7")),
+      "delete NULL key" -> Seq(nk("D", 1, None, Some("s"), "dNull"),
+        nk("D", 2, Some(4L), Some("s"), "d4")),
+      "re-insert NULL key" -> Seq(nk("I", 1, None, None, "iNull"),
+        nk("D", 2, Some(99L), None, "absent"))))
+  }
+
+  test("NULL keys, DV ≡ COW ≡ plain Spark: composite key with a NULL " +
+    "second column") {
+    val init = Seq[NkRow]((Some(1L), Some("a"), "a1", 0L),
+      (Some(1L), None, "n1", 0L), (None, Some("a"), "na", 0L),
+      (Some(2L), None, "n2", 0L), (Some(3L), Some("b"), "b3", 0L))
+    nkDifferential(Seq("id", "sub"), init, Seq(
+      "update NULL second column" -> Seq(nk("U", 1, Some(1L), None, "u1"),
+        nk("U", 2, None, Some("a"), "uNa"), nk("I", 3, Some(4L), None, "i4")),
+      "delete NULL second column" -> Seq(nk("D", 1, Some(1L), None, "d1"),
+        nk("D", 2, Some(9L), None, "absent"), nk("U", 3, Some(2L), None, "u2")),
+      "delete NULL first column" -> Seq(nk("D", 1, None, Some("a"), "dNa"))))
+  }
+
+  test("job-count guard: one COW batch with upserts and deletes " +
+    "(precombine table)") {
+    val t = CowTable(spark, tmpDir("cdccowjobs") + "/t",
+      TableConfig("t", Seq("id"), precombineKey = Some("seq"),
+        maxRecordsPerFile = 10L))
+    t.create((1L to 40L).map(i => (i, s"n$i", 0L)).toDF("id", "name", "seq")
+      .coalesce(1))
+    def b(n: Int) = batch(
+      ("U", "2024-01-02 10:00:00", 3L + n, "u", 1L),
+      ("I", "2024-01-02 10:00:00", 100L + n, "i", 2L),
+      ("D", "2024-01-02 10:00:00", 20L + n, "d", 3L))
+    // the first batch also evolves in `timestamp` and `last_applied_date`
+    CdcPipeline.applyBatch(t, b(0), auditTs = audit)
+    val (res, jobs) = SparkJobs.counted(spark) {
+      CdcPipeline.applyBatch(t, b(1), auditTs = audit)
+    }
+    assert(res.deleteVersion == res.upsertVersion + 1)
+    assert(state(t)(4L) == "u" && state(t)(101L) == "i" && !state(t).contains(21L))
+    // one key prune, one match scan and one mark count serve both commits:
+    // 13 jobs, as many as the former per-commit prune-and-join rewrites ran
+    assert(jobs <= 15, s"$jobs Spark jobs")
   }
 }

@@ -8,6 +8,12 @@ class BloomIndexSpec extends SparkSpec {
 
   private def cfg = TableConfig("t", Seq("id"), bloomIndex = true)
 
+  /** How many current files [[KeyPrune.touched]] reads for `keys` — an
+    * upsert rewrites only the touched files holding a matched key, so its
+    * rewrites alone cannot show what the bloom pruned. */
+  private def touchedBy(t: CowTable, keys: org.apache.spark.sql.DataFrame) =
+    KeyPrune.touched(t.manifest(t.currentVersion), t.root, keys).get._1.size
+
   /** Two range-OVERLAPPING files: v1 holds odd keys 1..99, v2 adds even
     * keys 2..100 — both span ~[1,100], so min/max pruning alone always
     * touches both. */
@@ -34,6 +40,7 @@ class BloomIndexSpec extends SparkSpec {
     val before = t.manifest(t.currentVersion).files.map(_.path).toSet
     assert(before.size >= 2)
     // update one EVEN key: ranges admit both files; blooms admit only v2's
+    assert(touchedBy(t, Seq(42L).toDF("id")) == 1)
     t.upsert(Seq((42L, "updated")).toDF("id", "name"))
     val after = t.manifest(t.currentVersion).files.map(_.path).toSet
     val carried = before intersect after
@@ -47,18 +54,24 @@ class BloomIndexSpec extends SparkSpec {
     assert(got.size == 100)
   }
 
-  test("without bloomIndex the same upsert rewrites both files") {
+  test("without bloomIndex the same upsert touches both files") {
     val dir = tmpDir("bloom")
     val t = CowTable(spark, dir + "/t",
       TableConfig("t", Seq("id"))) // no bloom
     t.create((1L to 99L by 2).map(i => (i, s"odd$i")).toDF("id", "name"))
     t.upsert((2L to 100L by 2).map(i => (i, s"even$i")).toDF("id", "name"))
     val before = t.manifest(t.currentVersion).files.map(_.path).toSet
+    // range-only pruning cannot separate interleaved key spaces: every
+    // file whose range holds 42 is touched, odd-key files included
+    val inRange = t.manifest(t.currentVersion).files.filter(e =>
+      e.minKey.get.toLong <= 42L && 42L <= e.maxKey.get.toLong)
+    assert(inRange.exists(_.path.startsWith("v00001")))
+    assert(touchedBy(t, Seq(42L).toDF("id")) == inRange.size)
     t.upsert(Seq((42L, "updated")).toDF("id", "name"))
+    // the match scan still rewrites only the file that holds 42
     val after = t.manifest(t.currentVersion).files.map(_.path).toSet
-    // range-only pruning cannot separate interleaved key spaces
-    assert((before intersect after).isEmpty,
-      s"expected full rewrite, carried=${before intersect after}")
+    assert((before -- after).size == 1, s"carried=${before intersect after}")
+    assert(t.read().as[(Long, String)].collect().toMap.apply(42L) == "updated")
   }
 
   test("missing sidecars degrade to touched (pre-index commits)") {
@@ -79,6 +92,7 @@ class BloomIndexSpec extends SparkSpec {
     t.create(Seq(("ax", 1), ("mz", 2), ("zq", 3)).toDF("code", "n"))
     t.upsert(Seq(("ba", 4), ("nn", 5), ("yy", 6)).toDF("code", "n"))
     val before = t.manifest(t.currentVersion).files.map(_.path).toSet
+    assert(touchedBy(t, Seq("nn").toDF("code")) == 1)
     t.upsert(Seq(("nn", 50)).toDF("code", "n"))
     val after = t.manifest(t.currentVersion).files.map(_.path).toSet
     assert((before intersect after).exists(_.contains("v00001")))

@@ -1,6 +1,7 @@
 package graft.storage
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class CowTableSpec extends SparkSpec {
@@ -12,6 +13,14 @@ class CowTableSpec extends SparkSpec {
     val cfg = TableConfig("t", Seq("id"), partitionKey = partitionKey)
     (CowTable(spark, dir + "/t", cfg), dir)
   }
+
+  /** How many current files [[KeyPrune.touched]] reads for `keys` — the
+    * pruner's own answer. A mutation rewrites only the touched files that
+    * hold a matched key, so its rewrites alone cannot show the pruning. */
+  private def touchedBy(t: CowTable, keys: DataFrame,
+      maxKeys: Int = KeyPrune.MaxKeys): Int =
+    KeyPrune.touched(t.manifest(t.currentVersion), t.root, keys, maxKeys)
+      .get._1.size
 
   test("create + read round-trips exactly") {
     val (t, _) = freshTable()
@@ -48,6 +57,7 @@ class CowTableSpec extends SparkSpec {
     assert(v1Files.size == 4)
     // source touches only keys 1..50 → exactly one v1 file overlaps
     val src = Seq((10L, "upd10"), (450L, "new450")).toDF("id", "name")
+    assert(touchedBy(t, src) == 1)
     t.upsert(src)
     val v2 = t.manifest(2)
     val carried = v2.files.map(_.path).filter(_.startsWith("v00001"))
@@ -64,11 +74,137 @@ class CowTableSpec extends SparkSpec {
     val df = (1L to 400L).map(i => (i, s"n$i")).toDF("id", "name")
       .repartitionByRange(4, col("id"))
     t.create(df)
+    assert(touchedBy(t, Seq(5L, 7L).toDF("id")) == 1)
     t.delete(Seq(5L, 7L).toDF("id"))
     val v2 = t.manifest(2)
     assert(v2.files.count(_.path.startsWith("v00001")) == 3)
     assert(v2.rowCount == 398)
     assert(t.read().filter(col("id").isin(5L, 7L)).count() == 0)
+  }
+
+  /** 100 rows dealt round-robin into three files whose key ranges are
+    * 1–95, 3–98 and 5–100: key 5 lies in every file's range, and only the
+    * third file holds it. */
+  private def roundRobin(cfg: TableConfig): CowTable = {
+    val t = CowTable(spark, tmpDir("cow") + "/t", cfg)
+    def fileOf(i: Long): Int = i match {
+      case 1 | 2 | 95 => 0
+      case 3 | 4 | 96 | 97 | 98 => 1
+      case 99 | 100 => 2
+      case _ => (i % 3).toInt
+    }
+    t.create(spark.sparkContext.parallelize(0 until 3, 3)
+      .flatMap(j => (1L to 100L).filter(fileOf(_) == j).map(i => (i, s"n$i")))
+      .toDF("id", "name"))
+    val ranges = t.manifest(1).files
+      .map(e => (e.minKey.get.toLong, e.maxKey.get.toLong)).sorted
+    assert(ranges == Seq((1L, 95L), (3L, 98L), (5L, 100L)))
+    t
+  }
+
+  /** The current files by path: (carried from v1, written since). */
+  private def split(t: CowTable): (Set[String], Set[String]) =
+    t.manifest(t.currentVersion).files.map(_.path).toSet
+      .partition(_.startsWith("v00001"))
+
+  test("match-exact upsert: a 1-key update replaces only the file holding " +
+    "the key; the others are carried by path") {
+    val t = roundRobin(TableConfig("t", Seq("id")))
+    val holder = t.manifest(1).files.filter(_.minKey.contains("5"))
+      .map(_.path).toSet
+    val src = Seq((5L, "u5")).toDF("id", "name")
+    assert(touchedBy(t, src) == 3) // every range holds 5
+    t.upsert(src)
+    val (carried, fresh) = split(t)
+    assert(carried == t.manifest(1).files.map(_.path).toSet -- holder)
+    assert(fresh.size == 1, fresh)
+    val rows = t.read().as[(Long, String)].collect().toMap
+    assert(rows.size == 100 && rows(5L) == "u5" && rows(6L) == "n6")
+  }
+
+  test("match-exact delete: a 1-key delete replaces only the file holding " +
+    "the key; a delete that matches no row commits nothing") {
+    val t = roundRobin(TableConfig("t", Seq("id")))
+    val holder = t.manifest(1).files.filter(_.minKey.contains("5"))
+      .map(_.path).toSet
+    assert(t.delete(Seq(5L).toDF("id")) == 2)
+    val (carried, fresh) = split(t)
+    assert(carried == t.manifest(1).files.map(_.path).toSet -- holder)
+    assert(fresh.size == 1, fresh)
+    assert(t.manifest(2).rowCount == 99)
+    assert(t.read().filter(col("id") === 5L).count() == 0)
+    // key 5 is still in two files' ranges but no longer in any row
+    assert(touchedBy(t, Seq(5L).toDF("id")) == 2)
+    assert(t.delete(Seq(5L).toDF("id")) == 2)
+    assert(t.currentVersion == 2)
+    // so re-inserting it is insert-only: nothing rewritten, all carried
+    val before = t.manifest(2).files.map(_.path).toSet
+    t.upsert(Seq((5L, "back")).toDF("id", "name"))
+    assert(before.subsetOf(t.manifest(3).files.map(_.path).toSet))
+    assert(t.manifest(3).files.size == 4 && t.read().count() == 100)
+  }
+
+  test("match-exact CDC batch: an update and a delete in one file — the " +
+    "upsert parks the deleted row in a file of its own, the delete drops " +
+    "it by path") {
+    val t = roundRobin(TableConfig("t", Seq("id")))
+    val holder = t.manifest(1).files.filter(_.minKey.contains("5"))
+    val (v1, v2) = t.upsertThenDelete(Some(Seq((5L, "u5")).toDF("id", "name")),
+      Some(Seq(8L).toDF("id")), oneRowPerKey = true)
+    assert((v1, v2) == (2, 3))
+    val (carried, fresh) = split(t)
+    assert(carried == t.manifest(1).files.map(_.path).toSet -- holder.map(_.path))
+    // the upsert's files: the holder without key 8, and key 8 alone
+    val upserted = t.manifest(2).files.filterNot(e => carried(e.path))
+    assert(upserted.map(_.rows).sorted == Seq(1L, holder.head.rows - 1),
+      upserted)
+    assert(upserted.exists(e => e.rows == 1 && e.minKey.contains("8") &&
+      e.maxKey.contains("8")))
+    // the delete wrote no data file
+    assert(fresh == upserted.filter(_.rows > 1).map(_.path).toSet)
+    val rows = t.read().as[(Long, String)].collect().toMap
+    assert(rows.size == 99 && rows(5L) == "u5" && !rows.contains(8L))
+    assert(t.validate().filter(!col("ok")).isEmpty)
+  }
+
+  test("match-exact COW change feed: row-exact _cdc rows, evolved-in " +
+    "columns, NULL keys, no-match deletes write nothing") {
+    val t = roundRobin(TableConfig("t", Seq("id"), changeDataFeed = true))
+    def feed(v: Int) = t.readChangeFeed(v - 1, v)
+      .select("id", "name", "audit", "_change_type")
+      .as[(Option[Long], String, Option[String], String)].collect().toSet
+    def cdcDirs = java.nio.file.Files.list(t.root.resolve("_cdc"))
+      .count()
+    // an update, an insert and an evolved-in column: carried rows and the
+    // rewritten file's other rows emit nothing; the preimage null-fills
+    // the column it predates
+    t.upsert(Seq((5L, "u5", "s1"), (200L, "i200", "s2"))
+      .toDF("id", "name", "audit"))
+    assert(feed(2) == Set(
+      (Some(5L), "n5", None, "update_preimage"),
+      (Some(5L), "u5", Some("s1"), "update_postimage"),
+      (Some(200L), "i200", Some("s2"), "insert")))
+    // a source without `audit`: the matched row keeps its value
+    t.upsert(Seq((5L, "u5b")).toDF("id", "name"))
+    assert(feed(3) == Set(
+      (Some(5L), "u5", Some("s1"), "update_preimage"),
+      (Some(5L), "u5b", Some("s1"), "update_postimage")))
+    // a NULL key: inserted once, then updated null-safely in place
+    val nullRow = Seq((Option.empty[Long], "old")).toDF("id", "name")
+    t.upsert(nullRow)
+    t.upsert(Seq((Option.empty[Long], "new")).toDF("id", "name"))
+    assert(feed(5) == Set((None, "old", None, "update_preimage"),
+      (None, "new", None, "update_postimage")))
+    assert(t.read().filter(col("id").isNull).count() == 1)
+    // deletes: exact tombstones, the NULL key included
+    t.delete(Seq(Option(5L), None).toDF("id"))
+    assert(feed(6) == Set((Some(5L), "u5b", Some("s1"), "delete"),
+      (None, "new", None, "delete")))
+    assert(t.read().count() == 100)
+    // a delete that matches nothing: no version, no `_cdc` dir
+    val dirs = cdcDirs
+    assert(t.delete(Seq(Option(5L), None).toDF("id")) == 6)
+    assert(t.currentVersion == 6 && cdcDirs == dirs)
   }
 
   test("time travel: v1 readable and unchanged after later commits") {
@@ -126,6 +262,7 @@ class CowTableSpec extends SparkSpec {
     val t = CowTable(spark, tdir + "/t", cfg)
     t.create(('a' to 'z').map(c => (s"$c", 1)).toDF("k", "v")
       .repartitionByRange(2, col("k")))
+    assert(touchedBy(t, Seq(("a", 99)).toDF("k", "v")) == 1)
     t.upsert(Seq(("a", 99)).toDF("k", "v"))
     assert(t.manifest(2).files.count(_.path.startsWith("v00001")) == 1)
     assert(t.read().count() == 26)
@@ -246,6 +383,7 @@ class CowTableSpec extends SparkSpec {
       m.files.toString)
     val v1 = m.files.map(_.path).toSet
     // (a=5, b=high): in both files' a-range, in only one file's b-range
+    assert(touchedBy(t, Seq((5L, 90L)).toDF("a", "b")) == 1)
     t.upsert(Seq((5L, 90L, "updated")).toDF("a", "b", "v"))
     val m2 = t.manifest(2)
     val carried = m2.files.map(_.path).toSet.intersect(v1)
@@ -255,6 +393,7 @@ class CowTableSpec extends SparkSpec {
     assert(t.read().filter($"a" === 5L && $"b" === 90L)
       .select("v").as[String].collect().toSeq == Seq("updated"))
     // deletes refine on the second column too
+    assert(touchedBy(t, Seq((5L, 90L)).toDF("a", "b")) == 1)
     t.delete(Seq((5L, 90L)).toDF("a", "b"))
     val m3 = t.manifest(3)
     assert(m3.files.map(_.path).toSet.intersect(v1).size == 1)
@@ -275,7 +414,8 @@ class CowTableSpec extends SparkSpec {
       .sortBy(_._1)
     // ranges are disjoint and ordered
     ranges.sliding(2).foreach { case Seq((_, hi), (lo, _)) => assert(hi < lo) }
-    // so a point upsert rewrites exactly one file
+    // so a point upsert touches and rewrites exactly one file
+    assert(touchedBy(t, Seq(Tuple1(7L)).toDF("id")) == 1)
     t.upsert(Seq((7L, "upd")).toDF("id", "name"))
     assert(t.manifest(2).files.count(_.path.startsWith("v00001")) == 3)
   }
@@ -438,6 +578,7 @@ class CowTableSpec extends SparkSpec {
     // update one key in hour 0: only that file may be rewritten
     val src = Seq((java.sql.Timestamp.valueOf("2024-01-01 00:05:00"), 999L))
       .toDF("ts", "v")
+    assert(touchedBy(t, src) == 1)
     t.upsert(src)
     val carried = t.manifest(2).files.map(_.path)
       .count(_.startsWith("v00001"))
@@ -446,9 +587,10 @@ class CowTableSpec extends SparkSpec {
     assert(out(java.sql.Timestamp.valueOf("2024-01-01 00:05:00")) == 999L)
     assert(out.size == 400)
     // the over-cap (distributed join) prune path agrees
-    t.upsertFrom(t.currentVersion,
-      Seq((java.sql.Timestamp.valueOf("2024-01-01 03:04:00"), 888L))
-        .toDF("ts", "v"), maxKeys = 0)
+    val src3 = Seq((java.sql.Timestamp.valueOf("2024-01-01 03:04:00"), 888L))
+      .toDF("ts", "v")
+    assert(touchedBy(t, src3, maxKeys = 0) == 1)
+    t.upsertFrom(t.currentVersion, src3, maxKeys = 0)
     assert(t.manifest(3).files.map(_.path).count(f =>
       f.startsWith("v00001") || f.startsWith("v00002")) == 3)
     assert(t.read().count() == 400)
@@ -471,9 +613,11 @@ class CowTableSpec extends SparkSpec {
     // stats must be in SCALED space: max key is 4.00, not unscaled 400
     val mx = t.manifest(1).files.flatMap(_.maxKey).map(BigDecimal(_)).max
     assert(mx == BigDecimal("4.00"), s"expected scaled stats, got $mx")
-    // update one low key: only its file is rewritten, result exact
-    t.upsert(Seq(("0.10", 999L)).toDF("amt", "v")
-      .selectExpr("CAST(amt AS DECIMAL(10,2)) AS amt", "v"))
+    // update one low key: only its file is touched, result exact
+    val src = Seq(("0.10", 999L)).toDF("amt", "v")
+      .selectExpr("CAST(amt AS DECIMAL(10,2)) AS amt", "v")
+    assert(touchedBy(t, src) == 1)
+    t.upsert(src)
     assert(t.manifest(2).files.map(_.path).count(_.startsWith("v00001")) == 3)
     val out = t.read().selectExpr("CAST(amt AS STRING)", "v")
       .as[(String, Long)].collect().toMap
@@ -490,9 +634,10 @@ class CowTableSpec extends SparkSpec {
     t.create(df.repartitionByRange(4, col("k")))
     assert(t.manifest(1).files.size == 4)
     // maxKeys = 0 forces the over-cap (distributed join) path
-    t.upsertFrom(t.currentVersion, Seq("0.000000000002").toDF("s")
-      .selectExpr("CAST(s AS DECIMAL(20,12)) AS k", "CAST(999 AS BIGINT) AS v"),
-      maxKeys = 0)
+    val src = Seq("0.000000000002").toDF("s")
+      .selectExpr("CAST(s AS DECIMAL(20,12)) AS k", "CAST(999 AS BIGINT) AS v")
+    assert(touchedBy(t, src, maxKeys = 0) == 1)
+    t.upsertFrom(t.currentVersion, src, maxKeys = 0)
     val carried =
       t.manifest(2).files.map(_.path).count(_.startsWith("v00001"))
     assert(carried == 3, s"expected 3 carried files: ${t.manifest(2).files}")
@@ -509,35 +654,45 @@ class CowTableSpec extends SparkSpec {
     val t = CowTable(spark, dir + "/t", TableConfig("t", Seq("k1", "k2")))
     // col-1 ranges OVERLAP across every file (k1 = k2 % 100) and col-2 is
     // the range-partitioned axis: only the SECOND-column refinement can
-    // prune, so carried-file counts observe exactly that stage.
+    // prune, so touched-file counts observe exactly that stage.
     val df = (1L to 400L).map(i => (i % 100, i, s"n$i")).toDF("k1", "k2", "v")
     t.create(df.repartitionByRange(4, col("k2")))
     assert(t.manifest(1).files.size == 4)
+    def touched(rows: DataFrame, maxKeys: Int = KeyPrune.MaxKeys) =
+      touchedBy(t, rows, maxKeys)
     // pair path: one (k1,k2) pair — col-1 keeps all 4 files (all ranges
     // contain 5), col-2 keeps only the low-k2 file
+    assert(touched(Seq((5L, 5L)).toDF("k1", "k2")) == 1)
     t.upsert(Seq((5L, 5L, "u5")).toDF("k1", "k2", "v"))
     assert(t.manifest(2).files.map(_.path).count(_.startsWith("v00001")) == 3,
       s"col-2 refinement must carry 3 files: ${t.manifest(2).files.map(_.path)}")
     // still the pair path with two pairs: refinement again touches only
     // the (rewritten) low-k2 file, carrying the three v1 files
+    assert(touched(Seq((9L, 9L), (10L, 10L)).toDF("k1", "k2")) == 1)
     t.upsert(Seq((9L, 9L, "u9"), (10L, 10L, "u10")).toDF("k1", "k2", "v"))
     assert(t.manifest(3).files.map(_.path).count(_.startsWith("v00001")) == 3,
       s"got ${t.manifest(3).files.map(_.path)}")
     // null col-1 key: every file is range-touched, but col-2 refinement
-    // still applies — the three high-k2 files carry, and both the
+    // still applies — only the low-k2 file is touched, and both the
     // null-keyed insert and the untouched rows stay exact
-    t.upsert(Seq((Option.empty[Long], 12L, "uNull1")).toDF("k1", "k2", "v"))
-    assert(t.manifest(4).files.map(_.path).count(_.startsWith("v00001")) == 3,
-      s"col-2 refinement under a null col-1 key must still prune: " +
-        s"${t.manifest(4).files.map(_.path)}")
+    val nullK1 = Seq((Option.empty[Long], 12L, "uNull1")).toDF("k1", "k2", "v")
+    assert(touched(nullK1) == 1,
+      "col-2 refinement under a null col-1 key must still prune")
+    t.upsert(nullK1)
+    assert(t.manifest(4).files.map(_.path).count(_.startsWith("v00001")) == 3)
     // null col-2 value: col-2 refinement is skipped (conservative), col-1
-    // overlap touches everything — all files rewritten, row inserted
-    t.upsert(Seq((11L, Option.empty[Long], "uN")).toDF("k1", "k2", "v"))
-    val v5 = t.manifest(5)
-    assert(v5.files.map(_.path).forall(_.startsWith("v00005")),
-      s"null col-2 must skip refinement: ${v5.files.map(_.path)}")
+    // overlap touches everything; the row matches none, so it is inserted
+    // and nothing is rewritten
+    val nullK2 = Seq((11L, Option.empty[Long], "uN")).toDF("k1", "k2", "v")
+    assert(touched(nullK2) == t.manifest(4).files.size,
+      "null col-2 must skip refinement")
+    t.upsert(nullK2)
+    assert(t.manifest(4).files.map(_.path).toSet
+      .subsetOf(t.manifest(5).files.map(_.path).toSet))
     // over the cap (3 pairs > maxKeys 2): the distributed joins run
     // instead of the pair path; result stays exact
+    assert(touched(Seq((6L, 6L), (7L, 7L), (8L, 8L)).toDF("k1", "k2"),
+      maxKeys = 2) == 1)
     t.upsertFrom(t.currentVersion,
       Seq((6L, 6L, "u6"), (7L, 7L, "u7"), (8L, 8L, "u8"))
         .toDF("k1", "k2", "v"), maxKeys = 2)
@@ -561,6 +716,8 @@ class CowTableSpec extends SparkSpec {
     t.create(df.repartitionByRange(4, col("k2")))
     // 3 pairs > maxKeys 2: the first-column join touches all 4 files, the
     // second-column join keeps only the low-k2 one
+    assert(touchedBy(t, Seq((6L, 6L), (7L, 7L), (8L, 8L)).toDF("k1", "k2"),
+      maxKeys = 2) == 1)
     t.upsertFrom(t.currentVersion,
       Seq((6L, 6L, "u6"), (7L, 7L, "u7"), (8L, 8L, "u8"))
         .toDF("k1", "k2", "v"), maxKeys = 2)
@@ -579,6 +736,7 @@ class CowTableSpec extends SparkSpec {
     // maxKeys = 2 makes this 3-key batch oversized: keys 10 and 399 touch
     // exactly the first and last of 4 files — a global [min,max] overlap
     // would have touched all 4
+    assert(touchedBy(t, Seq(10L, 399L, 500L).toDF("id"), maxKeys = 2) == 2)
     t.upsertFrom(t.currentVersion,
       Seq((10L, "u10"), (399L, "u399"), (500L, "new")).toDF("id", "name"),
       maxKeys = 2)

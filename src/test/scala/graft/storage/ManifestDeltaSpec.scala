@@ -152,7 +152,7 @@ class ManifestDeltaSpec extends SparkSpec {
     val dir = tmpDir("mdelta") + "/t"
     val t = CowTable(spark, dir, TableConfig("t", Seq("id")))
     t.create(df(1L to 100L).repartition(3)) // v1: parquet checkpoint
-    t.upsert(df(Seq(5L)))
+    t.upsert(df(1L to 100L)) // every file holds a matched key
     val mdir = Paths.get(dir).resolve("_manifests")
     val referenced = scala.util.Using.resource(Files.list(mdir))(
       _.iterator().asScala.map(_.getFileName.toString)

@@ -92,9 +92,11 @@ class NtzFenceSpec extends SparkSpec {
     assert(t.manifest(t.currentVersion).keyNumeric) // micros space, not text
     val before = t.manifest(t.currentVersion).files.map(_.path).toSet
     val v0 = t.currentVersion
-    t.upsert(Seq((ldt("2024-01-03 00:30:00"), 999999L)).toDF("ts", "v"))
+    val src = Seq((ldt("2024-01-03 00:30:00"), 999999L)).toDF("ts", "v")
+    // exactly one file touched: NTZ keys prune numerically like TIMESTAMP
+    assert(KeyPrune.touched(t.manifest(v0), t.root, src).get._1.size == 1)
+    t.upsert(src)
     val after = t.manifest(t.currentVersion).files.map(_.path).toSet
-    // exactly one file rewritten: NTZ keys prune numerically like TIMESTAMP
     assert((before -- after).size == 1, (before, after))
     val out = t.read()
     assert(out.count() == 400L)

@@ -54,7 +54,13 @@ class ZOrderSpec extends SparkSpec {
     val t = grid(dir)
     t.optimize(Seq("a", "b"))
     val before = t.manifest(t.currentVersion).files.map(_.path).toSet
-    t.upsert(Seq((5L, 5L, "updated")).toDF("a", "b", "payload"))
+    val src = Seq((5L, 5L, "updated")).toDF("a", "b", "payload")
+    // the pruner's own answer: the rewrite alone touches only the marked
+    // file, whatever the pruner kept
+    val touched = KeyPrune.touched(t.manifest(t.currentVersion), t.root, src)
+      .get._1.size
+    assert(touched <= 3, s"composite point upsert touched $touched/8 files")
+    t.upsert(src)
     val after = t.manifest(t.currentVersion).files.map(_.path).toSet
     val carried = before intersect after
     assert(carried.size >= 5,
