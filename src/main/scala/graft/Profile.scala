@@ -36,16 +36,27 @@ import org.apache.spark.sql.execution.FormattedMode
   *  - `rules`: the Catalyst rules that took the most time.
   *  - `plans [outDir tag]`: each formatted physical plan, printed, or
   *    written to `<outDir>/<query>_<tag>.txt`.
+  *  - `dvscan [dir]`: no queries; the columnar deletion-vector scan layer
+  *    on a fixed table (see [[dvscan]]).
   *
   * A failing query is reported and the rest still run; the exit status is
   * then 1. */
 object Profile {
-  private val Modes = Seq("time", "jobs", "tasks", "driver", "rules", "plans")
+  private val Modes =
+    Seq("time", "jobs", "tasks", "driver", "rules", "plans", "dvscan")
 
   def main(args: Array[String]): Unit = {
     require(args.headOption.exists(Modes.contains), "usage: graft.Profile " +
-      s"<${Modes.mkString("|")}> [query...]; plans [outDir tag] [query...]")
+      s"<${Modes.mkString("|")}> [query...]; plans [outDir tag] [query...]" +
+      "; dvscan [dir]")
     val mode = args.head
+    if (mode == "dvscan") {
+      val spark = SessionTuning.builder(defaultCpus = 32).getOrCreate()
+      spark.sparkContext.setLogLevel("ERROR")
+      try dvscan(spark, Paths.get(args.lift(1).getOrElse("target/dvscan")))
+      finally spark.stop()
+      return
+    }
     val queries = SparkEntry.queries
     val (outDir, named) = args.toSeq.tail match {
       case Seq(dir, tag, rest @ _*)
@@ -139,6 +150,83 @@ object Profile {
     }
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** The deletion-vector scan layer on fixed input: 1,000,000 rows in 32
+    * key-clustered files, then every 997th key deleted through deletion
+    * vectors, so every file points at one shared sidecar. Times a
+    * wide-projection aggregate (a bare count would decode one column and
+    * hide decode costs) k = 5 times per condition and prints the median
+    * and the spread (min–max):
+    *
+    *  - `clean_columnar`: before the delete, no vectors anywhere;
+    *  - `dv_columnar_cold` / `dv_columnar_warm`: the vectored files through
+    *    the columnar reader, with the sidecar cache emptied before each
+    *    pass (every pass decodes the sidecar once) or kept warm;
+    *  - `dv_row_cold` / `dv_row_warm`: the same through the row reader
+    *    (`option("columnar","false")`).
+    *
+    * Every pass's result is checked against the expected live rows. */
+  private def dvscan(spark: org.apache.spark.sql.SparkSession,
+      dir: java.nio.file.Path): Unit = {
+    import org.apache.spark.sql.functions._
+    import graft.sources.DvSidecar
+    import graft.storage.{CowTable, TableConfig}
+    import spark.implicits._
+    val n = 1000000L
+    val files = 32
+    CowTable.deleteRecursively(dir)
+    val root = dir.resolve("t").toString
+    val t = CowTable(spark, root, TableConfig("t", Seq("id"),
+      clusterByKey = true, changeDataFeed = true, deletionVectors = true))
+    t.create(spark.range(0, n, 1, files).select(
+      $"id",
+      concat(lpad($"id".cast("string"), 12, "0"), lit("-"),
+        md5(concat($"id".cast("string"), lit("-pay")))).as("payload"),
+      ($"id" % 997 * 1.5).as("v")))
+
+    def wideAgg(columnar: Boolean): (Long, Long) = {
+      val r = spark.read.format("graft")
+        .option("columnar", columnar.toString).load(root)
+        .agg(sum(length($"payload")), count(lit(1))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    def timed(name: String, expect: (Long, Long), cold: Boolean,
+        columnar: Boolean): Unit = {
+      wideAgg(columnar) // warm-up: classes, plan caches, page cache
+      val secs = (1 to 5).map { _ =>
+        if (cold) DvSidecar.clear()
+        val t0 = System.nanoTime()
+        val got = wideAgg(columnar)
+        val s = (System.nanoTime() - t0) / 1e9
+        require(got == expect, s"$name: got $got, expected $expect")
+        s
+      }.sorted
+      println(f"DVSCAN $name%-18s k=5 median=${secs(2)}%.3f " +
+        f"min=${secs.head}%.3f max=${secs.last}%.3f s")
+    }
+
+    val clean = wideAgg(columnar = true)
+    require(clean._2 == n, s"fixture holds ${clean._2} rows, not $n")
+    timed("clean_columnar", clean, cold = false, columnar = true)
+
+    t.delete((0L until n by 997L).toDF("id"))
+    val m = t.manifest(t.currentVersion)
+    require(m.files.size == files && m.files.forall(_.dvPath.isDefined) &&
+      m.files.flatMap(_.dvPath).distinct.size == 1,
+      "every file must point at the one sidecar")
+    val live = (m.rowCount, n - (n + 996) / 997)
+    require(live._1 == live._2, s"live rows ${live._1}, expected ${live._2}")
+    val expect = wideAgg(columnar = false)
+    require(expect._2 == live._2 && wideAgg(columnar = true) == expect)
+    DvSidecar.clear()
+    wideAgg(columnar = true)
+    println(s"DVSCAN files=$files rows=$n deleted=${n - live._2} " +
+      s"sidecar decodes per cold scan=${DvSidecar.decodes}")
+    timed("dv_columnar_cold", expect, cold = true, columnar = true)
+    timed("dv_columnar_warm", expect, cold = false, columnar = true)
+    timed("dv_row_cold", expect, cold = true, columnar = false)
+    timed("dv_row_warm", expect, cold = false, columnar = false)
   }
 
   private val ExecutorThread = "Executor task launch worker"

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -73,54 +75,39 @@ final class GraftColumnarPartitionReader(
     }.toArray[Any])
 
   private val reader: VectorizedParquetRecordReader = {
-    val conf = new Configuration()
-    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, dataSchema.json)
-    conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
-      classOf[ParquetReadSupport].getName)
-    // schema-converter flags the vectorized reader resolves from the conf
-    // (Spark's own scan exec copies these from the session; an executor-side
-    // connector reader must set them explicitly)
-    conf.set(SQLConf.PARQUET_BINARY_AS_STRING.key, "false")
-    conf.set(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, "true")
-    conf.set(SQLConf.CASE_SENSITIVE.key, "false")
-    conf.set(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, "true")
-    conf.set(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, "false")
+    val conf = BaseConf.copy()
+    GraftColumnarPartitionReader.setReadKeys(conf, dataSchema)
+    val path = new org.apache.hadoop.fs.Path(filePath)
+    val size = java.nio.file.Files.size(java.nio.file.Paths.get(filePath))
     // ROW-GROUP skipping: convert the pushed filters against THIS file's
-    // footer schema (one cheap metadata read; declines on any per-file
-    // type mismatch, e.g. a pre-widening INT32 column under a BIGINT
-    // predicate) and hand parquet the stats-only predicate — whole row
-    // groups a selective clustered predicate can't reach are never
-    // decoded. The base reader picks it up via ParquetInputFormat.
-    // Size-gated: a small file is one small row group, where decode costs
-    // less than the extra footer roundtrip — engage only where whole-group
-    // (or whole-file, via footer stats on columns the MANIFEST doesn't
-    // stat) skipping can actually pay.
-    if (filters.nonEmpty &&
-        java.nio.file.Files.size(
-          java.nio.file.Paths.get(filePath)) >= rowGroupFilterMinBytes) {
-      val fileSchema = {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(filePath), conf))
-        try r.getFooter.getFileMetaData.getSchema finally r.close()
+    // footer schema (declines on any per-file type mismatch, e.g. a
+    // pre-widening INT32 column under a BIGINT predicate) and hand parquet
+    // the stats-only predicate — whole row groups a selective clustered
+    // predicate can't reach are never decoded. The base reader picks it up
+    // via ParquetInputFormat, and gets the footer read here, so the file's
+    // footer is read once either way. Size-gated: a small file is one
+    // small row group, where decode costs less than planning the skip —
+    // engage only where whole-group (or whole-file, via footer stats on
+    // columns the MANIFEST doesn't stat) skipping can actually pay.
+    val opened =
+      if (filters.isEmpty || size < rowGroupFilterMinBytes) None
+      else {
+        val file = HadoopInputFile.fromPath(path, conf)
+        val footer = GraftColumnarPartitionReader.readFooter(file)
+        ParquetRowGroupFilter.predicateFor(
+          footer.getFileMetaData.getSchema, filters, nameMapping)
+          .foreach(p => org.apache.parquet.hadoop.ParquetInputFormat
+            .setFilterPredicate(conf, p))
+        Some((file, footer))
       }
-      ParquetRowGroupFilter.predicateFor(fileSchema, filters, nameMapping)
-        .foreach(p => org.apache.parquet.hadoop.ParquetInputFormat
-          .setFilterPredicate(conf, p))
-    }
     // CORRECTED = no calendar rebase: every graft-readable file is written by
     // Spark 3+/parquet-hadoop with proleptic-Gregorian semantics (the same
     // assumption the row-oriented reader makes)
     val r = new VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, capacity)
-    // the mapred FileSplit (which extends the mapreduce one) — Spark's base
-    // reader casts to it
-    val split = new org.apache.hadoop.mapred.FileSplit(
-      new org.apache.hadoop.fs.Path(filePath), 0,
-      java.nio.file.Files.size(java.nio.file.Paths.get(filePath)),
-      Array.empty[String])
     try {
-      r.initialize(split, new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+      GraftColumnarPartitionReader.initialize(r, path, 0, size,
+        new TaskAttemptContextImpl(conf, new TaskAttemptID()), opened)
       r.initBatch(constSchema, constRow)
       r.enableReturningBatches()
     } catch { case t: Throwable => r.close(); throw t }
@@ -190,17 +177,18 @@ final class GraftAugmentedColumnarReader(
   import org.apache.spark.sql.vectorized.ColumnVector
   import scala.jdk.CollectionConverters._
 
-  private val hPath = new org.apache.hadoop.fs.Path(filePath)
-
-  private val (fileSchema: org.apache.parquet.schema.MessageType,
-      blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData]) = {
-    val conf0 = new Configuration()
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hPath, conf0))
-    try (r.getFooter.getFileMetaData.getSchema,
-      r.getFooter.getBlocks.asScala.toSeq)
-    finally r.close()
-  }
+  /** The conf is complete once the data schema is known (below); the
+    * file handle only needs it for the file system. */
+  private val conf = BaseConf.copy()
+  private val file = HadoopInputFile.fromPath(
+    new org.apache.hadoop.fs.Path(filePath), conf)
+  /** The one footer read: schema and blocks for run planning, and each
+    * run's reader gets its blocks from it instead of re-reading. */
+  private val footer: ParquetMetadata =
+    GraftColumnarPartitionReader.readFooter(file)
+  private val fileSchema = footer.getFileMetaData.getSchema
+  private val blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData] =
+    footer.getBlocks.asScala.toSeq
   private val inFile: Set[String] =
     fileSchema.getFields.asScala.map(_.getName).toSet
 
@@ -253,21 +241,10 @@ final class GraftAugmentedColumnarReader(
         partitionValues(f.name), f.dataType)
     }.toArray[Any])
 
-  private val conf = {
-    val c = new Configuration()
-    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, dataSchema.json)
-    c.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
-      classOf[ParquetReadSupport].getName)
-    c.set(SQLConf.PARQUET_BINARY_AS_STRING.key, "false")
-    c.set(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, "true")
-    c.set(SQLConf.CASE_SENSITIVE.key, "false")
-    c.set(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, "true")
-    c.set(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, "false")
-    c
-  }
+  GraftColumnarPartitionReader.setReadKeys(conf, dataSchema)
+  private val taskContext = new TaskAttemptContextImpl(conf, new TaskAttemptID())
 
-  private val fileSize: Long =
-    java.nio.file.Files.size(java.nio.file.Paths.get(filePath))
+  private val fileSize: Long = file.getLength
 
   /** Row-group runs to read: position-exact skipping when the pushed
     * filters convert (NEVER via the conf predicate — the inner reader
@@ -280,15 +257,8 @@ final class GraftAugmentedColumnarReader(
     else None).getOrElse(Vector((0L, 0L, fileSize)))
 
   /** Deleted positions for THIS file, sorted for range slicing. */
-  private val deleted: Array[Long] = dv.fold(Array.empty[Long]) {
-    case (dirAbs, rel) =>
-      val hs = DvSidecar.positions(dirAbs, rel)
-      val a = new Array[Long](hs.size)
-      var i = 0
-      val it = hs.iterator()
-      while (it.hasNext) { a(i) = it.next(); i += 1 }
-      java.util.Arrays.sort(a)
-      a
+  private val deleted: Array[Long] = dv.fold(Array.emptyLongArray) {
+    case (dirAbs, rel) => DvSidecar.positions(dirAbs, rel)
   }
 
   private var runIdx = -1
@@ -318,10 +288,14 @@ final class GraftAugmentedColumnarReader(
     val (startRow, lo, hi) = allRuns(i)
     val r = new VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, capacity)
-    val split = new org.apache.hadoop.mapred.FileSplit(
-      hPath, lo, hi - lo, Array.empty[String])
+    // the run's blocks, selected by start offset: a run is a contiguous
+    // block range [first start, last start + last size)
+    val runFooter = new ParquetMetadata(footer.getFileMetaData,
+      blocks.filter(b => b.getStartingPos >= lo && b.getStartingPos < hi)
+        .asJava)
     try {
-      r.initialize(split, new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+      GraftColumnarPartitionReader.initialize(r, file.getPath, lo, hi - lo,
+        taskContext, Some((file, runFooter)))
       r.initBatch(constSchema, constRow)
       r.enableReturningBatches()
     } catch { case t: Throwable => r.close(); throw t }
@@ -533,6 +507,48 @@ final class GraftAugmentedColumnarReader(
 }
 
 object GraftColumnarPartitionReader {
+  /** Sets the keys Spark's vectorized reader resolves from its conf: the
+    * requested schema and the schema-converter flags (Spark's own scan
+    * exec copies these from the session; an executor-side connector reader
+    * must set them explicitly). */
+  private[sources] def setReadKeys(c: Configuration,
+      dataSchema: StructType): Unit = {
+    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, dataSchema.json)
+    c.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    c.set(SQLConf.PARQUET_BINARY_AS_STRING.key, "false")
+    c.set(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, "true")
+    c.set(SQLConf.CASE_SENSITIVE.key, "false")
+    c.set(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, "true")
+    c.set(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, "false")
+  }
+
+  /** The whole footer, every row group included. */
+  private[sources] def readFooter(file: HadoopInputFile): ParquetMetadata = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(file)
+    try r.getFooter finally r.close()
+  }
+
+  /** Opens `r` over the byte range [start, start + length) of `path`.
+    * With an opened file and a footer holding exactly the range's row
+    * groups, the reader uses that footer instead of reading it again. The
+    * mapred FileSplit (which extends the mapreduce one) is what Spark's
+    * base reader casts to. */
+  private[sources] def initialize(r: VectorizedParquetRecordReader,
+      path: org.apache.hadoop.fs.Path, start: Long, length: Long,
+      ctx: TaskAttemptContextImpl,
+      opened: Option[(HadoopInputFile, ParquetMetadata)]): Unit = {
+    val split = new org.apache.hadoop.mapred.FileSplit(
+      path, start, length, Array.empty[String])
+    opened match {
+      case Some((file, footer)) =>
+        val in = file.newStream()
+        try r.initialize(split, ctx, Some(file), Some(in), Some(footer))
+        catch { case t: Throwable => in.close(); throw t }
+      case None => r.initialize(split, ctx)
+    }
+  }
+
   /** Hive partition segment value → Catalyst constant of the declared type
     * (shared with the row-oriented reader — the manifest schema re-types what
     * the path stores as text). */

@@ -55,7 +55,7 @@ final class GraftPartitionReader(
     rowGroupFilterMinBytes: Long = 4L << 20)
   extends org.apache.spark.sql.connector.read.PartitionReader[InternalRow] {
 
-  private val conf = new Configuration()
+  private val conf = BaseConf.copy()
   private val hPath = new org.apache.hadoop.fs.Path(filePath)
 
   // file schema + row-group metadata from the footer (cheap: footer only),
@@ -179,10 +179,16 @@ final class GraftPartitionReader(
     }
 
   private var current: Group = _
-  private val deleted: java.util.HashSet[java.lang.Long] =
-    dv.fold(new java.util.HashSet[java.lang.Long]()) { case (dirAbs, rel) =>
-      DvSidecar.positions(dirAbs, rel)
-    }
+  /** Deleted positions, sorted; `delIdx` only moves forward because
+    * `rowPos` does. */
+  private val deleted: Array[Long] = dv.fold(Array.emptyLongArray) {
+    case (dirAbs, rel) => DvSidecar.positions(dirAbs, rel)
+  }
+  private var delIdx = 0
+  private def isDeleted(p: Long): Boolean = {
+    while (delIdx < deleted.length && deleted(delIdx) < p) delIdx += 1
+    delIdx < deleted.length && deleted(delIdx) == p
+  }
   private var rowPos: Long = groupRuns match {
     case Some(rs) if rs.nonEmpty => rs(0)._1 - 1
     case _ => -1L
@@ -209,7 +215,7 @@ final class GraftPartitionReader(
 
   override def next(): Boolean = {
     current = readNext()
-    while (current != null && deleted.contains(rowPos)) current = readNext()
+    while (current != null && isDeleted(rowPos)) current = readNext()
     current != null
   }
 
@@ -278,36 +284,6 @@ final class GraftPartitionReader(
     }
   }
 
-}
-
-/** Executor-side loader for deletion-vector sidecars: a sidecar dir holds
-  * parquet (path, pos) rows for ALL files its commit touched; a reader
-  * wants only ITS file's positions. Sidecars are O(deleted rows) and
-  * transient (cleared by the next rewrite), so a per-reader scan of the
-  * dir is bounded and local. */
-object DvSidecar {
-  def positions(dvDirAbs: String,
-      relPath: String): java.util.HashSet[java.lang.Long] = {
-    val out = new java.util.HashSet[java.lang.Long]()
-    val dir = java.nio.file.Paths.get(dvDirAbs)
-    if (!java.nio.file.Files.isDirectory(dir)) return out
-    val parts = scala.util.Using.resource(java.nio.file.Files.list(dir))(
-      _.iterator().asScala.toSeq)
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-    parts.foreach { p =>
-      val reader = ParquetReader.builder(new GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(p.toString)).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          if (g.getString("path", 0) == relPath)
-            out.add(g.getLong("pos", 0))
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
-    out
-  }
 }
 
 /** Serialized per-scan backfill recipe for the GENERATED partition column

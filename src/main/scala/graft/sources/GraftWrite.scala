@@ -5,7 +5,6 @@ import java.nio.file.{Files, Path, Paths}
 import scala.util.Try
 
 import graft.storage.{CowTable, TableConfig}
-import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetWriter
@@ -708,7 +707,7 @@ final class GraftDataWriter(
     writer = ExampleParquetWriter
       .builder(new org.apache.hadoop.fs.Path(abs.toString))
       .withType(messageType)
-      .withConf(new Configuration())
+      .withConf(BaseConf.copy())
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
     rows = 0L

@@ -2534,7 +2534,20 @@ final class CowTable private[storage] (
     // other columns.
     CowTable.prefillSegSchema(verDir.toString, StructType(physDf.schema
       .fields.filterNot(f => config.partitionKey.contains(f.name))))
-    val fresh0 = statFiles(verDir, schema, mapping)
+    // Spark's writer always writes a file for the frame's first partition,
+    // so an empty first partition leaves a 0-row file: drop it from a write
+    // that made rows (an all-empty write keeps its entries)
+    val fresh0 = statFiles(verDir, schema, mapping) match {
+      case es if es.exists(_.rows > 0) =>
+        val (kept, empty) = es.partition(_.rows > 0)
+        empty.foreach { e =>
+          val f = root.resolve(e.path)
+          Files.deleteIfExists(f)
+          Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+        }
+        kept
+      case es => es
+    }
     (fileTag.fold(fresh0)(t => fresh0.map(_.copy(zorderBy = Some(t)))),
       schema, (mapping, usedPhys))
   }
@@ -3283,10 +3296,12 @@ final class CowTable private[storage] (
       cols: Seq[(String, Boolean, Option[DataType])],
       extras: Seq[(String, Boolean, Option[DataType])] = Nil): FileEntry = {
     import scala.jdk.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
+    // local parquet I/O, as ManifestCheckpoint reads: no Hadoop
+    // Configuration to build and no file system lookup per footer
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file.toUri), conf))
+      new org.apache.parquet.io.LocalInputFile(file),
+      org.apache.parquet.ParquetReadOptions.builder(
+        new org.apache.parquet.conf.PlainParquetConfiguration()).build())
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum

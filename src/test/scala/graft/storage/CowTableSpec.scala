@@ -1,5 +1,7 @@
 package graft.storage
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -1055,5 +1057,35 @@ class CowTableSpec extends SparkSpec {
     // the in-file stats column still got its sketch
     assert(t.manifest(v1).files.filter(_.rows > 0)
       .forall(_.ndv.contains("v")))
+  }
+
+  test("a write whose first partition is empty commits no 0-row file") {
+    val (t, dir) = freshTable()
+    // three slices of ten ids; the filter empties the first one, which
+    // Spark's writer still turns into a (0-row) file
+    val df = spark.range(0, 30, 1, 3).filter(col("id") >= 10)
+      .select(col("id"), concat(lit("n"), col("id")).as("name"))
+    assert(df.rdd.getNumPartitions == 3)
+    t.create(df)
+    val m = t.manifest(1)
+    assert(m.files.size == 2 && m.files.forall(_.rows > 0), m.files)
+    assert(m.rowCount == 20 && t.read().count() == 20)
+    // the dropped file is gone from disk too: no data file the manifest
+    // does not list
+    val onDisk = scala.util.Using.resource(
+      java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "t"))) {
+      _.iterator().asScala.map(_.toString)
+        .filter(_.endsWith(".parquet")).filterNot(_.contains("_manifests"))
+        .toSet
+    }
+    assert(onDisk == m.files.map(e => t.root.resolve(e.path).toString).toSet)
+
+    // an all-empty write keeps its (0-row) entry as before
+    val (e, _) = freshTable()
+    e.create(spark.range(0, 30, 1, 3).filter(col("id") < 0)
+      .select(col("id"), concat(lit("n"), col("id")).as("name")))
+    assert(e.manifest(1).rowCount == 0 && e.read().count() == 0)
+    assert(e.manifest(1).files.nonEmpty &&
+      e.manifest(1).files.forall(_.rows == 0))
   }
 }
